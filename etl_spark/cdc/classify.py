@@ -25,7 +25,7 @@ bound at 10^10-event scale, so a hard broadcast hint would OOM the
 driver long before merge's ``broadcast_key_budget`` guard ever runs.
 A plain equi-join lets AQE broadcast automatically when the side is
 actually small and fall back to a shuffle join when it is not — the
-same auto-degrade policy ``merge_batch`` implements explicitly.
+same auto-degrade policy ``merge.batch_winners`` implements explicitly.
 """
 
 from __future__ import annotations

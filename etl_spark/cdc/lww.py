@@ -102,9 +102,10 @@ def lww_winners_broadcast(
     and shuffled never.
 
     Requires the winner set (distinct keys x ~60 B) to fit the driver's
-    broadcast budget — true for any sane micro-batch; ``merge_batch``
-    falls back to ``lww_winners`` (hash-agg) automatically above its
-    ``broadcast_key_budget``, and the read/compaction path
+    broadcast budget — true for any sane micro-batch. The replay's own
+    winner choice (``merge.batch_winners``) broadcasts winner offsets
+    under the engine's ``broadcast_key_budget`` and falls back to
+    ``lww_winners`` (hash-agg) above it, and the read/compaction path
     (``resolve_state``) never uses this strategy by default because its
     winner set grows with the table.
 

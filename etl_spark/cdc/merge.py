@@ -1,36 +1,40 @@
-"""CDC MERGE: apply one LWW-resolved micro-batch to the lake table.
+"""CDC merge plans: the per-batch LWW plans the replay loop writes.
 
-Algorithm (set-based, union + one window — no join needed because the
-existing rows carry their own (commit, _ingest_offset) order):
+``ReplayEngine``'s one loop (``etl_spark/cdc/replay.py``) asks this
+module for a batch's PLAN and then runs the mode's write/commit pair
+itself. Each mode's plan:
 
-1. bucket-prune: read ONLY the buckets the batch touches (copy-on-write),
-2. union existing rows (tagged with their stored order) with the batch's
-   events (I/U rows carry content; D rows are tombstones),
-3. one LWW window over the union picks the globally-latest version per
-   key — a late-arriving event older than the stored row loses, exactly
-   as ``MERGE ... WHEN MATCHED AND s.order > t.order`` would decide,
-4. winners that are tombstones stay as ``_deleted`` rows (reads filter
-   them; their order must outlive the commit so out-of-order stragglers
-   can't resurrect a deleted key — conditional delete semantics are the
-   delete_guard, reference analog ``src/sd_delta.py:57-72``),
-5. rewrite the touched buckets + commit atomically with the fence
-   properties (exactly-once; reference analog: skip-if-already-applied,
-   ``src/byggesager/byggesager.py:191-197``).
+- merge-on-read (``plan_mor_batch``): the batch's LWW winners, deletes
+  as ``_deleted`` tombstones, appended as delta files — nothing is read
+  from the table; readers resolve base+delta with the same LWW rule
+  (``resolve_state``) and compaction folds deltas back down.
+- copy-on-write (``cow_batch_stats`` then ``cow_batch_survivors``): the
+  thin per-key stats name the touched buckets; the survivors union the
+  stored rows of ONLY those buckets (tagged with their stored
+  ``(commit, _ingest_offset)`` order) with the batch's winners, and one
+  LWW aggregation picks the globally-latest version per key — a
+  late-arriving event older than the stored row loses, exactly as
+  ``MERGE ... WHEN MATCHED AND s.order > t.order`` would decide. No
+  join is needed because stored rows carry their own order.
 
-The union+window plan shuffles once on the key hash — the same hash the
-bucket layout uses, so at scale the exchange is aligned with the data
-being rewritten. Hot-repo skew is handled three ways: the agg kernels'
-map-side partial aggregation collapses a hot key per input partition
-before the shuffle, ``lww_strategy='salted'`` pre-splits each key into
-``SALT_PARTITIONS`` explicit partial groups (for payloads too wide for
-map-side combine to absorb), and AQE skew-join splitting is enabled
-session-wide (``etl_spark.session``).
+Winning tombstones stay as ``_deleted`` rows in both modes (reads filter
+them; their order must outlive the commit so out-of-order stragglers
+can't resurrect a deleted key — conditional delete semantics are the
+delete_guard, reference analog ``src/sd_delta.py:57-72``). The loop
+commits each batch atomically with its fence properties (exactly-once;
+reference analog: skip-if-already-applied,
+``src/byggesager/byggesager.py:191-197``).
+
+The winner kernel is chosen once, by ``batch_winners``, from a key
+upper bound. The agg kernels' map-side partial aggregation collapses a
+hot key per input partition before the shuffle,
+``lww_strategy='salted'`` pre-splits each key into ``SALT_PARTITIONS``
+explicit partial groups (for payloads too wide for map-side combine to
+absorb), and AQE skew-join splitting is enabled session-wide
+(``etl_spark.session``).
 """
 
 from __future__ import annotations
-
-import threading
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +50,7 @@ LINEAGE_COLS = ["_ingest_offset", "_ingest_batch"]
 # automatically degrades to the hash aggregation instead of OOMing the
 # driver: the winner-offset broadcast is ~8 B/key plus hashed-relation
 # overhead, so 20M keys ~ hundreds of MB — near the default 8g driver's
-# comfortable limit. Tunable per merge_batch call.
+# comfortable limit. Tunable per engine (``broadcast_key_budget``).
 BROADCAST_KEY_BUDGET = 20_000_000
 
 # lww_strategy='salted': explicit two-stage pre-split — each key is
@@ -172,6 +176,51 @@ def _schema_projection(winners: DataFrame, snap: Snapshot, batch_id: int) -> Dat
     )
 
 
+def batch_winners(
+    batch_events: DataFrame,
+    maxes: DataFrame,
+    keys: list[str],
+    lww_strategy: str,
+    broadcast_key_budget: int,
+    keys_upper_bound: int | None,
+) -> tuple[DataFrame, str]:
+    """One LWW winner per key of a batch, and the kernel's name
+    (``lww_path``: ``broadcast``, ``agg``, ``agg-fallback`` or
+    ``agg-salted``). ``maxes`` is the batch's thin aggregate
+    (``_thin_maxes``).
+
+    ``keys_upper_bound`` proves the winner broadcast fits the budget
+    without a gating job: mor passes its events bound (distinct keys <=
+    events, known arithmetically from the batch's offset range), cow
+    the exact key count its stats job measured. Over budget or unknown,
+    the broadcast strategy degrades to the hash aggregation instead of
+    OOMing the driver (``agg-fallback``).
+
+    The broadcast side is the winning OFFSET alone: WAL offsets are
+    globally unique and the fence keeps re-deliveries out of the batch,
+    so one long per key (~8 B/row, a LongHashedRelation built inside the
+    consuming job's own broadcast stage) identifies the winning event —
+    a malformed double-delivered batch would yield duplicate winners,
+    which ``resolve_state``'s max_by collapses on read. The hash-agg
+    kernel is max_by over full rows, map-side combined so a hot repo
+    collapses before the shuffle; 'salted' adds an explicit (key, salt)
+    pre-combine stage for payloads too wide for map-side combine."""
+    if (
+        lww_strategy == "broadcast"
+        and keys_upper_bound is not None
+        and keys_upper_bound <= broadcast_key_budget
+    ):
+        winner_offsets = maxes.select(F.col("__ord.offset").alias("__w_offset"))
+        winners = batch_events.join(
+            F.broadcast(winner_offsets), on=F.col("offset") == F.col("__w_offset")
+        ).select(*batch_events.columns)
+        return winners, "broadcast"
+    if lww_strategy == "salted":
+        return lww_winners(batch_events, key_columns=keys, salt=SALT_PARTITIONS), "agg-salted"
+    winners = lww_winners(batch_events, key_columns=keys)
+    return winners, "agg-fallback" if lww_strategy == "broadcast" else "agg"
+
+
 def plan_mor_batch(
     snap: Snapshot,
     keys: list[str],
@@ -188,49 +237,19 @@ def plan_mor_batch(
     deletes as ``_deleted`` tombstones) and the independent thin
     stats/lineage rollup the caller collects concurrently.
 
-    Winner kernel choice needs no gating job: distinct keys <= events,
-    so ``events_upper_bound`` (known arithmetically from the batch's
-    offset range) under the broadcast budget proves the winner-offset
-    broadcast is safe; over budget or unknown, the fused map-side-
-    combined hash aggregation resolves winners with no key count at all
-    — its exchange doubles as the bucket write exchange when
+    Nothing in the mor write needs the stats: the bucket set falls out
+    of the append itself, and the winner kernel is chosen from
+    ``events_upper_bound``. Under the hash-agg kernels, the winners
+    exchange doubles as the bucket write exchange when
     shuffle.partitions == num_buckets."""
     if delete_guard is not None:
         batch_events = _demote_guarded(batch_events, keys, delete_guard)
     maxes_plan = _thin_maxes(batch_events, keys)
     per_bucket_plan = _bucket_rollup(maxes_plan, keys, snap.num_buckets)
-
-    broadcast_safe = (
-        lww_strategy == "broadcast"
-        and events_upper_bound is not None
-        and events_upper_bound <= broadcast_key_budget
+    winners, lww_path = batch_winners(
+        batch_events, maxes_plan, keys, lww_strategy, broadcast_key_budget,
+        events_upper_bound,
     )
-    salt = SALT_PARTITIONS if lww_strategy == "salted" else None
-    if broadcast_safe:
-        # the winning OFFSET alone identifies the winning event (WAL
-        # offsets are globally unique; the fence keeps re-deliveries out
-        # of the batch; a malformed double-delivered batch would append
-        # duplicate winners — harmless, because resolve_state's max_by
-        # collapses exact duplicates on read), so the broadcast is one
-        # long per key — ~8 B/row, a LongHashedRelation built inside the
-        # write job's own broadcast stage (no separate gating job)
-        lww_path = "broadcast-async"
-        winner_offsets = maxes_plan.select(F.col("__ord.offset").alias("__w_offset"))
-        winners = batch_events.join(
-            F.broadcast(winner_offsets), on=F.col("offset") == F.col("__w_offset")
-        ).select(*batch_events.columns)
-    else:
-        # FUSED hash-agg kernel: max_by over full rows — map-side
-        # combined, so a hot repo collapses before the shuffle — feeds
-        # the bucket write directly; safe at any batch size. 'salted'
-        # adds an explicit (key, salt) pre-combine stage for payloads
-        # too wide for map-side combine to absorb.
-        if lww_strategy == "salted":
-            lww_path = "agg-salted"
-        else:
-            lww_path = "agg-fused" if lww_strategy != "broadcast" else "agg-fallback"
-        winners = lww_winners(batch_events, key_columns=keys, salt=salt)
-
     source = _schema_projection(winners, snap, batch_id)
     delta = source.withColumn("_deleted", F.col("__op") == "D").drop("__op")
     return delta, per_bucket_plan, lww_path
@@ -255,197 +274,6 @@ def _bucket_counters(per_bucket: list) -> list[dict]:
     ]
 
 
-def merge_batch(
-    table: ManifestTable,
-    batch_events: DataFrame,
-    batch_id: int,
-    properties_update: dict,
-    mode: str = "cow",
-    lww_strategy: str = "broadcast",
-    delete_guard: DataFrame | None = None,
-    broadcast_key_budget: int = BROADCAST_KEY_BUDGET,
-    events_upper_bound: int | None = None,
-    tombstone_commit_watermark: str | None = None,
-) -> tuple[Snapshot, dict]:
-    """Apply one micro-batch of change events. Returns (snapshot, counters).
-
-    ``batch_events``: CHANGE_LOG_SCHEMA rows (may contain multiple events
-    per key, out-of-order commits — the LWW window resolves them here).
-
-    ``mode``:
-    - ``cow`` (copy-on-write): read + rewrite the touched buckets; reads
-      stay resolution-free. Right when batches touch few buckets.
-    - ``mor`` (merge-on-read): append the batch's LWW winners (deletes as
-      ``_deleted`` tombstones) as delta files — O(batch) write cost even
-      when a hot repo touches every bucket; readers resolve via the same
-      LWW rule (see ``resolve_state``), compaction folds deltas back
-      down. The 10^10-events/hot-skew scale path.
-
-    ``delete_guard``: optional DataFrame of key columns naming rows that
-    must NOT be deleted this batch (reference C3 conditional delete —
-    ``src/sd_delta.py:57-72`` deletes an employment only if the person
-    is confirmed gone AND nothing depends on it). A guarded D event is
-    demoted to a no-op: the key's stored row survives untouched.
-
-    ``events_upper_bound``: a cheap upper bound on this batch's event
-    count (the replay loop knows it arithmetically from the batch's
-    offset range — no job). Under mor it replaces the gating stats job
-    for the broadcast-budget decision: distinct keys <= events, so a
-    bound under the budget proves the winner broadcast is safe and the
-    per-bucket stats/lineage aggregation moves OFF the critical path
-    onto a concurrent thread (the stats pre-job measured ~1 s of SERIAL
-    per-batch cost at 8 cores — the dominant term in N->4N scaling
-    efficiency). Without a bound (None), mor conservatively uses the
-    fused hash-agg kernel, which needs no key count at all.
-
-    ``tombstone_commit_watermark``: the ingest's disorder bound (no
-    future event may carry a commit strictly below it). Under cow it
-    ages out stored tombstones during the bucket rewrite that is
-    happening anyway — cow buckets never accumulate delta files, so
-    compaction's watermark path is unreachable for them and this is
-    the only place cow tombstone storage gets bounded. Under mor the
-    same watermark is applied by ``ReplayEngine.compact``.
-    """
-    t_start = time.monotonic()
-    snap = table.current_snapshot()
-    keys = table.key_columns
-
-    if mode == "mor":
-        # Stats/lineage move OFF the critical path: an independent tiny
-        # job on a second thread overlaps the write instead of gating
-        # it. Nothing in the mor write needs the stats: the bucket set
-        # falls out of the append itself, and the broadcast-budget
-        # decision uses events_upper_bound (keys <= events).
-        t_snap = time.monotonic()
-        delta, per_bucket_plan, lww_path = plan_mor_batch(
-            snap, keys, batch_events, batch_id,
-            lww_strategy=lww_strategy,
-            broadcast_key_budget=broadcast_key_budget,
-            events_upper_bound=events_upper_bound,
-            delete_guard=delete_guard,
-        )
-        stats_holder: dict = {}
-
-        def _collect_stats() -> None:
-            try:
-                stats_holder["rows"] = per_bucket_plan.collect()
-            except BaseException as e:  # re-raised on join below
-                stats_holder["err"] = e
-
-        # write winners as deltas (deletes ride along as tombstones);
-        # nothing is read, nothing is rewritten — one bucket-aligned
-        # shuffle + write per batch. The normalize+sha256 pandas_udf runs
-        # as the writer's post_shuffle hook: AFTER the bucket exchange,
-        # at full write parallelism. Write and commit are split so the
-        # stats job is consumed BEFORE the commit: a stats failure after
-        # the commit would leave the batch durably applied with its
-        # metrics/lineage rows permanently missing (resume skips applied
-        # batches) — failing before the commit makes resume recompute.
-        #
-        # fused path: make the winners agg's exchange BE the bucket
-        # exchange — with shuffle.partitions == num_buckets the explicit
-        # repartition in the writer is redundant and eliminated, so
-        # content is shuffled once. Session conf is per-session shared
-        # state, so the override brackets the ENTIRE batch — set before
-        # the stats thread starts, restored only after it joins — making
-        # every plan built inside the batch (write AND concurrent stats)
-        # see one constant value instead of racing a mid-batch restore.
-        # Cross-session exposure is the documented single-logical-writer
-        # assumption; pass the engine a dedicated spark.newSession() to
-        # isolate it from other workloads sharing the context.
-        sess = batch_events.sparkSession
-        old_sp = sess.conf.get("spark.sql.shuffle.partitions")
-        sess.conf.set("spark.sql.shuffle.partitions", str(snap.num_buckets))
-        stats_thread = threading.Thread(target=_collect_stats, daemon=True)
-        stats_started = False
-        try:
-            # start() inside the bracket's try: if it raises (thread
-            # exhaustion), the finally must still restore the conf —
-            # start() sits after the conf override, so leaving it outside
-            # would pin shuffle.partitions for the session lifetime.
-            stats_thread.start()
-            stats_started = True
-            t_planned = time.monotonic()
-            written = table.write_delta_files(
-                delta, snap, post_shuffle=with_content_sha256
-            )
-            t_written = time.monotonic()
-        finally:
-            # join BEFORE restoring the conf, on every exit path: if the
-            # write raises, the stats thread may still be building plans —
-            # restoring mid-flight is exactly the mid-batch-restore race
-            # the whole-batch bracket exists to eliminate (and a live
-            # thread would leak into the next batch on engines that catch
-            # and continue). The stats job is a bounded metadata collect,
-            # so an untimed join is safe. (join() on a never-started
-            # thread raises, hence the flag.)
-            if stats_started:
-                stats_thread.join()
-            sess.conf.set("spark.sql.shuffle.partitions", old_sp)
-        if "err" in stats_holder:
-            raise stats_holder["err"]
-        per_bucket = stats_holder["rows"]
-        stats = _stats_from_rows(per_bucket)
-        t_joined = time.monotonic()
-        new_snap = table.commit_appended(
-            written, snap.current_schema_version, properties_update
-        )
-        t_committed = time.monotonic()
-        counters = {
-            "rows_in": stats["events"], "distinct_keys": stats["keys"],
-            "upserts": stats["ups"], "deletes": stats["dels"],
-            "lww_path": lww_path,
-            # phase breakdown for serial-overhead profiling: "snapshot" =
-            # manifest read, "plan" = driver-side frame construction,
-            # "write" = winner resolve + bucket exchange + UDF + parquet,
-            # "stats_wait" = residual wait on the concurrent stats job,
-            # "commit" = atomic snapshot publish
-            "timings_ms": {
-                "snapshot": int((t_snap - t_start) * 1000),
-                "plan": int((t_planned - t_snap) * 1000),
-                "write": int((t_written - t_planned) * 1000),
-                "stats_wait": int((t_joined - t_written) * 1000),
-                "commit": int((t_committed - t_joined) * 1000),
-            },
-            "per_bucket": _bucket_counters(per_bucket),
-        }
-        return new_snap, counters
-
-    # ---------------- cow: stats gate the touched-bucket read ----------------
-    t_plan = time.monotonic()
-    batch_events, maxes, per_bucket, stats = cow_batch_stats(
-        batch_events, keys, snap.num_buckets, delete_guard=delete_guard
-    )
-    try:
-        t_stats = time.monotonic()
-        touched, survivors = cow_batch_survivors(
-            table, snap, batch_events, maxes, stats, batch_id,
-            lww_strategy=lww_strategy,
-            broadcast_key_budget=broadcast_key_budget,
-            tombstone_commit_watermark=tombstone_commit_watermark,
-        )
-        new_snap = table.rewrite_buckets(touched, survivors, properties_update, basis=snap)
-    finally:
-        # release the cached thin maxes even when the rewrite or commit
-        # raises (e.g. CommitConflictError) — a long-running driver that
-        # catches per-batch errors must not leak cache blocks
-        maxes.unpersist()
-    t_written = time.monotonic()
-    counters = {
-        "rows_in": stats["events"], "distinct_keys": stats["keys"],
-        "upserts": stats["ups"], "deletes": stats["dels"],
-        "lww_path": stats["lww_path"],
-        "timings_ms": {
-            "plan": int((t_plan - t_start) * 1000),
-            "stats": int((t_stats - t_plan) * 1000),
-            "write": int((t_written - t_stats) * 1000),
-            "stats_wait": 0,
-        },
-        "per_bucket": _bucket_counters(per_bucket),
-    }
-    return new_snap, counters
-
-
 def cow_batch_stats(
     batch_events: DataFrame,
     keys: list[str],
@@ -454,9 +282,9 @@ def cow_batch_stats(
 ) -> tuple[DataFrame, DataFrame, list, dict]:
     """Stage 1 of the cow plan: guard demotion, thin per-key maxes
     (~60 B/distinct key), and the per-bucket rollup that names the
-    TOUCHED BUCKETS. Split out so the pipelined replay loop can learn a
-    batch's bucket set — and decide whether it may overlap the batches
-    already in flight — before any table state is read.
+    TOUCHED BUCKETS. Split out so the replay loop can learn a batch's
+    bucket set — and decide whether it may overlap the batches already
+    in flight — before any table state is read.
 
     Returns (guarded_events, maxes[cached], per_bucket_rows, stats)."""
     if delete_guard is not None:
@@ -477,35 +305,18 @@ def cow_batch_survivors(
     lww_strategy: str = "broadcast",
     broadcast_key_budget: int = BROADCAST_KEY_BUDGET,
     tombstone_commit_watermark: str | None = None,
-) -> tuple[list[int], DataFrame]:
+) -> tuple[DataFrame, str]:
     """Stage 2 of the cow plan: LWW winners, union with the touched
     buckets read from ``snap``, global resolve, tombstone aging.
-    Returns (touched_buckets, survivors) — the frame
-    ``rewrite_buckets`` (or ``write_rewrite_files``) consumes.
-    Mutates ``stats['lww_path']``."""
+    Returns ``(survivors, lww_path)`` — the frame
+    ``write_rewrite_files`` consumes, and the winner kernel's name."""
     keys = table.key_columns
-    if lww_strategy == "broadcast" and stats["keys"] <= broadcast_key_budget:
-        stats["lww_path"] = "broadcast"
-        winner_offsets = maxes.select(F.col("__ord.offset").alias("__w_offset"))
-        winners = batch_events.join(
-            F.broadcast(winner_offsets), on=F.col("offset") == F.col("__w_offset")
-        ).select(*batch_events.columns)
-    else:
-        # automatic degrade (docstring promise, VERDICT r01 #5): a batch
-        # with more distinct keys than the driver's broadcast budget
-        # falls back to the hash-agg winner kernel instead of OOMing the
-        # broadcast. The thin aggregate above still paid for
-        # stats/lineage either way. Winners resolve by the TABLE's key
-        # columns — a table keyed on other columns must not fall back to
-        # the module default.
-        if lww_strategy == "salted":
-            stats["lww_path"] = "agg-salted"
-        else:
-            stats["lww_path"] = "agg-fallback" if lww_strategy == "broadcast" else "agg"
-        winners = lww_winners(
-            batch_events, key_columns=keys,
-            salt=SALT_PARTITIONS if lww_strategy == "salted" else None,
-        )
+    # the winners resolve by the TABLE's key columns — a table keyed on
+    # other columns must not fall back to the module default
+    winners, lww_path = batch_winners(
+        batch_events, maxes, keys, lww_strategy, broadcast_key_budget,
+        stats["keys"],
+    )
     touched = sorted(stats["buckets"])
 
     # fingerprint new rows before the union (stored rows carry theirs)
@@ -538,4 +349,4 @@ def cow_batch_survivors(
         survivors = survivors.filter(
             (~F.col("_deleted")) | (F.col("commit") >= tombstone_commit_watermark)
         )
-    return touched, survivors
+    return survivors, lww_path

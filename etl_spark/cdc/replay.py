@@ -5,6 +5,18 @@ micro-batches (Structured-Streaming-shaped semantics — offsets, fencing,
 checkpoint resume — run as batch so a fixed log always replays to the
 exact same final state).
 
+Every entry point runs ONE ordered loop (``ReplayEngine._run``):
+``replay(pipeline_depth=N)`` at depth N, ``apply_batch`` at depth 1, and
+the streaming tail and table-to-table chain through those two. Per
+batch: skip if applied -> plan -> submit the write -> drain in order
+(metrics rows, then the atomic commit) -> maintenance at drained
+points. The mode supplies its plan and its write/commit pair (mor:
+append delta files; cow: rewrite the touched buckets). Empty batches,
+batches carrying DDL, and the compaction and expiry ticks are barriers
+that drain the pipeline. Every applied batch reports the same four
+phases in ``timings_ms``: ``plan``, ``write``, ``stats_wait`` and
+``commit``.
+
 Exactly-once: every snapshot commit atomically records
 ``applied_batches`` + ``fence_offset`` in the snapshot properties; a
 re-delivered batch is a no-op (idempotent), and resume-after-crash picks
@@ -29,6 +41,8 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,7 +52,16 @@ from etl_spark.cdc.evolution import (
     check_schema_ops,
     simulate_schema_ops,
 )
-from etl_spark.cdc.merge import merge_batch
+from etl_spark.cdc.merge import (
+    BROADCAST_KEY_BUDGET,
+    _bucket_counters,
+    _stats_from_rows,
+    cow_batch_stats,
+    cow_batch_survivors,
+    plan_mor_batch,
+    resolve_state,
+)
+from etl_spark.functions.normalize import with_content_sha256
 from etl_spark.schema import INGEST_METRICS_SCHEMA
 from etl_spark.table.manifest import (
     WAP_BASE_PROP,
@@ -167,6 +190,40 @@ def check_wal_shape(
             )
 
 
+@contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """The engine's one override of ``spark.sql.shuffle.partitions``.
+    With it equal to the bucket count (times the write fan-out), the LWW
+    aggregation's exchange IS the bucket write exchange: the writer's
+    repartition to the same count on the same keys is elided, so content
+    crosses the network once. Session conf is shared state, so the value
+    is restored on every exit path. Cross-session exposure is the
+    documented single-logical-writer assumption; give the engine a
+    dedicated ``spark.newSession()`` to isolate it from other
+    workloads."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _timed(fn):
+    t = time.monotonic()
+    out = fn()
+    return out, int((time.monotonic() - t) * 1000)
+
+
+def _check_staged(snap):
+    """``snap`` if it has a WAP staging window open, else refuse. The
+    window's base is read from this same snapshot, never a second read."""
+    if snap.properties.get(WAP_STAGED_PROP) != "true":
+        raise ValueError("no WAP staging window is open")
+    return snap
+
+
 def _compact_applied(watermark: int, ids) -> tuple[int, list[int]]:
     """Advance the contiguous-prefix watermark over ``ids`` and return
     (new watermark, sorted residual ids still above it). Batch ids are
@@ -258,8 +315,6 @@ class ReplayEngine:
         self.mode = mode
         self.compact_threshold = compact_threshold
         self.lww_strategy = lww_strategy
-        from etl_spark.cdc.merge import BROADCAST_KEY_BUDGET
-
         self.broadcast_key_budget = (
             BROADCAST_KEY_BUDGET if broadcast_key_budget is None else broadcast_key_budget
         )
@@ -430,11 +485,14 @@ class ReplayEngine:
         one metadata-only commit clears the staged flag, and published
         readers move from the pinned base to the full history in one
         step. Returns the newly published version."""
-        if not self.staged():
-            raise ValueError("no WAP staging window is open")
-        return self.table.update_properties(
-            remove=(WAP_STAGED_PROP, WAP_BASE_PROP)
-        ).version
+        # the window must still be open in EACH commit attempt's
+        # snapshot: a concurrent discard landing between a pre-check and
+        # the commit would otherwise "publish" a discarded window
+        def _compute(snap) -> tuple[dict, tuple]:
+            _check_staged(snap)
+            return {}, (WAP_STAGED_PROP, WAP_BASE_PROP)
+
+        return self.table.update_properties(compute=_compute).version
 
     def discard_staged(self) -> int:
         """Reject the staged window: roll back to the pinned base
@@ -443,9 +501,7 @@ class ReplayEngine:
         base's fence/applied properties, so the engine re-accepts the
         discarded batches' offsets — fix the feed and replay. Returns
         the restored (published) version."""
-        snap = self.table.current_snapshot()
-        if not self.staged():
-            raise ValueError("no WAP staging window is open")
+        snap = _check_staged(self.table.current_snapshot())
         return self.table.rollback(int(snap.properties[WAP_BASE_PROP])).version
 
     def audit_staged(
@@ -487,9 +543,7 @@ class ReplayEngine:
                 "max_row_growth/max_row_shrink require count_rows=True "
                 "(a metadata-only audit cannot check row bounds)"
             )
-        snap = self.table.current_snapshot()
-        if not self.staged():
-            raise ValueError("no WAP staging window is open")
+        snap = _check_staged(self.table.current_snapshot())
         base = self.table.snapshot_at(int(snap.properties[WAP_BASE_PROP]))
 
         base_files, _, base_bytes, _ = self.table.summary_totals(base)
@@ -532,17 +586,6 @@ class ReplayEngine:
         out["ok"] = not failures
         return out
 
-    def _maybe_expire(self) -> None:
-        """Auto-retention tick: when ``expire_every`` is set and that many
-        data commits have landed since the last expiry, expire snapshots
-        down to ``expire_keep_last``. Callers MUST be at a drained point
-        (no written-but-uncommitted batch dirs) — expiry vacuums data
-        dirs referenced by no surviving snapshot."""
-        if not self.expire_every or self._commits_since_expire < self.expire_every:
-            return
-        self._commits_since_expire = 0
-        self.table.expire_snapshots(keep_last=self.expire_keep_last)
-
     def _append_metrics_row(self, batch_id, rows_in, upserts, deletes, distinct_keys, n_ops, duration_ms):
         """One-row lineage record per batch — written driver-side with
         pyarrow (a Spark job for one row costs seconds of fixed overhead
@@ -565,20 +608,33 @@ class ReplayEngine:
         os.makedirs(self._metrics_dir, exist_ok=True)
         pq.write_table(table, os.path.join(self._metrics_dir, f"batch-{batch_id:08d}.parquet"))
 
+    def _applied_rows(self, d: str, schema) -> DataFrame:
+        """The parquet rows under ``d`` of batches the current snapshot
+        marks applied. Rows are written BEFORE their batch's commit, so a
+        batch whose commit failed (or was rolled back) may have rows on
+        disk; they stay hidden until a retry commits the batch."""
+        if not os.path.isdir(d) or not os.listdir(d):
+            return self.spark.createDataFrame([], schema)
+        wm, residual = _applied_state(self.table.current_snapshot().properties)
+        applied = F.col("batch_id") <= wm
+        if residual:
+            applied = applied | F.col("batch_id").isin(residual)
+        return self.spark.read.parquet(d).filter(applied)
+
     def metrics(self) -> DataFrame:
-        if not os.path.isdir(self._metrics_dir) or not os.listdir(self._metrics_dir):
-            return self.spark.createDataFrame([], INGEST_METRICS_SCHEMA)
-        return self.spark.read.parquet(self._metrics_dir)
+        """One row per applied batch: event/upsert/delete/key counts,
+        schema ops, and ``duration_ms`` from plan start until the row was
+        written (just before the batch's commit)."""
+        return self._applied_rows(self._metrics_dir, INGEST_METRICS_SCHEMA)
 
     def bucket_metrics(self) -> DataFrame:
         """Per-(batch, bucket) lineage: key/event/delete counts for every
-        key-partition each batch touched (north_rule per-partition
-        metrics; sums reconcile with ``metrics()``)."""
-        d = self._metrics_dir + "_buckets"
-        schema = "batch_id int, bucket int, keys long, events long, deletes long"
-        if not os.path.isdir(d) or not os.listdir(d):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(d)
+        key-partition each applied batch touched (north_rule
+        per-partition metrics; sums reconcile with ``metrics()``)."""
+        return self._applied_rows(
+            self._metrics_dir + "_buckets",
+            "batch_id int, bucket int, keys long, events long, deletes long",
+        )
 
     def _append_bucket_metrics(self, batch_id: int, per_bucket: list[dict]) -> None:
         import pyarrow as pa
@@ -644,8 +700,6 @@ class ReplayEngine:
         tagged version is exempt from retention for as long as the tag
         exists, so tag-addressed reads cannot race an expiry tick the
         way raw-version travel can."""
-        from etl_spark.cdc.merge import resolve_state
-
         preds = list(where or [])
         bad_ops = sorted({op for _, op, _ in preds} - {"=", "<", "<=", ">", ">=", "in"})
         if bad_ops:
@@ -794,22 +848,26 @@ class ReplayEngine:
 
     def _check_ops_feed(self, ops_rows, snap) -> None:
         """Contract-check + dry-run a schema-ops feed, once per feed
-        CONTENT: the validation launches driver Spark jobs (default
-        casts via ``validate_column_type``), so re-running it for every
-        batch of a replay — and every micro-batch of a stream — would
-        put N tiny jobs on the hot loop for a feed already proven
-        valid. Keyed by the collected rows' values (not object
-        identity), so any changed feed re-validates and a re-used
-        engine can never skip a different feed's check."""
+        CONTENT and table schema version: the validation launches driver
+        Spark jobs (default casts via ``validate_column_type``), so
+        re-running it for every batch of a replay — and every
+        micro-batch of a stream — would put N tiny jobs on the hot loop
+        for a feed already proven valid. Keyed by the collected rows'
+        values (not object identity), so any changed feed re-validates
+        and a re-used engine can never skip a different feed's check;
+        and by the schema version, so a schema changed out of band
+        re-runs the dry run before any op commits. Not by the fence: it
+        moves every batch, so keying on it would re-validate on every
+        batch of a trickle."""
         # sort key must tolerate the NULL fields the contract check
         # exists to refuse (None < int comparisons raise before the
         # loud refusal could fire)
-        key = tuple(
+        key = (snap.current_schema_version, tuple(
             sorted(
                 ((r["offset"], r["kind"], r["column"], r["detail"]) for r in ops_rows),
                 key=lambda t: tuple((v is None, v) for v in t),
             )
-        )
+        ))
         if key == self._validated_ops_key:
             return
         fence = int(snap.properties.get("fence_offset", -1))
@@ -855,10 +913,8 @@ class ReplayEngine:
         is what bounds tombstone storage at 10^10-event scale. Defaults
         to the engine-level ``tombstone_commit_watermark`` when not
         given (cow tables age tombstones at rewrite time instead — see
-        ``merge_batch`` — since cow buckets never accumulate the delta
+        ``cow_batch_survivors`` — since cow buckets never accumulate the delta
         files that make them eligible here)."""
-        from etl_spark.cdc.merge import resolve_state
-
         if tombstone_commit_watermark is None:
             tombstone_commit_watermark = self.tombstone_commit_watermark
         # ONE snapshot pins the whole operation — eligibility, sizing,
@@ -910,20 +966,12 @@ class ReplayEngine:
         from etl_spark.table.manifest import compact_fanout
 
         k = compact_fanout(max((sizes[b][0] + sizes[b][1] for b in buckets), default=0))
-        old_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            # agg path: winners exchange doubles as the bucket write
-            # exchange when shuffle.partitions == num_buckets * fanout
-            # (the repartition in the writer pins the same count on the
-            # same keys, so Catalyst elides it — content crosses once)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(num_buckets * k))
+        with _shuffle_partitions(self.spark, num_buckets * k):
             self.table.rewrite_buckets(
                 buckets, resolved, files_per_bucket=k,
                 sort_columns=self.table.key_columns if self.compact_sort else None,
                 basis=snap0,
             )
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         return buckets
 
     # ---------- the loop ----------
@@ -961,20 +1009,26 @@ class ReplayEngine:
         I/U/D ops feed-wide before batching (the reference's status state
         machine, C2, runs as a pre-stage of the replay loop).
 
-        ``pipeline_depth``: under merge-on-read, batch N+1's WRITE runs
-        concurrently with batch N while snapshot COMMITS stay strictly
-        ordered (Iceberg's write-then-commit protocol) — per-batch
-        driver overhead (plan build, job submit, broadcast build,
-        commit) stops multiplying by batch count, which is the dominant
-        serial term in N->4N scaling efficiency. Schema-evolution
-        streams pipeline BETWEEN evolution points: only the batch
-        carrying each DDL event runs sequentially. 1 disables
-        pipelining. Copy-on-write pipelines too, gated on BUCKET
-        DISJOINTNESS: batch N+1's rewrite may overlap batch N's iff
-        their touched-bucket sets don't intersect (disjoint buckets =
-        disjoint keys, so N+1's resolve-read of its own buckets cannot
-        depend on N's in-flight write); intersecting batches drain the
-        pipeline first, and commits stay strictly ordered either way."""
+        ``pipeline_depth``: how many batches the one replay loop keeps in
+        flight. Every batch, in every mode, runs plan -> write -> commit;
+        up to ``pipeline_depth`` WRITES overlap while snapshot COMMITS
+        stay strictly ordered (Iceberg's write-then-commit protocol), so
+        per-batch driver overhead (plan build, job submit, broadcast
+        build, commit) stops multiplying by batch count. 1 is the
+        sequential replay — ``apply_batch`` is this loop at depth 1.
+        Barriers drain the pipeline first: empty batches (a
+        metadata-only fence commit), batches carrying schema-evolution
+        ops (the ops commit, then the batch plans against the new
+        schema — so pipelining continues between DDL points), and the
+        compaction and expiry ticks. Copy-on-write additionally drains
+        until a batch's touched buckets are disjoint from every
+        in-flight batch's (disjoint buckets = disjoint keys, so its
+        resolve-read cannot depend on an in-flight write). Every applied
+        batch reports ``timings_ms`` with the phases ``plan`` (frame
+        build, DDL and snapshot re-read at barriers, cow's stats job and
+        bucket gate), ``write``, ``stats_wait`` and ``commit`` (metrics
+        rows + atomic snapshot commit); ``pipelined`` is true iff the
+        depth is above 1 and the batch was not a barrier."""
         if classify is not None:
             from etl_spark.cdc.classify import classify_events
 
@@ -1013,421 +1067,19 @@ class ReplayEngine:
             bounds, batches, wm0, res0,
             fence=int(props0.get("fence_offset", -1)),
         )
+        ops_rows = None
         if schema_ops is not None:
             # ops frames are tiny (DDL events) — validate the whole feed
             # driver-side before any op can commit a schema version,
             # then dry-run the pending ops against the current schema so
             # the state-dependent refusals (no-such-column, collision,
             # non-widenable type) are up-front too, never half-applied
-            ops_rows0 = schema_ops.collect()
-            self._check_ops_feed(ops_rows0, snap0)
-        if self.mode == "cow" and pipeline_depth > 1 and schema_ops is None:
-            return self._replay_cow_pipelined(
-                changelog, bounds, sorted(batches), delete_guard, pipeline_depth,
-                extra_properties=extra_properties,
-            )
-        if self.mode == "mor" and pipeline_depth > 1:
-            if schema_ops is None:
-                return self._replay_mor_pipelined(
-                    changelog, bounds, sorted(batches), delete_guard, pipeline_depth,
-                    extra_properties=extra_properties,
-                )
-            # Pipeline BETWEEN evolution points: each DDL offset pins the
-            # earliest batch whose offset range reaches it to the
-            # sequential path (the evolution commit must precede that
-            # batch's data commit, and in-flight delta writes were
-            # planned against the pre-evolution schema), while runs of
-            # evolution-free batches still overlap their writes. A
-            # 10^10-event replay with a handful of DDL events keeps the
-            # pipeline everywhere except the batches that carry them.
-            # Ops are pinned conservatively from ALL given ops (not just
-            # unapplied ones): on resume the pinned batch goes through
-            # apply_batch, which skips applied batches/ops anyway.
-            op_offsets = sorted(
-                r["offset"] for r in schema_ops.select("offset").collect()
-            )
-            ordered = sorted(batches)
-            # batches with no rows in the changelog route through
-            # apply_batch too, keeping the empty-batch fencing identical
-            # to the sequential path (ops at/below the committed fence
-            # are treated as applied on both paths)
-            op_batches: set[int] = {
-                b for b in ordered if bounds.get(b, (None, None))[1] is None
-            }
-            for o in op_offsets:
-                for b in ordered:
-                    hi = bounds.get(b, (None, None))[1]
-                    if hi is not None and int(o) <= int(hi):
-                        op_batches.add(b)
-                        break
-            results = []
-            run: list[int] = []
-
-            def _flush_run() -> None:
-                if run:
-                    results.extend(
-                        self._replay_mor_pipelined(
-                            changelog, bounds, list(run), delete_guard, pipeline_depth,
-                            extra_properties=extra_properties,
-                        )
-                    )
-                    run.clear()
-
-            for b in ordered:
-                if b in op_batches:
-                    _flush_run()
-                    results.append(
-                        self.apply_batch(
-                            changelog, b, schema_ops,
-                            bounds=bounds.get(b), delete_guard=delete_guard,
-                            extra_properties=extra_properties,
-                        )
-                    )
-                else:
-                    run.append(b)
-            _flush_run()
-            results.sort(key=lambda r: r["batch_id"])
-            return results
-        results = []
-        for b in sorted(batches):
-            results.append(
-                self.apply_batch(
-                    changelog, b, schema_ops, bounds=bounds.get(b),
-                    delete_guard=delete_guard, extra_properties=extra_properties,
-                )
-            )
-        return results
-
-    def _replay_cow_pipelined(
-        self,
-        changelog: DataFrame,
-        bounds: dict,
-        batches: list[int],
-        delete_guard: DataFrame | None,
-        depth: int,
-        extra_properties: dict | None = None,
-    ) -> list[dict]:
-        """Pipelined copy-on-write replay: up to ``depth`` bucket
-        rewrites in flight, commits strictly ordered, overlap gated on
-        BUCKET DISJOINTNESS.
-
-        Why disjointness suffices: a cow batch reads only the buckets it
-        touches (to resolve LWW against stored rows) and rewrites only
-        those buckets. Buckets partition the key space, so two batches
-        with disjoint bucket sets share NO keys — batch N+1's
-        resolve-read of its buckets sees the same rows whether or not
-        batch N's (in-flight, disjoint) rewrite has landed. Each batch's
-        touched set falls out of the thin per-key stats job it runs
-        anyway (``cow_batch_stats``); a batch intersecting any in-flight
-        set drains the pipeline first (FIFO, so commit order is also
-        plan order). ``commit_rewritten`` additionally re-verifies at
-        commit time that no concurrent commit touched the batch's
-        buckets since its basis snapshot — the same Iceberg overwrite
-        serialization rule the sequential path relies on — so the
-        disjointness reasoning is enforced, not assumed. Exactly-once
-        bookkeeping rides in each ordered commit, as in the mor
-        pipeline."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from etl_spark.cdc.merge import (
-            _bucket_counters,
-            cow_batch_stats,
-            cow_batch_survivors,
+            ops_rows = schema_ops.collect()
+            self._check_ops_feed(ops_rows, snap0)
+        return self._run(
+            changelog, bounds, sorted(batches), ops_rows, delete_guard,
+            pipeline_depth, extra_properties,
         )
-
-        snap0 = self.table.current_snapshot()
-        applied_wm, applied = _applied_state(snap0.properties)
-        ops_list = list(snap0.properties.get("applied_schema_ops", []))
-        fence = int(snap0.properties.get("fence_offset", -1))
-        sv = snap0.current_schema_version
-        results: list[dict] = []
-        pending: list[dict] = []
-        inflight: set[int] = set()
-        pool = ThreadPoolExecutor(max_workers=depth)
-
-        def drain_one() -> None:
-            p = pending.pop(0)
-            try:
-                entries, write_ms = p["write_fut"].result()
-                t_c = time.monotonic()
-                self.table.commit_rewritten(p["touched"], entries, p["basis"], p["props"])
-            finally:
-                # release the cached thin maxes even when the write or
-                # commit raises — a driver that catches per-batch errors
-                # and continues must not accumulate leaked cache blocks
-                p["maxes"].unpersist()
-            commit_ms = int((time.monotonic() - t_c) * 1000)
-            self._commits_since_expire += 1
-            inflight.difference_update(p["touched"])
-            stats = p["stats"]
-            duration_ms = int((time.monotonic() - p["t0"]) * 1000)
-            self._append_bucket_metrics(p["batch_id"], _bucket_counters(p["per_bucket"]))
-            self._append_metrics_row(
-                p["batch_id"], stats["events"], stats["ups"], stats["dels"],
-                stats["keys"], 0, duration_ms,
-            )
-            results.append({
-                "batch_id": p["batch_id"], "skipped": False, "schema_ops": 0,
-                "duration_ms": duration_ms, "rows_in": stats["events"],
-                "distinct_keys": stats["keys"], "upserts": stats["ups"],
-                "deletes": stats["dels"], "lww_path": stats["lww_path"],
-                "pipelined": True,
-                "timings_ms": {
-                    "plan": p["plan_ms"], "write": write_ms, "commit": commit_ms,
-                },
-                "per_bucket": _bucket_counters(p["per_bucket"]),
-            })
-
-        try:
-            for b in batches:
-                if _is_applied(applied_wm, applied, b):
-                    results.append({"batch_id": b, "skipped": True})
-                    continue
-                t0 = time.monotonic()
-                lo, hi = bounds.get(b, (None, None))
-                if lo is None:
-                    while pending:
-                        drain_one()
-                    applied_wm, applied = _compact_applied(applied_wm, applied + [b])
-                    self.table.commit_appended({}, sv, {
-                        **(extra_properties or {}),
-                        "applied_batches": applied,
-                        "applied_batches_watermark": applied_wm,
-                        "applied_schema_ops": [o for o in ops_list if o > fence],
-                        "fence_offset": fence,
-                    })
-                    self._commits_since_expire += 1
-                    results.append({"batch_id": b, "skipped": False, "schema_ops": 0,
-                                    "duration_ms": int((time.monotonic() - t0) * 1000),
-                                    "rows_in": 0, "distinct_keys": 0, "upserts": 0,
-                                    "deletes": 0, "lww_path": "empty",
-                                    "pipelined": True, "per_bucket": []})
-                    continue
-                batch = changelog.filter(F.col("batch_id") == b).filter(F.col("offset") > fence)
-                batch, maxes, per_bucket, stats = cow_batch_stats(
-                    batch, self.table.key_columns, snap0.num_buckets,
-                    delete_guard=delete_guard,
-                )
-                touched = sorted(stats["buckets"])
-                # bucket-conflict gate: FIFO-drain until this batch's
-                # buckets are untouched by anything still in flight
-                while pending and inflight.intersection(touched):
-                    drain_one()
-                # basis AFTER the drain: every committed predecessor is
-                # visible; still-in-flight batches are bucket-disjoint
-                basis = self.table.current_snapshot()
-                _, survivors = cow_batch_survivors(
-                    self.table, basis, batch, maxes, stats, b,
-                    lww_strategy=self.lww_strategy,
-                    broadcast_key_budget=self.broadcast_key_budget,
-                    tombstone_commit_watermark=self.tombstone_commit_watermark,
-                )
-                applied_wm, applied = _compact_applied(applied_wm, applied + [b])
-                fence = max(fence, int(hi))
-                inflight.update(touched)
-
-                def _timed_write(s=survivors, ba=basis):
-                    tw = time.monotonic()
-                    out = self.table.write_rewrite_files(s, ba)
-                    return out, int((time.monotonic() - tw) * 1000)
-
-                pending.append({
-                    "batch_id": b, "t0": t0, "touched": touched, "basis": basis,
-                    "stats": stats, "per_bucket": per_bucket, "maxes": maxes,
-                    "plan_ms": int((time.monotonic() - t0) * 1000),
-                    "write_fut": pool.submit(_timed_write),
-                    "props": {**(extra_properties or {}),
-                              "applied_batches": applied,
-                              "applied_batches_watermark": applied_wm,
-                              "applied_schema_ops": [o for o in ops_list if o > fence],
-                              "fence_offset": fence},
-                })
-                while len(pending) >= depth:
-                    drain_one()
-                if self.expire_every and self._commits_since_expire >= self.expire_every:
-                    # retention tick needs a fully drained pipeline: the
-                    # vacuum treats written-but-uncommitted dirs as orphans
-                    while pending:
-                        drain_one()
-                    self._maybe_expire()
-            while pending:
-                drain_one()
-            self._maybe_expire()
-        finally:
-            pool.shutdown(wait=True, cancel_futures=True)
-            for p in pending:  # batches never drained (an earlier raise)
-                p["maxes"].unpersist()
-        results.sort(key=lambda r: r["batch_id"])
-        return results
-
-    def _replay_mor_pipelined(
-        self,
-        changelog: DataFrame,
-        bounds: dict,
-        batches: list[int],
-        delete_guard: DataFrame | None,
-        depth: int,
-        extra_properties: dict | None = None,
-    ) -> list[dict]:
-        """Pipelined merge-on-read replay: up to ``depth`` batch writes in
-        flight, commits strictly ordered.
-
-        Safe because a mor append (a) reads nothing from the table, (b)
-        lands data files invisibly until its snapshot commit, and (c)
-        fences are plannable arithmetically (fence after batch b =
-        max(prev fence, hi_b) — offsets are known up front). A crash
-        leaves a committed prefix (consistent, resumable; uncommitted
-        files are orphans for expire_snapshots' vacuum) — identical
-        guarantees to the sequential loop. Exactly-once is untouched:
-        applied/fence bookkeeping rides in each ordered commit."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        from etl_spark.cdc.merge import _bucket_counters, _stats_from_rows, plan_mor_batch
-        from etl_spark.functions.normalize import with_content_sha256
-
-        snap = self.table.current_snapshot()
-        applied_wm, applied = _applied_state(snap.properties)
-        ops_list = list(snap.properties.get("applied_schema_ops", []))
-        fence = int(snap.properties.get("fence_offset", -1))
-        sv = snap.current_schema_version
-        results: list[dict] = []
-        pending: list[dict] = []
-        pool = ThreadPoolExecutor(max_workers=depth)
-        stats_pool = ThreadPoolExecutor(max_workers=depth)
-        old_sp = self.spark.conf.get("spark.sql.shuffle.partitions")
-        # one content exchange: the winners aggregation's shuffle IS the
-        # bucket exchange when shuffle.partitions == num_buckets. Delta
-        # writes do NOT fan out (batch deltas are small per bucket;
-        # fanning them out made tasks overhead-dominated in A/B runs) —
-        # only compaction, whose inputs are measured on disk, does.
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(snap.num_buckets))
-
-        def drain_one() -> None:
-            p = pending.pop(0)
-            # BOTH futures resolve before the commit: a stats failure
-            # after the commit would leave the batch durably applied with
-            # its metrics/lineage rows permanently missing (resume skips
-            # applied batches); failing first makes resume recompute it.
-            written, write_ms = p["write_fut"].result()
-            per_bucket = p["stats_fut"].result()
-            t_c = time.monotonic()
-            self.table.commit_appended(written, sv, p["props"])
-            commit_ms = int((time.monotonic() - t_c) * 1000)
-            self._commits_since_expire += 1
-            stats = _stats_from_rows(per_bucket)
-            duration_ms = int((time.monotonic() - p["t0"]) * 1000)
-            self._append_bucket_metrics(p["batch_id"], _bucket_counters(per_bucket))
-            self._append_metrics_row(
-                p["batch_id"], stats["events"], stats["ups"], stats["dels"],
-                stats["keys"], 0, duration_ms,
-            )
-            results.append({
-                "batch_id": p["batch_id"], "skipped": False, "schema_ops": 0,
-                # duration_ms is the batch's WALL span (plan -> commit).
-                # Spans of concurrent batches overlap by design — they
-                # sum to more than the replay wall clock; per-phase
-                # exclusive costs are in timings_ms.
-                "duration_ms": duration_ms, "rows_in": stats["events"],
-                "distinct_keys": stats["keys"], "upserts": stats["ups"],
-                "deletes": stats["dels"], "lww_path": p["lww_path"],
-                "pipelined": True,
-                "timings_ms": {
-                    "plan": p["plan_ms"], "write": write_ms, "commit": commit_ms,
-                },
-                "per_bucket": _bucket_counters(per_bucket),
-            })
-
-        try:
-            for b in batches:
-                if _is_applied(applied_wm, applied, b):
-                    results.append({"batch_id": b, "skipped": True})
-                    continue
-                t0 = time.monotonic()
-                lo, hi = bounds.get(b, (None, None))
-                if lo is None:
-                    # empty batch: still fence it (ordered -> drain first)
-                    while pending:
-                        drain_one()
-                    applied_wm, applied = _compact_applied(applied_wm, applied + [b])
-                    self.table.commit_appended({}, sv, {
-                        **(extra_properties or {}),
-                        "applied_batches": applied,
-                        "applied_batches_watermark": applied_wm,
-                        "applied_schema_ops": [o for o in ops_list if o > fence],
-                        "fence_offset": fence,
-                    })
-                    self._commits_since_expire += 1
-                    results.append({"batch_id": b, "skipped": False, "schema_ops": 0,
-                                    "duration_ms": int((time.monotonic() - t0) * 1000),
-                                    "rows_in": 0, "distinct_keys": 0, "upserts": 0,
-                                    "deletes": 0, "lww_path": "empty",
-                                    "pipelined": True, "per_bucket": []})
-                    continue
-                batch = changelog.filter(F.col("batch_id") == b).filter(F.col("offset") > fence)
-                delta, per_bucket_plan, lww_path = plan_mor_batch(
-                    snap, self.table.key_columns, batch, b,
-                    lww_strategy=self.lww_strategy,
-                    broadcast_key_budget=self.broadcast_key_budget,
-                    events_upper_bound=int(hi) - int(lo) + 1,
-                    delete_guard=delete_guard,
-                )
-                applied_wm, applied = _compact_applied(applied_wm, applied + [b])
-                fence = max(fence, int(hi))
-
-                def _timed_write(d=delta):
-                    tw = time.monotonic()
-                    out = self.table.write_delta_files(d, snap, with_content_sha256)
-                    return out, int((time.monotonic() - tw) * 1000)
-
-                pending.append({
-                    "batch_id": b, "t0": t0, "lww_path": lww_path,
-                    "plan_ms": int((time.monotonic() - t0) * 1000),
-                    "write_fut": pool.submit(_timed_write),
-                    "stats_fut": stats_pool.submit(per_bucket_plan.collect),
-                    "props": {**(extra_properties or {}),
-                              "applied_batches": applied,
-                              "applied_batches_watermark": applied_wm,
-                              "applied_schema_ops": [o for o in ops_list if o > fence],
-                              "fence_offset": fence},
-                })
-                while len(pending) >= depth:
-                    drain_one()
-                if self.compact_threshold and any(
-                    n >= self.compact_threshold for n in self.table.delta_counts().values()
-                ):
-                    # compaction reads the table: barrier-drain in-flight
-                    # writes, then fold
-                    while pending:
-                        drain_one()
-                    self.compact(min_files=self.compact_threshold,
-                                 min_delta_fraction=self.compact_delta_fraction)
-                if self.expire_every and self._commits_since_expire >= self.expire_every:
-                    # retention tick needs a fully drained pipeline: the
-                    # vacuum treats written-but-uncommitted dirs as orphans
-                    while pending:
-                        drain_one()
-                    self._maybe_expire()
-            while pending:
-                drain_one()
-            # the final drain's commits can push buckets past the
-            # threshold with no later per-batch check — re-check once so
-            # the pipelined path ends in the same compacted state as the
-            # sequential one (reads otherwise pay unresolved-delta cost
-            # until some future replay happens to run)
-            if self.compact_threshold and any(
-                n >= self.compact_threshold
-                for n in self.table.delta_counts().values()
-            ):
-                self.compact(min_files=self.compact_threshold,
-                             min_delta_fraction=self.compact_delta_fraction)
-            self._maybe_expire()
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-            pool.shutdown(wait=True, cancel_futures=True)
-            stats_pool.shutdown(wait=True, cancel_futures=True)
-        # drains interleave with skip records; present in batch order
-        results.sort(key=lambda r: r["batch_id"])
-        return results
 
     def apply_batch(
         self,
@@ -1438,26 +1090,24 @@ class ReplayEngine:
         delete_guard: DataFrame | None = None,
         extra_properties: dict | None = None,
     ) -> dict:
-        t0 = time.monotonic()
+        """Apply one batch (a no-op if already applied): the replay loop
+        at depth 1 over ``[batch_id]``. ``bounds`` is the batch's
+        ``(lo, hi)`` offset range when the caller already knows it;
+        otherwise one job computes it, with the WAL-contract NULL
+        audit riding along."""
         snap = self.table.current_snapshot()
         applied_wm, applied = _applied_state(snap.properties)
         if _is_applied(applied_wm, applied, batch_id):
             return {"batch_id": batch_id, "skipped": True}
-
-        batch = changelog.filter(F.col("batch_id") == batch_id)
-        if bounds is not None:
-            # precomputed by replay()'s one-pass audit (incl. the
-            # contract-NULL check)
-            lo, hi = bounds
-        else:
+        if bounds is None:
             keys = self.table.key_columns
-            row = batch.select(
+            row = changelog.filter(F.col("batch_id") == batch_id).select(
                 F.min("offset").alias("lo"),
                 F.max("offset").alias("hi"),
                 *contract_null_aggs(keys),
             ).first()
             check_contract_nulls(row, keys, batch_id)
-            lo, hi = row["lo"], row["hi"]
+            bounds = (row["lo"], row["hi"])
         # WAL contract (see replay's docstring): a NON-EMPTY batch below
         # an already-applied id has its offsets at/below the committed
         # fence — applying it now would silently drop every event, so
@@ -1467,7 +1117,7 @@ class ReplayEngine:
         # batch id and replay as empty batches; only true out-of-order
         # application trips this.
         max_applied = max([applied_wm] + [int(x) for x in applied])
-        if batch_id < max_applied and lo is not None:
+        if batch_id < max_applied and bounds[0] is not None:
             raise ValueError(
                 f"out-of-order batch application: batch {batch_id} was "
                 f"never applied but batch {max_applied} already was — "
@@ -1475,98 +1125,268 @@ class ReplayEngine:
                 "would be silently dropped. Apply batches in ascending "
                 "id order (an empty batch may close the gap)."
             )
-        if lo is None:  # empty batch: still fence it
-            lo, hi = self.fence_offset(), self.fence_offset()
-
-        # defensive fence: drop any event at or below the committed fence
-        fence = int(snap.properties.get("fence_offset", -1))
-        batch = batch.filter(F.col("offset") > fence)
-
-        # schema evolution ops inside this batch's offset range, applied
-        # first. Each op's offset is recorded in applied_schema_ops IN THE
-        # SAME atomic evolution commit — a crash between an evolution
-        # commit and the batch's data commit leaves the op durably marked
-        # applied, so resume re-runs the batch without re-applying the op
-        # (re-applying add/rename would raise and wedge the pipeline).
-        #
-        # The list is BOUNDED: an op is applied by the same replay step
-        # that fences past its offset, so the data fence doubles as the
-        # ops watermark — offsets at/below ``fence_offset`` are treated
-        # as applied (their WAL region is already replayed; late-arriving
-        # DDL for a fenced region cannot be correctly interleaved anymore)
-        # and are dropped from the stored list at each commit. Only the
-        # current batch's ops survive in properties — exactly the crash
-        # window between an evolution commit and its data commit.
-        n_ops = 0
+        ops_rows = None
         if schema_ops is not None:
             # full-frame collect (tiny: DDL events) so the contract check
             # also sees rows a `offset <= hi` pushdown would hide (NULL
             # offsets from malformed PERMISSIVE-mode lines)
             ops_rows = schema_ops.collect()
             self._check_ops_feed(ops_rows, snap)
-            applied_ops = set(snap.properties.get("applied_schema_ops", []))
-            pending = sorted(
-                (
-                    r
-                    for r in ops_rows
-                    if fence < r["offset"] <= int(hi)
-                    and r["offset"] not in applied_ops
-                ),
-                key=lambda r: r["offset"],
-            )
-            for r in pending:
-                applied_ops.add(r["offset"])
-                apply_evolution_op(
-                    self.table, r["kind"], r["column"], r["detail"],
-                    properties_update={
-                        "applied_schema_ops": sorted(
-                            o for o in applied_ops if o > fence
-                        )
-                    },
-                )
-                n_ops += 1
-            if n_ops:
-                snap = self.table.current_snapshot()
-            snap_props_ops = sorted(applied_ops)
-        else:
-            snap_props_ops = list(snap.properties.get("applied_schema_ops", []))
+        return self._run(
+            changelog, {batch_id: bounds}, [batch_id], ops_rows, delete_guard,
+            1, extra_properties,
+        )[0]
 
-        new_fence = max(fence, int(hi))
-        new_wm, new_residual = _compact_applied(applied_wm, applied + [batch_id])
-        props = {
-            **(extra_properties or {}),
-            "applied_batches": new_residual,
-            "applied_batches_watermark": new_wm,
-            "applied_schema_ops": [o for o in snap_props_ops if o > new_fence],
-            "fence_offset": new_fence,
-        }
-        _, counters = merge_batch(
-            self.table, batch, batch_id, props, mode=self.mode,
-            lww_strategy=self.lww_strategy, delete_guard=delete_guard,
-            broadcast_key_budget=self.broadcast_key_budget,
-            # arithmetic bound from the batch's offset range (offsets are
-            # unique, so events <= hi-lo+1 and distinct keys <= events) —
-            # lets mor decide broadcast-vs-agg without a gating stats job
-            events_upper_bound=(int(hi) - int(lo) + 1) if hi is not None else None,
-            tombstone_commit_watermark=self.tombstone_commit_watermark,
-        )
-        if self.mode == "mor" and self.compact_threshold:
-            if any(n >= self.compact_threshold for n in self.table.delta_counts().values()):
+    def _run(
+        self,
+        changelog: DataFrame,
+        bounds: dict,
+        batches: list[int],
+        ops_rows: list | None,
+        delete_guard: DataFrame | None,
+        depth: int,
+        extra_properties: dict | None,
+    ) -> list[dict]:
+        """The replay loop, shared by every mode, depth and entry point.
+        Per batch: skip if applied -> plan -> submit the write -> drain
+        in order (metrics rows, then the commit) -> maintenance at
+        drained points. The mode supplies only its plan and its
+        write/commit pair (``_plan_mor`` / ``_plan_cow``).
+
+        Overlapping writes are safe because a write lands data files
+        invisibly until its snapshot commit, and the fence after each
+        batch is plannable arithmetically (max(prev fence, hi_b) —
+        offsets are known up front), so the exactly-once bookkeeping
+        rides in each ordered commit. A crash leaves a committed prefix
+        (consistent and resumable; uncommitted files are orphans for
+        expire_snapshots' vacuum)."""
+        snap = self.table.current_snapshot()
+        wm, residual = _applied_state(snap.properties)
+        fence = int(snap.properties.get("fence_offset", -1))
+        applied_ops = list(snap.properties.get("applied_schema_ops", []))
+        plan = self._plan_mor if self.mode == "mor" else self._plan_cow
+        results: list[dict] = []
+        pending: list[dict] = []
+        inflight: set[int] = set()  # buckets of pending cow batches
+
+        def drain(keep: int = 0) -> bool:
+            drained = len(pending) > keep
+            while len(pending) > keep:
+                p = pending.pop(0)
+                results.append(self._drain_one(p))
+                inflight.difference_update(p["touched"])
+            return drained
+
+        def gate(touched: list[int]) -> None:
+            while pending and inflight.intersection(touched):
+                drain(len(pending) - 1)
+
+        def maintain() -> None:
+            # both read or vacuum the table, so in-flight writes drain
+            # first (expiry vacuums data dirs no surviving snapshot
+            # references — a written-but-uncommitted batch's dir must not
+            # exist when it scans)
+            if self.mode == "mor" and self.compact_threshold and any(
+                n >= self.compact_threshold
+                for n in self.table.delta_counts().values()
+            ):
+                drain()
                 self.compact(min_files=self.compact_threshold,
-                                 min_delta_fraction=self.compact_delta_fraction)
+                             min_delta_fraction=self.compact_delta_fraction)
+            if self.expire_every and self._commits_since_expire >= self.expire_every:
+                drain()
+                self._commits_since_expire = 0
+                self.table.expire_snapshots(keep_last=self.expire_keep_last)
 
-        duration_ms = int((time.monotonic() - t0) * 1000)
-        self._append_bucket_metrics(batch_id, counters.pop("per_bucket", []))
-        self._append_metrics_row(
-            batch_id,
-            counters["rows_in"],
-            counters["upserts"],
-            counters["deletes"],
-            counters["distinct_keys"],
-            n_ops,
-            duration_ms,
+        with ExitStack() as stack:
+            if self.mode == "mor":
+                # entered before any stats task starts, left after every
+                # task joined (the pools below shut down first), so every
+                # plan built in this call sees one constant value
+                stack.enter_context(_shuffle_partitions(self.spark, snap.num_buckets))
+            # batches never drained (an earlier raise) release their caches
+            stack.callback(lambda: [p["release"]() for p in pending])
+            write_pool = ThreadPoolExecutor(depth, thread_name_prefix="replay-write")
+            stats_pool = ThreadPoolExecutor(depth, thread_name_prefix="replay-stats")
+            for pool in (write_pool, stats_pool):
+                stack.callback(pool.shutdown, wait=True, cancel_futures=True)
+            for b in batches:
+                if _is_applied(wm, residual, b):
+                    results.append({"batch_id": b, "skipped": True})
+                    continue
+                lo, hi = bounds.get(b, (None, None))
+                ops = sorted(
+                    (r for r in ops_rows or ()
+                     if lo is not None and fence < r["offset"] <= int(hi)
+                     and r["offset"] not in applied_ops),
+                    key=lambda r: r["offset"],
+                )
+                barrier = lo is None or bool(ops)
+                if barrier:
+                    drain()
+                t0 = time.monotonic()
+                # each DDL op lands in its own atomic evolution commit that
+                # also records the op's offset in applied_schema_ops — a
+                # crash before the batch's data commit leaves the op
+                # durably applied, so resume re-runs the batch without
+                # re-applying it. The list stays BOUNDED: the data fence
+                # doubles as the ops watermark (offsets at/below
+                # fence_offset count as applied), so each data commit
+                # keeps only the offsets above its fence.
+                for r in ops:
+                    applied_ops.append(r["offset"])
+                    apply_evolution_op(
+                        self.table, r["kind"], r["column"], r["detail"],
+                        properties_update={
+                            "applied_schema_ops": sorted(o for o in applied_ops if o > fence)
+                        },
+                    )
+                if ops:
+                    snap = self.table.current_snapshot()
+                # defensive fence: drop any event at or below it
+                batch = changelog.filter(F.col("batch_id") == b).filter(F.col("offset") > fence)
+                if lo is not None:
+                    fence = max(fence, int(hi))
+                wm, residual = _compact_applied(wm, residual + [b])
+                p = {
+                    "batch_id": b, "t0": t0, "n_ops": len(ops),
+                    "pipelined": depth > 1 and not barrier,
+                    "touched": (), "release": lambda: None,
+                    # exactly-once bookkeeping, committed atomically with
+                    # the batch; reserved keys win over caller properties
+                    "props": {
+                        **(extra_properties or {}),
+                        "applied_batches": residual,
+                        "applied_batches_watermark": wm,
+                        "applied_schema_ops": [o for o in applied_ops if o > fence],
+                        "fence_offset": fence,
+                    },
+                }
+                if lo is None:
+                    # empty batch: a metadata-only commit still fences it
+                    p.update(
+                        lww_path="empty", write=dict, stats=list,
+                        commit=lambda w, props, sv=snap.current_schema_version:
+                            self.table.commit_appended(w, sv, props),
+                    )
+                else:
+                    p.update(plan(snap, batch, b, int(hi) - int(lo) + 1, delete_guard, gate))
+                p["plan_ms"] = int((time.monotonic() - t0) * 1000)
+                pending.append(p)
+                inflight.update(p["touched"])
+                p["write"] = write_pool.submit(_timed, p["write"])
+                p["stats"] = stats_pool.submit(p["stats"])
+                drain(depth - 1)
+                maintain()
+            # the final drain's commits can push buckets past the
+            # compaction threshold with no later per-batch check
+            if drain():
+                maintain()
+        results.sort(key=lambda r: r["batch_id"])
+        return results
+
+    def _plan_mor(self, snap, batch, batch_id, events_bound, delete_guard, gate) -> dict:
+        """Merge-on-read plan and write/commit pair: append the batch's
+        winners as delta files. Nothing is read from the table, so
+        in-flight writes never conflict (``gate`` is unused). The
+        normalize+sha256 pandas_udf runs as the writer's post-shuffle
+        hook — after the bucket exchange, at full write parallelism —
+        and the thin stats rollup is collected concurrently, off the
+        critical path."""
+        delta, per_bucket_plan, lww_path = plan_mor_batch(
+            snap, self.table.key_columns, batch, batch_id,
+            lww_strategy=self.lww_strategy,
+            broadcast_key_budget=self.broadcast_key_budget,
+            events_upper_bound=events_bound,
+            delete_guard=delete_guard,
         )
+        return {
+            "lww_path": lww_path,
+            "write": lambda: self.table.write_delta_files(delta, snap, with_content_sha256),
+            "stats": per_bucket_plan.collect,
+            "commit": lambda written, props: self.table.commit_appended(
+                written, snap.current_schema_version, props
+            ),
+        }
+
+    def _plan_cow(self, snap, batch, batch_id, events_bound, delete_guard, gate) -> dict:
+        """Copy-on-write plan and write/commit pair: rewrite the touched
+        buckets. The thin stats job names them; ``gate`` then drains
+        in-flight batches until none shares a bucket with this one
+        (buckets partition the key space, so the resolve-read below
+        cannot depend on an in-flight write), and the survivors resolve
+        against a basis read AFTER the gate. ``commit_rewritten``
+        re-verifies at commit time that nothing touched those buckets
+        since the basis (Iceberg's overwrite serialization rule), so the
+        disjointness reasoning is enforced, not assumed."""
+        batch, maxes, per_bucket, stats = cow_batch_stats(
+            batch, self.table.key_columns, snap.num_buckets,
+            delete_guard=delete_guard,
+        )
+        touched = sorted(stats["buckets"])
+        try:
+            gate(touched)
+            basis = self.table.current_snapshot()
+            survivors, lww_path = cow_batch_survivors(
+                self.table, basis, batch, maxes, stats, batch_id,
+                lww_strategy=self.lww_strategy,
+                broadcast_key_budget=self.broadcast_key_budget,
+                tombstone_commit_watermark=self.tombstone_commit_watermark,
+            )
+        except BaseException:
+            maxes.unpersist()
+            raise
+        return {
+            "lww_path": lww_path,
+            "touched": touched,
+            # the cached thin maxes are released even when the write or
+            # commit raises — a driver that catches per-batch errors and
+            # continues must not accumulate leaked cache blocks
+            "release": maxes.unpersist,
+            "write": lambda: self.table.write_rewrite_files(survivors, basis),
+            "stats": lambda: per_bucket,
+            "commit": lambda written, props: self.table.commit_rewritten(
+                touched, written, basis, props
+            ),
+        }
+
+    def _drain_one(self, p: dict) -> dict:
+        """Finish the oldest in-flight batch: wait for its write and
+        stats tasks, write its metrics and lineage rows, then commit.
+        Both rows land BEFORE the commit under deterministic names, so a
+        crash on either side of the commit never leaves an applied batch
+        without them (a retry overwrites them, and ``metrics()`` reads
+        only applied batches). Returns the batch's result dict."""
+        b = p["batch_id"]
+        try:
+            written, write_ms = p["write"].result()
+            t_w = time.monotonic()
+            per_bucket = _bucket_counters(p["stats"].result())
+            t_s = time.monotonic()
+            s = _stats_from_rows(per_bucket)
+            self._append_bucket_metrics(b, per_bucket)
+            self._append_metrics_row(
+                b, s["events"], s["ups"], s["dels"], s["keys"], p["n_ops"],
+                int((t_s - p["t0"]) * 1000),
+            )
+            p["commit"](written, p["props"])
+        finally:
+            p["release"]()
+        t_c = time.monotonic()
         self._commits_since_expire += 1
-        self._maybe_expire()
-        return {"batch_id": batch_id, "skipped": False, "schema_ops": n_ops,
-                "duration_ms": duration_ms, **counters}
+        return {
+            "batch_id": b, "skipped": False, "schema_ops": p["n_ops"],
+            # the batch's WALL span (plan -> commit). Spans of concurrent
+            # batches overlap by design — they sum to more than the
+            # replay wall clock; per-phase costs are in timings_ms.
+            "duration_ms": int((t_c - p["t0"]) * 1000),
+            "rows_in": s["events"], "distinct_keys": s["keys"],
+            "upserts": s["ups"], "deletes": s["dels"],
+            "lww_path": p["lww_path"], "pipelined": p["pipelined"],
+            "timings_ms": {
+                "plan": p["plan_ms"], "write": write_ms,
+                "stats_wait": int((t_s - t_w) * 1000),
+                "commit": int((t_c - t_s) * 1000),
+            },
+            "per_bucket": per_bucket,
+        }

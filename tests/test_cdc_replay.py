@@ -208,3 +208,47 @@ def test_per_bucket_metrics_reconcile(spark, tmp_path, changelog):
         assert r["sum(deletes)"] == b["deletes"]
     # buckets per batch bounded by table layout
     assert eng.bucket_metrics().agg({"bucket": "max"}).first()[0] < 8
+
+
+def test_metrics_survive_crash_around_commit(spark, tmp_path, monkeypatch):
+    """A batch's metrics and lineage rows are written BEFORE its commit.
+    A commit that never lands leaves its rows hidden (``metrics()`` shows
+    applied batches only); a crash right AFTER a commit — resume then
+    skips that batch — must not lose them: one row per applied batch."""
+    from etl_spark.table.manifest import ManifestTable
+
+    log = generate_changelog(spark, 900, seed=3, n_repos=3, paths_per_repo=10, num_batches=3)
+    root = str(tmp_path / "t")
+    real_commit = ManifestTable.commit_appended
+
+    def fail_batch_1(commit_first):
+        def commit(self, written, sv, props=None, **kw):
+            if props and props.get("applied_batches_watermark") == 1:
+                if commit_first:
+                    real_commit(self, written, sv, props, **kw)
+                raise RuntimeError("driver died")
+            return real_commit(self, written, sv, props, **kw)
+        return commit
+
+    monkeypatch.setattr(ManifestTable, "commit_appended", fail_batch_1(False))
+    eng = ReplayEngine(spark, root, num_buckets=4, mode="mor")
+    with pytest.raises(RuntimeError, match="driver died"):
+        eng.replay(log)
+    assert eng.applied_batches() == [0]
+    assert [r["batch_id"] for r in eng.metrics().collect()] == [0]
+
+    monkeypatch.setattr(ManifestTable, "commit_appended", fail_batch_1(True))
+    with pytest.raises(RuntimeError, match="driver died"):
+        ReplayEngine(spark, root, num_buckets=4, mode="mor").replay(log)
+    monkeypatch.setattr(ManifestTable, "commit_appended", real_commit)
+
+    eng = ReplayEngine(spark, root, num_buckets=4, mode="mor")
+    res = eng.replay(log)
+    assert [r["batch_id"] for r in res if r["skipped"]] == [0, 1]
+    m = eng.metrics().toPandas()
+    assert sorted(m["batch_id"]) == [0, 1, 2]
+    assert m["rows_in"].sum() == 900
+    lineage = eng.bucket_metrics().groupBy("batch_id").sum("events").collect()
+    assert {r["batch_id"]: r["sum(events)"] for r in lineage} == dict(
+        zip(m["batch_id"], m["rows_in"])
+    )

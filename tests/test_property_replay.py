@@ -30,6 +30,8 @@ CASE = st.fixed_dictionaries(
         "p_update": st.floats(min_value=0.0, max_value=0.3),
         "mode": st.sampled_from(["cow", "mor"]),
         "lww_strategy": st.sampled_from(["broadcast", "agg", "salted"]),
+        # one replay loop at every depth: 1 is the sequential replay
+        "pipeline_depth": st.sampled_from([1, 2, 4]),
     }
 )
 
@@ -72,7 +74,9 @@ def test_replay_matches_oracle_for_random_shapes(spark, mk_engine, case):
     pdf = log.toPandas()
     want = apply_log_oracle(pdf)
     eng = mk_engine(case["mode"], case["lww_strategy"])
-    eng.replay(log)
+    results = eng.replay(log, pipeline_depth=case["pipeline_depth"])
+    for r in results:
+        assert set(r["timings_ms"]) == {"plan", "write", "stats_wait", "commit"}
     got = (
         eng.read_state()
         .select("repo", "path", "commit", "lang", "content", "content_sha256")
@@ -94,6 +98,7 @@ CRASH_CASE = st.fixed_dictionaries(
         "mode": st.sampled_from(["cow", "mor"]),
         "strategy_before": st.sampled_from(["broadcast", "agg", "salted"]),
         "strategy_after": st.sampled_from(["broadcast", "agg", "salted"]),
+        "pipeline_depth": st.sampled_from([1, 2, 4]),
     }
 )
 
@@ -129,14 +134,15 @@ def test_crash_resume_matches_oracle_for_random_shapes(
         spark, root, num_buckets=3, mode=case["mode"],
         lww_strategy=case["strategy_before"], compact_threshold=2,
     )
-    eng1.replay(log, batches=list(range(k)))
+    depth = case["pipeline_depth"]
+    eng1.replay(log, batches=list(range(k)), pipeline_depth=depth)
     del eng1  # crash at the k-th commit boundary
 
     eng2 = ReplayEngine(
         spark, root, num_buckets=3, mode=case["mode"],
         lww_strategy=case["strategy_after"], compact_threshold=2,
     )
-    eng2.replay(log)  # applied prefix fences out; remainder applies
+    eng2.replay(log, pipeline_depth=depth)  # applied prefix fences out; remainder applies
 
     def state(eng):
         return (
@@ -234,6 +240,8 @@ DDL_CASE = st.fixed_dictionaries(
         "n_ops": st.integers(min_value=1, max_value=6),
         "op_seed": st.integers(min_value=0, max_value=2**31 - 1),
         "crash_at": st.integers(min_value=1, max_value=4),  # mod num_batches
+        # DDL batches are pipeline barriers; batches between them overlap
+        "pipeline_depth": st.sampled_from([1, 2, 4]),
     }
 )
 
@@ -323,11 +331,12 @@ def test_random_ddl_sequences_with_crash_resume(spark, tmp_path_factory, case):
     root = str(tmp_path_factory.mktemp("ddlprop") / "t")
     k = 1 + (case["crash_at"] % case["num_batches"])
     eng1 = ReplayEngine(spark, root, num_buckets=3, mode=case["mode"], compact_threshold=2)
-    eng1.replay(log, batches=list(range(k)), schema_ops=ops_df)
+    depth = case["pipeline_depth"]
+    eng1.replay(log, batches=list(range(k)), schema_ops=ops_df, pipeline_depth=depth)
     del eng1  # crash at the k-th commit boundary
 
     eng = ReplayEngine(spark, root, num_buckets=3, mode=case["mode"], compact_threshold=2)
-    eng.replay(log, schema_ops=ops_df)  # prefix fences out; rest applies
+    eng.replay(log, schema_ops=ops_df, pipeline_depth=depth)  # prefix fences out; rest applies
 
     state = eng.read_state()
     got = (

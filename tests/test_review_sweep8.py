@@ -115,3 +115,29 @@ def test_ops_feed_validated_once_per_content(spark, tmp_path, monkeypatch):
     with pytest.raises(ValueError, match="key column"):
         eng.replay(log, schema_ops=bad)
     assert len(calls) == 2
+
+
+def test_ops_feed_revalidated_after_out_of_band_schema_change(spark, tmp_path):
+    """The ops-feed memo is keyed on the table's schema version too: a
+    validated two-op feed whose second column is then added out of band
+    must be refused by the dry run BEFORE its first op commits (a
+    content-only key skipped the dry run and half-applied the feed)."""
+    from etl_spark.schema import SCHEMA_EVOLUTION_SCHEMA
+
+    log = generate_changelog(
+        spark, 600, seed=5, n_repos=3, paths_per_repo=10, num_batches=3
+    )
+    ops = spark.createDataFrame(
+        [(250, "add_column", "a1", json.dumps({"type": "int"})),
+         (450, "add_column", "a2", json.dumps({"type": "int"}))],
+        SCHEMA_EVOLUTION_SCHEMA,
+    )
+    eng = ReplayEngine(spark, str(tmp_path / "t"), num_buckets=2)
+    eng.replay(log, batches=[0], schema_ops=ops)  # validates; both ops pending
+    eng.table.add_column("a2", "int")  # out of band: the schema version bumps
+    sv = eng.table.current_snapshot().current_schema_version
+    with pytest.raises(ValueError, match="already exists"):
+        eng.replay(log, schema_ops=ops)
+    snap = eng.table.current_snapshot()
+    assert snap.current_schema_version == sv
+    assert "a1" not in snap.schema.names()

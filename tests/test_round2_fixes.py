@@ -40,8 +40,6 @@ def test_crash_between_evolution_and_data_commit(spark, tmp_path, changelog, mon
     """VERDICT r01 #4: the evolution commit records its own op offset in
     applied_schema_ops atomically — a crash BEFORE the batch's data
     commit must not re-apply the op (add_column would raise) on resume."""
-    import etl_spark.cdc.replay as replay_mod
-
     root = str(tmp_path / "t")
     ops = spark.createDataFrame(
         [(450, "add_column", "size_bytes", json.dumps({"type": "int"}))],
@@ -51,16 +49,17 @@ def test_crash_between_evolution_and_data_commit(spark, tmp_path, changelog, mon
     eng.replay(changelog, batches=[0], schema_ops=ops)
 
     # crash exactly between the evolution commit and the data commit of
-    # batch 1 (the batch whose range covers offset 450)
-    real_merge = replay_mod.merge_batch
+    # batch 1 (the batch whose range covers offset 450): the replay
+    # loop's write seam of the (cow) engine fails after the DDL barrier
+    real_write = ManifestTable.write_rewrite_files
 
     def crash(*a, **k):
         raise RuntimeError("simulated crash after evolution commit")
 
-    monkeypatch.setattr(replay_mod, "merge_batch", crash)
+    monkeypatch.setattr(ManifestTable, "write_rewrite_files", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng.apply_batch(changelog, 1, schema_ops=ops)
-    monkeypatch.setattr(replay_mod, "merge_batch", real_merge)
+    monkeypatch.setattr(ManifestTable, "write_rewrite_files", real_write)
 
     # the evolution snapshot is current and already carries the op record
     snap = eng.table.current_snapshot()

@@ -66,12 +66,11 @@ def test_flagship_exposes_expire_knobs():
 def test_merge_conf_restored_when_stats_thread_start_fails(
     spark, tmp_path, monkeypatch
 ):
-    """The mor merge's shuffle-partitions bracket must restore the conf
-    even when the concurrent stats thread fails to START (thread
-    exhaustion): start() raising after the conf override but outside
-    the try would pin shuffle.partitions to num_buckets for the session
-    lifetime."""
-    import etl_spark.cdc.merge as merge_mod
+    """The replay loop's shuffle-partitions override must restore the
+    conf even when the concurrent stats task fails to START (thread
+    exhaustion): a submit raising after the conf override must not pin
+    shuffle.partitions to num_buckets for the session lifetime."""
+    from concurrent.futures import ThreadPoolExecutor
 
     log = generate_changelog(
         spark, 300, seed=5, n_repos=3, paths_per_repo=10, num_batches=1
@@ -80,19 +79,18 @@ def test_merge_conf_restored_when_stats_thread_start_fails(
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
 
-    real_thread = merge_mod.threading.Thread
+    real_submit = ThreadPoolExecutor.submit
 
-    class FailingStatsThread(real_thread):
-        def start(self):  # only the merge's stats thread fails
-            target = getattr(self, "_target", None)
-            if target is not None and getattr(target, "__name__", "") == "_collect_stats":
-                raise RuntimeError("can't start new thread")
-            return super().start()
+    def failing_submit(self, fn, /, *args, **kwargs):
+        # only the loop's stats tasks fail to start
+        if self._thread_name_prefix.startswith("replay-stats"):
+            raise RuntimeError("can't start new thread")
+        return real_submit(self, fn, *args, **kwargs)
 
-    monkeypatch.setattr(merge_mod.threading, "Thread", FailingStatsThread)
+    monkeypatch.setattr(ThreadPoolExecutor, "submit", failing_submit)
     with pytest.raises(RuntimeError, match="can't start new thread"):
         eng.apply_batch(log, 0)
-    monkeypatch.setattr(merge_mod.threading, "Thread", real_thread)
+    monkeypatch.setattr(ThreadPoolExecutor, "submit", real_submit)
 
     assert spark.conf.get(key) == before
     # the batch was not committed — a retry applies it cleanly

@@ -311,3 +311,31 @@ def test_cli_audit_no_count_with_bounds_refused(spark, tmp_path, changelog, caps
         main(["audit", "--table", table, "--no-count", "--max-row-growth", "0.1"])
     # the metadata-only audit alone still works
     assert main(["audit", "--table", table, "--no-count"]) == 0
+
+
+def test_publish_refuses_window_discarded_before_its_commit(
+    spark, tmp_path, changelog, monkeypatch
+):
+    """A discard landing between publish's check and its commit must
+    make publish refuse, not commit a flag removal and report a
+    published version for a window that was discarded."""
+    root = str(tmp_path / "t")
+    eng = ReplayEngine(spark, root, num_buckets=4, mode="mor")
+    eng.replay(changelog, batches=[0])
+    eng.stage_begin()
+    eng.replay(changelog, batches=[1])
+    other = ReplayEngine.attach(spark, root)
+    real_update = eng.table.update_properties
+
+    def discard_first(*a, **kw):
+        other.discard_staged()  # the racing discard lands first
+        monkeypatch.setattr(eng.table, "update_properties", real_update)
+        return real_update(*a, **kw)
+
+    monkeypatch.setattr(eng.table, "update_properties", discard_first)
+    v = eng.table.current_snapshot().version
+    with pytest.raises(ValueError, match="no WAP staging window"):
+        eng.publish_staged()
+    assert not eng.staged()
+    assert eng.applied_batches() == [0]
+    assert eng.table.current_snapshot().version == v + 1  # the discard only
