@@ -19,7 +19,8 @@ Two sections:
 
 Env knobs:
     SPARK_GRAFT_SF_DIR      input tables (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS        local[<n>] cores (default 32)
+    SPARK_GRAFT_CPUS        local[<n>] cores (default: the cores this
+                            process may run on)
     ETL_SPARK_BENCH_EVENTS  changelog size (default 2_000_000)
     ETL_SPARK_BENCH_BATCHES replay micro-batches (default 4)
     ETL_SPARK_BENCH_SKIP    comma-separated query names to skip
@@ -105,10 +106,10 @@ def bench_cdc_replay(
         changelog = spark.read.parquet(log_path + "_sharded")
 
     # warm the executor-side machinery once before timing: JIT/codegen
-    # for the WHOLE merge path (scan -> thin agg -> broadcast join ->
-    # Arrow UDF -> bucket write -> compaction -> resolve), plus one
-    # Python UDF worker per core. Measured ~12 s of first-batch cold cost
-    # at every parallelism level — a fixed per-process cost any
+    # for the WHOLE merge path (scan -> thin agg -> Arrow UDF in the
+    # scan -> broadcast join -> bucket write -> compaction -> resolve),
+    # plus one Python UDF worker per core. Measured ~12 s of first-batch
+    # cold cost at every parallelism level — a fixed per-process cost any
     # long-running ingest pays once, not per batch; excluding it measures
     # sustained throughput, which is the metric.
     #
@@ -192,7 +193,7 @@ def bench_cdc_replay(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # 2M events x 4 batches matches the scaling-capture config and
     # amortizes the fixed per-batch driver cost over a longer sustained
     # window (1M measures ~15% lower events/sec from the same engine).

@@ -26,8 +26,12 @@ reference analog: skip-if-already-applied,
 ``src/byggesager/byggesager.py:191-197``).
 
 The winner kernel is chosen once, by ``batch_winners``, from a key
-upper bound. The agg kernels' map-side partial aggregation collapses a
-hot key per input partition before the shuffle,
+upper bound. It is also the one place, in both modes, where a batch
+gets its ``content_sha256``: the normalize+sha256 pandas_udf runs over
+the batch's events before the kernel, in the scan's own tasks, so the
+Python task count follows the batch's input splits, not
+``num_buckets``. The agg kernels' map-side partial aggregation
+collapses a hot key per input partition before the shuffle,
 ``lww_strategy='salted'`` pre-splits each key into ``SALT_PARTITIONS``
 explicit partial groups (for payloads too wide for map-side combine to
 absorb), and AQE skew-join splitting is enabled session-wide
@@ -142,7 +146,8 @@ def _bucket_rollup(maxes: DataFrame, keys: list[str], num_buckets: int) -> DataF
 
 
 def _schema_projection(winners: DataFrame, snap: Snapshot, batch_id: int) -> DataFrame:
-    """Project winner events to the current table schema. Rename-aware: a
+    """Project winner events to the current table schema, passing their
+    ``content_sha256`` through. Rename-aware: a
     column renamed on the table (e.g. lang -> language) still arrives
     from the wire under its original name, so we resolve by column id
     back to the v1 (wire) name. Added columns the events don't carry get
@@ -158,7 +163,9 @@ def _schema_projection(winners: DataFrame, snap: Snapshot, batch_id: int) -> Dat
         for sc in snap.schemas[v].columns:
             wire_names.setdefault(sc.id, sc.name)
     event_cols = set(winners.columns)
-    computed = {"content_sha256", "_ingest_offset", "_ingest_batch", "_deleted"}
+    # content_sha256 is not in the set: the winners already carry it
+    # (``batch_winners``), so it resolves like any wire column
+    computed = {"_ingest_offset", "_ingest_batch", "_deleted"}
     proj = []
     for c in snap.schema.columns:
         if c.name in computed:
@@ -184,10 +191,18 @@ def batch_winners(
     broadcast_key_budget: int,
     keys_upper_bound: int | None,
 ) -> tuple[DataFrame, str]:
-    """One LWW winner per key of a batch, and the kernel's name
-    (``lww_path``: ``broadcast``, ``agg``, ``agg-fallback`` or
-    ``agg-salted``). ``maxes`` is the batch's thin aggregate
-    (``_thin_maxes``).
+    """One LWW winner per key of a batch, with its ``content_sha256``,
+    and the kernel's name (``lww_path``: ``broadcast``, ``agg``,
+    ``agg-fallback`` or ``agg-salted``). ``maxes`` is the batch's thin
+    aggregate (``_thin_maxes``), built from the content-free events.
+
+    The fingerprint is attached to the payload events BEFORE the
+    kernel, so the pandas_udf runs in the tasks that scan the batch —
+    a Python task per input split, not per bucket — and pays for the
+    events that lose LWW too. After the kernel it would sit between
+    the hash-agg kernels' aggregation and the bucket repartition,
+    which Spark could then no longer elide: content would cross the
+    shuffle twice.
 
     ``keys_upper_bound`` proves the winner broadcast fits the budget
     without a gating job: mor passes its events bound (distinct keys <=
@@ -205,6 +220,7 @@ def batch_winners(
     kernel is max_by over full rows, map-side combined so a hot repo
     collapses before the shuffle; 'salted' adds an explicit (key, salt)
     pre-combine stage for payloads too wide for map-side combine."""
+    batch_events = with_content_sha256(batch_events)
     if (
         lww_strategy == "broadcast"
         and keys_upper_bound is not None
@@ -239,9 +255,10 @@ def plan_mor_batch(
 
     Nothing in the mor write needs the stats: the bucket set falls out
     of the append itself, and the winner kernel is chosen from
-    ``events_upper_bound``. Under the hash-agg kernels, the winners
-    exchange doubles as the bucket write exchange when
-    shuffle.partitions == num_buckets."""
+    ``events_upper_bound``. The winners arrive fingerprinted
+    (``batch_winners``), so the write runs no Python. Under the
+    hash-agg kernels, the winners exchange doubles as the bucket write
+    exchange when shuffle.partitions == num_buckets."""
     if delete_guard is not None:
         batch_events = _demote_guarded(batch_events, keys, delete_guard)
     maxes_plan = _thin_maxes(batch_events, keys)
@@ -306,10 +323,12 @@ def cow_batch_survivors(
     broadcast_key_budget: int = BROADCAST_KEY_BUDGET,
     tombstone_commit_watermark: str | None = None,
 ) -> tuple[DataFrame, str]:
-    """Stage 2 of the cow plan: LWW winners, union with the touched
-    buckets read from ``snap``, global resolve, tombstone aging.
-    Returns ``(survivors, lww_path)`` — the frame
-    ``write_rewrite_files`` consumes, and the winner kernel's name."""
+    """Stage 2 of the cow plan: LWW winners (fingerprinted by
+    ``batch_winners``, as under mor), union with the touched buckets
+    read from ``snap`` (stored rows carry their own fingerprint),
+    global resolve, tombstone aging. Returns ``(survivors, lww_path)``
+    — the frame ``write_rewrite_files`` consumes, and the winner
+    kernel's name."""
     keys = table.key_columns
     # the winners resolve by the TABLE's key columns — a table keyed on
     # other columns must not fall back to the module default
@@ -318,9 +337,7 @@ def cow_batch_survivors(
         stats["keys"],
     )
     touched = sorted(stats["buckets"])
-
-    # fingerprint new rows before the union (stored rows carry theirs)
-    source = with_content_sha256(_schema_projection(winners, snap, batch_id))
+    source = _schema_projection(winners, snap, batch_id)
     existing = (
         table.read(buckets=touched, snapshot=snap)
         .withColumn("__op", F.lit(None).cast("string"))

@@ -61,7 +61,6 @@ from etl_spark.cdc.merge import (
     plan_mor_batch,
     resolve_state,
 )
-from etl_spark.functions.normalize import with_content_sha256
 from etl_spark.schema import INGEST_METRICS_SCHEMA
 from etl_spark.table.manifest import (
     WAP_BASE_PROP,
@@ -698,8 +697,8 @@ class ReplayEngine:
 
         ``at_tag`` time-travels by NAME (``ManifestTable.tag``): the
         tagged version is exempt from retention for as long as the tag
-        exists, so tag-addressed reads cannot race an expiry tick the
-        way raw-version travel can."""
+        exists (see ``ManifestTable.snapshot_at_tag`` for a tag that
+        lands while an expiry tick is deleting)."""
         preds = list(where or [])
         bad_ops = sorted({op for _, op, _ in preds} - {"=", "<", "<=", ">", ">=", "in"})
         if bad_ops:
@@ -1289,10 +1288,10 @@ class ReplayEngine:
         """Merge-on-read plan and write/commit pair: append the batch's
         winners as delta files. Nothing is read from the table, so
         in-flight writes never conflict (``gate`` is unused). The
-        normalize+sha256 pandas_udf runs as the writer's post-shuffle
-        hook — after the bucket exchange, at full write parallelism —
-        and the thin stats rollup is collected concurrently, off the
-        critical path."""
+        delta arrives fingerprinted (the normalize+sha256 pandas_udf
+        runs in the batch scan's tasks, before the winner kernel), so
+        the bucketed write is JVM-only, and the thin stats rollup is
+        collected concurrently, off the critical path."""
         delta, per_bucket_plan, lww_path = plan_mor_batch(
             snap, self.table.key_columns, batch, batch_id,
             lww_strategy=self.lww_strategy,
@@ -1302,7 +1301,7 @@ class ReplayEngine:
         )
         return {
             "lww_path": lww_path,
-            "write": lambda: self.table.write_delta_files(delta, snap, with_content_sha256),
+            "write": lambda: self.table.write_delta_files(delta, snap),
             "stats": per_bucket_plan.collect,
             "commit": lambda written, props: self.table.commit_appended(
                 written, snap.current_schema_version, props

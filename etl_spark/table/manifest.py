@@ -1209,7 +1209,7 @@ class ManifestTable:
     # ---------- write ----------
 
     def _write_bucketed(
-        self, df: DataFrame, snap: Snapshot, tag: str, post_shuffle=None,
+        self, df: DataFrame, snap: Snapshot, tag: str,
         files_per_bucket: int = 1, sort_within: list[str] | None = None,
     ) -> dict[int, str]:
         """Write df partitioned by key bucket. Returns {bucket: dir} for
@@ -1220,10 +1220,9 @@ class ManifestTable:
         The repartition pins EXACTLY num_buckets * files_per_bucket
         partitions (a user-specified count AQE will not coalesce): no
         tiny-file explosion, and write parallelism that holds at any data
-        size. ``post_shuffle`` (e.g. the content-sha256 pandas_udf) is
-        applied AFTER that exchange so expensive per-row compute runs at
-        full write parallelism instead of on however few partitions the
-        upstream aggregation coalesced to.
+        size. ``df`` arrives with every column computed: per-row Python
+        (the content-sha256 pandas_udf) runs where the batch is read,
+        not here, so the write costs no Python task per bucket.
 
         ``files_per_bucket`` decouples write/compaction parallelism from
         the bucket layout: hash-partitioning on the keys with
@@ -1242,8 +1241,6 @@ class ManifestTable:
         # same murmur3-mod, partition i holds only bucket i % num_buckets
         # — perfectly aligned, no collisions
         out = out.repartition(snap.num_buckets * k, *[F.col(c) for c in self.key_columns])
-        if post_shuffle is not None:
-            out = post_shuffle(out)
         if sort_within:
             # per-TASK sort (no extra exchange): each parquet file comes
             # out key-ordered, so its ROW GROUPS carry tight min/max
@@ -1456,7 +1453,7 @@ class ManifestTable:
         return new
 
     def append_buckets(
-        self, df: DataFrame, properties_update: dict | None = None, post_shuffle=None,
+        self, df: DataFrame, properties_update: dict | None = None,
         files_per_bucket: int = 1,
     ) -> Snapshot:
         """Merge-on-read commit: append ``df``'s rows as DELTA files to the
@@ -1466,14 +1463,11 @@ class ManifestTable:
         bucket. Readers resolve base+delta with the engine's LWW rule;
         ``delta_counts`` drives compaction scheduling."""
         snap = self.current_snapshot()
-        written = self.write_delta_files(
-            df, snap, post_shuffle=post_shuffle, files_per_bucket=files_per_bucket
-        )
+        written = self.write_delta_files(df, snap, files_per_bucket=files_per_bucket)
         return self.commit_appended(written, snap.current_schema_version, properties_update)
 
     def write_delta_files(
-        self, df: DataFrame, snap: Snapshot, post_shuffle=None,
-        files_per_bucket: int = 1,
+        self, df: DataFrame, snap: Snapshot, files_per_bucket: int = 1,
     ) -> dict[int, dict]:
         """The WRITE half of ``append_buckets`` — data files land on disk
         but no snapshot references them yet (invisible; orphan-vacuumed
@@ -1486,9 +1480,7 @@ class ManifestTable:
         from the fresh parquet footers) so the pipelined replay pays the
         stats cost in the overlapped write phase, not on the serialized
         commit path."""
-        written = self._write_bucketed(
-            df, snap, "dl", post_shuffle=post_shuffle, files_per_bucket=files_per_bucket
-        )
+        written = self._write_bucketed(df, snap, "dl", files_per_bucket=files_per_bucket)
         return self._entries(written, snap.current_schema_version, "delta", snap)
 
     def commit_appended(
@@ -2134,9 +2126,13 @@ class ManifestTable:
         }
 
     def snapshot_at_tag(self, name: str) -> Snapshot:
-        """Time travel by name — the tagged version is retained by
-        expiry for as long as the tag exists, so this cannot race a
-        retention tick the way raw-version travel can."""
+        """Time travel by name. ``expire_snapshots`` keeps every version
+        tagged when it computes its keep set, and re-reads the tags
+        immediately before deleting, so a tag committed during most of
+        a retention tick is honoured too. A tag that lands in the last
+        window, between that re-read and the deletion, can still lose
+        its version: this then raises ``FileNotFoundError`` and the tag
+        should be dropped."""
         t = self.tags()
         if name not in t:
             raise ValueError(f"no tag {name!r} (tags: {sorted(t)})")
@@ -2166,12 +2162,16 @@ class ManifestTable:
         cur_snap = self.current_snapshot()
         cur = cur_snap.version
         keep = set(sorted(versions)[-keep_last:]) | {cur}
+
+        def tagged(snap: Snapshot) -> set[int]:
+            return {
+                int(v) for k, v in snap.properties.items()
+                if k.startswith(TAG_PROP_PREFIX)
+            } & set(versions)
+
         # tagged versions are pinned: a tag IS the statement "keep this
         # exact state" — expirable again the moment the tag is dropped
-        keep |= {
-            int(v) for k, v in cur_snap.properties.items()
-            if k.startswith(TAG_PROP_PREFIX)
-        } & set(versions)
+        keep |= tagged(cur_snap)
         if cur_snap.properties.get(WAP_STAGED_PROP) == "true":
             # a staged window must stay discardable: published readers
             # resolve the WAP base and discard_staged rolls back to it,
@@ -2216,13 +2216,13 @@ class ManifestTable:
                 seen_shard_keys.add(key)
                 _add_live(_read_manifest_shard(self._manifest_dir, key))
 
-        for v in sorted(keep):
+        def _add_snapshot(v):
             snap = self.snapshot_at(v)
             fm = snap.files if isinstance(snap.files, ShardedFileMap) else None
             if fm is None:  # v2 embedded entries
                 for es in snap.files.values():
                     _add_live(es)
-                continue
+                return
             gkeys = fm.group_keys()
             # buckets not covered by a group (v3 flat refs, or any
             # not-yet-absorbed override) walk individually
@@ -2238,6 +2238,9 @@ class ManifestTable:
                 seen_group_keys.add(gk)
                 for ref in _read_group_file(self._manifest_dir, gk).values():
                     _add_shard(_ref_key(ref))
+
+        for v in sorted(keep):
+            _add_snapshot(v)
 
         candidates = []
         matched = 0
@@ -2259,6 +2262,16 @@ class ManifestTable:
                 f"file entries but no directory under {self._data_dir!r} matched a "
                 "live write dir — refusing to vacuum (manifest/root mismatch?)"
             )
+        # a tag committed since the keep set was computed pins a version
+        # this tick was about to delete: re-read the tags right before
+        # deleting, and keep those versions with every dir they reference
+        late = tagged(self.current_snapshot()) & set(expired)
+        if late:
+            keep |= late
+            expired = [v for v in expired if v not in late]
+            for v in sorted(late):
+                _add_snapshot(v)
+            candidates = [c for c in candidates if os.path.realpath(c) not in live_dirs]
         # unlink the expired snapshot DOCS before the (slow) data-dir
         # vacuum: another handle's snapshot_at cache-hit guard stats the
         # doc, so the doc must disappear before the data it points at —

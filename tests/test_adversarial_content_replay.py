@@ -35,8 +35,13 @@ HOSTILE_CONTENT = [
 ]
 
 
+# the fingerprint is attached before the winner kernel, so it reaches
+# the table through a broadcast join under one kernel and a max_by
+# struct under the other ('salted' has the agg shape; the property
+# test covers it)
+@pytest.mark.parametrize("lww_strategy", ["broadcast", "agg"])
 @pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_replay_parity_on_hostile_content(spark, tmp_path, mode):
+def test_replay_parity_on_hostile_content(spark, tmp_path, mode, lww_strategy):
     log = generate_changelog(
         spark, 240, seed=11, n_repos=2, paths_per_repo=8, num_batches=3
     )
@@ -61,9 +66,10 @@ def test_replay_parity_on_hostile_content(spark, tmp_path, mode):
 
     eng = ReplayEngine(
         spark, str(tmp_path / f"t_{mode}"), num_buckets=3, mode=mode,
-        compact_threshold=2,
+        compact_threshold=2, lww_strategy=lww_strategy,
     )
-    eng.replay(log)
+    results = eng.replay(log)
+    assert {r["lww_path"] for r in results} == {lww_strategy}
     got = (
         eng.read_state()
         .select("repo", "path", "commit", "lang", "content", "content_sha256")

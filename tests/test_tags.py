@@ -1,9 +1,9 @@
 """Named snapshot refs (Iceberg tag analog).
 
 A tag is the durable "keep this exact state": expire_snapshots keeps
-every tagged version until the tag is dropped, and tag-addressed time
-travel therefore cannot race a retention tick. Carried as snapshot
-properties, so tags ride every commit for free.
+every tagged version until the tag is dropped, including a version
+tagged while the tick is walking the kept snapshots. Carried as
+snapshot properties, so tags ride every commit for free.
 """
 
 from __future__ import annotations
@@ -59,6 +59,34 @@ def test_tag_pins_version_against_retention(spark, tmp_path, changelog):
     assert v not in eng.table._snapshot_versions()
     with pytest.raises(ValueError, match="no tag"):
         eng.read_state(at_tag="baseline")
+
+
+def test_tag_committed_during_expiry_keeps_its_version(spark, tmp_path, monkeypatch, changelog):
+    """A tag() commit from another handle lands after expire_snapshots
+    computed its keep set (during its walk of the kept snapshots) and
+    pins a version the tick was about to delete: the re-read before
+    deleting keeps the snapshot and its data."""
+    from etl_spark.table.manifest import ManifestTable
+
+    eng = ReplayEngine(spark, str(tmp_path / "t"), num_buckets=4, mode="mor")
+    eng.replay(changelog, batches=[0])
+    old = eng.table.current_snapshot().version
+    tagged_state = _state(eng)
+    eng.replay(changelog, batches=[1, 2, 3])
+    other = ManifestTable(spark, eng.table.root, eng.table.key_columns)
+    walk = eng.table.snapshot_at
+
+    def walk_while_tagging(v):
+        if not other.tags():
+            other.tag("late", version=old)
+        return walk(v)
+
+    monkeypatch.setattr(eng.table, "snapshot_at", walk_while_tagging)
+    out = eng.table.expire_snapshots(keep_last=1)
+    monkeypatch.undo()
+    assert other.tags() == {"late": old}
+    assert old not in out["expired"] and out["expired"]
+    pd.testing.assert_frame_equal(_state(eng, at_tag="late"), tagged_state)
 
 
 def test_tag_lifecycle_refusals(spark, tmp_path, changelog):
