@@ -49,11 +49,12 @@ O(num_buckets / GROUP_SIZE) group refs. Untouched buckets' shards AND
 untouched groups' ref tables are shared by reference across snapshots,
 exactly how Iceberg shares unchanged manifests through the manifest
 list — this removes the last O(num_buckets)-per-commit metadata term
-(format v3 kept the ref table flat in the document: ~90 B/bucket, ~9 MB
-per commit at 10^5 buckets; v4 writes ~30 B/group ≈ 47 KB document +
+(a flat ref table in the document would cost ~90 B/bucket, ~9 MB per
+commit at 10^5 buckets; the groups cost ~30 B/group ≈ 47 KB document +
 ~6 KB per touched group). ``expire_snapshots`` garbage-collects shards
-and group files referenced by no surviving snapshot. Format v3
-(flat ref table) and v2 (entries embedded) snapshots remain readable.
+and group files referenced by no surviving snapshot. v4 is the only
+format the engine reads or writes: a snapshot document of any other
+format refuses to attach.
 
 Reference analogs: keyed mutable store / check-then-insert upsert
 (``src/capa/capa_data.py:9-24,54-72``), partition-overwrite upsert
@@ -69,6 +70,7 @@ import operator
 import os
 import re
 import uuid
+from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -79,24 +81,23 @@ from etl_spark.table.stats import collect_dir_stats, entry_excludes
 
 _BUCKET_COL = "__bucket"
 
-# File-entry statistics (bytes / rows / per-column min-max) are recorded
-# at commit time for data skipping; disable only to reproduce legacy
-# (pre-stats) snapshots in tests.
-RECORD_STATS = os.environ.get("ETL_SPARK_RECORD_STATS", "1") != "0"
-
 # Recorded in every snapshot. A table written under a different bucket
 # function would silently route cow merges to the wrong buckets (stale
 # duplicate rows for a key in two buckets, no error) — so mismatches on
 # attach raise instead.
 BUCKET_FN = "murmur3_pmod"
-# v4 = v3 plus the bucket->shard ref table sharded into content-
-# addressed GROUP files so the snapshot document is O(buckets /
-# GROUP_SIZE), not O(buckets); v3 = per-bucket entry lists in
-# content-addressed manifest shards referenced flat from the snapshot
-# (Iceberg manifest-list analog; still readable); v2 = entries embedded
-# in the snapshot JSON (still readable); v1 = v2 without
-# bucket_fn/format_version fields.
+# v4 = per-bucket entry lists in content-addressed manifest shards,
+# referenced from content-addressed GROUP files that the snapshot
+# document lists, so the document is O(buckets / GROUP_SIZE). The only
+# format read or written; earlier formats refuse to attach.
 FORMAT_VERSION = 4
+
+# How to get a table this build refuses to attach into a form it can:
+# every refusal of a table's recorded format or layout names it.
+_MIGRATE = (
+    "To migrate, re-create the table at a new root and replay its change "
+    "feed into it."
+)
 
 # Buckets per manifest-list group file. Commit metadata ~ 30 B *
 # num_buckets/GROUP_SIZE (document) + touched_groups * 90 B * GROUP_SIZE
@@ -273,27 +274,64 @@ class Snapshot:
     current_schema_version: int
     schemas: dict[int, TableSchema]
     num_buckets: int
-    # bucket -> list of {"path": dir, "sv": schema_version,
-    #                      "kind": "base"|"delta"} (kind absent on legacy
-    #                      snapshots — readers fall back to the write-dir tag)
-    files: dict[int, list[dict]]
+    # bucket -> list of {"path": dir, "sv": schema_version, "kind":
+    #   "base"|"delta", "nb": bucket count, "bytes", "rows", "stats"}.
+    # A ShardedFileMap once read or committed; create / overwrite /
+    # rebucket build a plain dict, which to_json adopts.
+    files: Mapping[int, list[dict]]
     properties: dict = field(default_factory=dict)
     bucket_fn: str = BUCKET_FN
     format_version: int = FORMAT_VERSION
 
-    def to_json(self, manifest_dir: str | None = None) -> str:
-        """Serialize. With ``manifest_dir`` (format v4), each bucket's
-        entry list is written to an immutable content-addressed shard
-        file there (skipped when the identical shard already exists —
-        untouched buckets cost ZERO metadata bytes per commit); the
-        bucket->shard ref table is itself sharded into content-addressed
-        GROUP files of ``GROUP_SIZE`` buckets, and the snapshot document
-        carries only the group references — groups with no touched
-        bucket reuse the parent's group file verbatim, so commit
-        document+ref bytes are O(touched groups + num_groups), never
-        O(num_buckets). Without ``manifest_dir``, entries are embedded
-        (v2 form, kept for tooling/tests)."""
-        d = {
+    def to_json(self, manifest_dir: str) -> str:
+        """Serialize. Each bucket's entry list is written to an
+        immutable content-addressed shard file in ``manifest_dir``
+        (skipped when the identical shard already exists — untouched
+        buckets cost ZERO metadata bytes per commit); the bucket->shard
+        ref table is itself sharded into content-addressed GROUP files
+        of ``GROUP_SIZE`` buckets, and the snapshot document carries
+        only the group references — groups with no touched bucket reuse
+        the parent's group file verbatim, so commit document+ref bytes
+        are O(touched groups + num_groups), never O(num_buckets). A
+        plain-dict ``files`` is adopted as a map of fresh buckets, so
+        afterwards ``files`` is a ``ShardedFileMap`` matching its
+        on-disk form."""
+        if not isinstance(self.files, ShardedFileMap):
+            self.files = ShardedFileMap({}, manifest_dir, overrides=self.files)
+        fm = self.files
+        gsize = fm.group_size or GROUP_SIZE
+        # clean groups: no touched bucket — reuse the group file key
+        # without hydrating it (or any of its shards)
+        groups = fm.group_keys()
+        # every bucket NOT covered by a clean group gets its ref
+        # (re)built; shard keys of untouched buckets inside dirty
+        # groups are reused without hydration
+        rebuild: dict[int, dict] = {}
+        new_shards: dict[int, tuple[str, dict]] = {}
+        for b in fm.buckets_outside_groups(set(groups)):
+            key = fm.ref_for(b)
+            if key is not None:
+                # untouched bucket: reuse the shard ref AND its stored
+                # summary (never hydrated here)
+                meta = fm._meta[b]
+            else:
+                entries = fm[b]
+                meta = _shard_meta(entries)
+                key = _write_manifest_shard(manifest_dir, entries)
+                new_shards[b] = (key, meta)
+            rebuild.setdefault(b // gsize, {})[str(b)] = {"k": key, **meta}
+        new_groups = {
+            g: _write_group_file(manifest_dir, contents)
+            for g, contents in rebuild.items()
+        }
+        groups.update(new_groups)
+        # record what was just written back into the map, so a snapshot
+        # kept in the table's cache serializes children against CLEAN
+        # groups — without this, groups touched anywhere in a cached
+        # lineage would be rebuilt on every later commit
+        # (O(lifetime-touched) instead of O(touched))
+        fm._absorb_serialized(new_shards, new_groups, gsize)
+        return json.dumps({
             "version": self.version,
             "current_schema_version": self.current_schema_version,
             "schemas": {str(v): s.to_json() for v, s in self.schemas.items()},
@@ -301,110 +339,42 @@ class Snapshot:
             "properties": self.properties,
             "bucket_fn": self.bucket_fn,
             "format_version": self.format_version,
-        }
-        if manifest_dir is None:
-            d["files"] = {str(b): list(fs) for b, fs in self.files.items()}
-        else:
-            fm = self.files if isinstance(self.files, ShardedFileMap) else None
-            gsize = (fm.group_size if fm is not None else None) or GROUP_SIZE
-            # clean groups: no touched bucket — reuse the group file key
-            # without hydrating it (or any of its shards)
-            groups = dict(fm.group_keys()) if fm is not None else {}
-            # every bucket NOT covered by a clean group gets its ref
-            # (re)built; shard keys of untouched buckets inside dirty
-            # groups are reused without hydration
-            rebuild: dict[int, dict] = {}
-            candidates = (
-                fm.buckets_outside_groups(set(groups))
-                if fm is not None else list(self.files)
-            )
-            new_shards: dict[int, tuple[str, dict]] = {}
-            for b in candidates:
-                key = fm.ref_for(b) if fm is not None else None
-                if key is not None:
-                    # untouched bucket: reuse the shard ref AND its
-                    # stored summary (never hydrated here)
-                    meta = fm._meta.get(b)
-                    refobj = {"k": key, **meta} if meta else key
-                else:
-                    entries = self.files[b]
-                    meta = _shard_meta(entries)
-                    key = _write_manifest_shard(manifest_dir, entries)
-                    refobj = {"k": key, **meta}
-                    new_shards[b] = (key, meta)
-                rebuild.setdefault(b // gsize, {})[str(b)] = refobj
-            new_groups = {
-                g: _write_group_file(manifest_dir, contents)
-                for g, contents in rebuild.items()
-            }
-            groups.update(new_groups)
-            if fm is not None:
-                # record what was just written back into the map, so a
-                # snapshot kept in the table's cache serializes children
-                # against CLEAN groups — without this, groups touched
-                # anywhere in a cached lineage would be rebuilt on every
-                # later commit (O(lifetime-touched) instead of O(touched))
-                fm._absorb_serialized(new_shards, new_groups, gsize)
-            d["groups_ref"] = {str(g): k for g, k in sorted(groups.items())}
-            d["group_size"] = gsize
-        return json.dumps(d, indent=1)
+            "groups_ref": {str(g): k for g, k in sorted(groups.items())},
+            "group_size": gsize,
+        }, indent=1)
 
     @staticmethod
-    def from_json(text: str, manifest_dir: str | None = None) -> "Snapshot":
+    def from_json(text: str, manifest_dir: str) -> "Snapshot":
+        """Parse a format-v4 snapshot document; any other format raises
+        ``ValueError`` naming it. Doubly lazy: a bucket's shard REF
+        parses from its group file on first access, its entries from
+        the shard on first access — point paths touch O(accessed)
+        group+shard files, not the table."""
         d = json.loads(text)
-        if "groups_ref" in d:
-            if manifest_dir is None:
-                raise ValueError(
-                    "format v4 snapshot references manifest groups/shards; "
-                    "pass the table's manifest directory to from_json"
-                )
-            # doubly lazy: a bucket's shard REF parses from its group
-            # file on first access, its entries from the shard on first
-            # access — point paths touch O(accessed) group+shard files,
-            # not the table
-            files = ShardedFileMap(
-                {}, manifest_dir,
-                group_keys={int(g): k for g, k in d["groups_ref"].items()},
-                group_size=int(d["group_size"]),
+        found = d.get("format_version")
+        if found != FORMAT_VERSION:
+            # v1 documents recorded neither format_version nor bucket_fn
+            fmt = "v1" if found is None else f"v{found}"
+            raise ValueError(
+                f"snapshot {d.get('version')} is manifest format {fmt}; this "
+                f"build reads only format v{FORMAT_VERSION} (group and shard "
+                "files under _snapshots/manifests). Refusing to attach. "
+                + _MIGRATE
             )
-        elif "files_ref" in d:
-            if manifest_dir is None:
-                raise ValueError(
-                    "format v3 snapshot references manifest shards; pass the "
-                    "table's manifest directory to from_json"
-                )
-            # lazy: a bucket's entries parse from its shard on first
-            # access — point lookups and bucket-pruned reads touch
-            # O(accessed buckets) shards, not the table. Ref values are
-            # either a bare shard key (early v3) or {"k": key, ...summary}
-            refs, meta = {}, {}
-            for b, v in d["files_ref"].items():
-                key, summary = _parse_ref(v)
-                refs[int(b)] = key
-                if summary:
-                    meta[int(b)] = summary
-            files = ShardedFileMap(refs, manifest_dir, meta=meta)
-        else:
-            files = {int(b): fs for b, fs in d["files"].items()}
-        props = d.get("properties", {})
-        # pre-versioning snapshots (format v1) recorded no bucket_fn,
-        # and every build of THIS engine has only ever written
-        # murmur3_pmod — but that justification only holds for tables
-        # this engine wrote. Gate the default on the engine's own
-        # marker (``key_columns`` has been stamped by create() since
-        # the first release): a marker-less foreign/legacy manifest
-        # gets 'unrecorded', which _check_format refuses to attach,
-        # instead of silently routing merges with the wrong hash.
-        default_fn = BUCKET_FN if props.get("key_columns") else "unrecorded"
         return Snapshot(
             version=d["version"],
             current_schema_version=d["current_schema_version"],
             schemas={int(v): TableSchema.from_json(s) for v, s in d["schemas"].items()},
             num_buckets=d["num_buckets"],
-            files=files,
-            properties=props,
-            bucket_fn=d.get("bucket_fn", default_fn),
-            format_version=d.get("format_version", 1),
+            files=ShardedFileMap(
+                {}, manifest_dir,
+                group_keys={int(g): k for g, k in d["groups_ref"].items()},
+                group_size=int(d["group_size"]),
+            ),
+            properties=d.get("properties", {}),
+            # an absent bucket_fn reads as None, which _check_format refuses
+            bucket_fn=d.get("bucket_fn"),
+            format_version=found,
         )
 
     @property
@@ -432,15 +402,12 @@ def _write_content_addressed(manifest_dir: str, prefix: str, payload) -> str:
     return key
 
 
-def _parse_ref(ref) -> tuple[str, dict]:
-    """Decode a ref-table value — a bare shard-key string (early v3)
-    or ``{"k": key, ...summary}`` when stats were recorded — into
-    ``(shard key, summary dict)``. The ONE decoder for group files,
-    v3 document ref tables, and key-only callers: the ref-object
-    field set lives here and nowhere else."""
-    if isinstance(ref, str):
-        return ref, {}
-    return ref["k"], {f: ref[f] for f in ("n", "d", "by", "dby", "r") if f in ref}
+def _parse_ref(ref: dict) -> tuple[str, dict]:
+    """Decode a group file's ref value ``{"k": key, ...summary}`` into
+    ``(shard key, summary dict)``. The ONE decoder for group readers
+    and key-only callers: the ref-object field set lives here and
+    nowhere else."""
+    return ref["k"], {f: ref[f] for f in ("n", "d", "by", "dby", "r")}
 
 
 def _ref_key(ref) -> str:
@@ -466,9 +433,6 @@ def _read_group_file(manifest_dir: str, key: str) -> dict:
         return json.load(f)
 
 
-from collections.abc import Mapping  # noqa: E402  (used by ShardedFileMap)
-
-
 class ShardedFileMap(Mapping):
     """Lazy ``{bucket: [entry, ...]}`` view over manifest groups+shards.
 
@@ -480,8 +444,8 @@ class ShardedFileMap(Mapping):
     bucket-pruned reads, per-bucket conflict checks) therefore parse
     O(touched) group+shard files instead of the whole table;
     whole-table iterations hydrate every group (O(buckets/GROUP_SIZE)
-    small files), and only entry access reads shards. Format-v3 maps
-    (flat ref table, no groups) use the same class with eager refs.
+    small files), and only entry access reads shards. A map built from
+    in-memory entries (``overrides``, no groups) is every bucket fresh.
 
     Immutable from the outside — structural changes go through
     ``updated``, which shares the untouched buckets' SHARD REFERENCES
@@ -508,9 +472,8 @@ class ShardedFileMap(Mapping):
         self._dir = manifest_dir
         self._cache: dict[int, list] = {}
         self._over = dict(overrides or {})
-        # per-bucket summary stats from the group file (may be absent
-        # for refs written before stats, or partial for legacy entries)
-        # — lets sizing read n/d/by/dby/r without shard hydration
+        # per-bucket summary stats from the group file — lets sizing
+        # read n/d/by/dby/r without shard hydration
         self._meta = dict(meta or {})
         # CLEAN groups (no touched bucket): group id -> group-file key.
         # Serialization reuses these verbatim; _gpend tracks which are
@@ -518,17 +481,17 @@ class ShardedFileMap(Mapping):
         self._gkeys = dict(group_keys or {})
         self._gsize = group_size
         self._gpend = set(self._gkeys)
-        # buckets NOT covered by a clean group (v3 flat refs, fresh
-        # overrides). Together with _gmembers (bucket sets of hydrated
-        # clean groups, immutable frozensets shared by reference across
-        # derived maps) this keeps buckets_outside_groups — the
-        # serialization/diff/GC walk — O(result), never O(hydrated):
-        # a cached lineage that iterated the whole table once would
-        # otherwise pay an O(num_buckets) scan on EVERY later commit.
-        # updated() overrides both on derived maps; at direct
-        # construction refs are either empty (v4 parse) or the whole
-        # table (v3 parse / v2 dict), so seeding loose from refs is
-        # exact.
+        # buckets NOT covered by a clean group (fresh overrides,
+        # surviving buckets of dirty groups). Together with _gmembers
+        # (bucket sets of hydrated clean groups, immutable frozensets
+        # shared by reference across derived maps) this keeps
+        # buckets_outside_groups — the serialization/diff/GC walk —
+        # O(result), never O(hydrated): a cached lineage that iterated
+        # the whole table once would otherwise pay an O(num_buckets)
+        # scan on EVERY later commit. updated() overrides both on
+        # derived maps; at direct construction refs are empty (document
+        # parse, in-memory overrides), so seeding loose from refs and
+        # overrides is exact.
         self._loose = set(self._refs) | set(self._over)
         self._gmembers: dict[int, frozenset] = {}
 
@@ -550,10 +513,7 @@ class ShardedFileMap(Mapping):
             members.add(b)
             if b in self._over or b in self._refs:
                 continue
-            key, summary = _parse_ref(v)
-            self._refs[b] = key
-            if summary:
-                self._meta[b] = summary
+            self._refs[b], self._meta[b] = _parse_ref(v)
         # clean-group membership: hydration moves the refs into _refs,
         # but these buckets stay group-covered (NOT loose) — the set is
         # what lets a later updated()/serialization walk stay O(touched)
@@ -595,8 +555,7 @@ class ShardedFileMap(Mapping):
             if entries is not None:
                 self._cache[b] = entries
             self._refs[b] = key
-            if meta:
-                self._meta[b] = meta
+            self._meta[b] = meta
         if self._gsize is None:
             self._gsize = gsize
         self._gkeys.update(group_keys)
@@ -651,9 +610,8 @@ class ShardedFileMap(Mapping):
         # accept anything integer-like (numpy ints from collected
         # Spark rows / pandas frames hash-equal their int value but
         # fail an isinstance(int) check — rejecting them here would
-        # silently empty a pruned selection that __getitem__ and the
-        # pre-v4 set-intersection path both serve); reject floats and
-        # strings, which __index__ refuses
+        # silently empty a pruned selection that __getitem__ serves);
+        # reject floats and strings, which __index__ refuses
         try:
             b = operator.index(b)
         except TypeError:
@@ -717,13 +675,13 @@ class ShardedFileMap(Mapping):
 
     def stat(self, b: int, field: str):
         """Summary stat (n/d/by/dby/r) for an UNTOUCHED bucket from its
-        group file, or None when unavailable — the caller falls back to
-        hydrating that bucket's shard."""
+        group file, or None for a bucket touched in memory (it has no
+        summary until serialized) — the caller then computes it from
+        that bucket's entries."""
         if b in self._over:
             return None
         self._ensure_bucket(b)
-        m = self._meta.get(b)
-        return None if m is None else m.get(field)
+        return self._meta[b][field]
 
 
 def _shard_meta(entries: list[dict]) -> dict:
@@ -732,44 +690,14 @@ def _shard_meta(entries: list[dict]) -> dict:
     entry count / delta count / bytes / delta bytes / rows. Sizing and
     compaction-eligibility decisions read these without hydrating any
     shard — the per-batch metadata cost at 10^5 buckets."""
-    by = dby = d = r = 0
-    for e in entries:
-        n = e.get("bytes", 0)
-        by += n
-        r += e.get("rows", 0) or 0
-        kind = e.get("kind")
-        is_delta = (kind == "delta") if kind is not None else (
-            "-dl-" in os.path.basename(os.path.dirname(e["path"]))
-        )
-        if is_delta:
-            d += 1
-            dby += n
-    meta = {"n": len(entries), "d": d}
-    # size/row fields only when every entry recorded them (legacy
-    # entries fall back to hydration + dir walks — a wrong 0 here would
-    # silently misdirect compaction sizing)
-    if all("bytes" in e and e["bytes"] is not None for e in entries):
-        meta["by"] = by
-        meta["dby"] = dby
-    if all(e.get("rows") is not None for e in entries):
-        meta["r"] = r
-    return meta
-
-
-def _files_with(files, changes: dict[int, list], removed: set | frozenset = frozenset()):
-    """Apply structural changes to a snapshot's files mapping without
-    hydrating untouched shards (plain-dict fallback for v2 snapshots)."""
-    if isinstance(files, ShardedFileMap):
-        return files.updated(changes, removed)
-    out = {b: list(es) for b, es in files.items()}
-    for b in removed:
-        out.pop(b, None)
-    for b, v in changes.items():
-        if v:
-            out[b] = v
-        else:
-            out.pop(b, None)
-    return out
+    deltas = [e for e in entries if e["kind"] == "delta"]
+    return {
+        "n": len(entries),
+        "d": len(deltas),
+        "by": sum(e["bytes"] for e in entries),
+        "dby": sum(e["bytes"] for e in deltas),
+        "r": sum(e["rows"] for e in entries),
+    }
 
 
 def bucket_expr(key_columns: list[str], num_buckets: int):
@@ -851,8 +779,7 @@ class ManifestTable:
             # map into the new snapshot — shedding the old version then
             # would strip the newest's hydration through the shared
             # object, so aliases of the newest are left alone
-            if (v != newest and s.files is not newest_files
-                    and isinstance(s.files, ShardedFileMap)):
+            if v != newest and s.files is not newest_files:
                 s.files.shed_entries()
         return snap
 
@@ -954,11 +881,10 @@ class ManifestTable:
     def _check_format(snap: Snapshot) -> Snapshot:
         if snap.bucket_fn != BUCKET_FN:
             raise ValueError(
-                f"table was written with bucket function {snap.bucket_fn!r} "
-                f"(format v{snap.format_version}); this build uses {BUCKET_FN!r} "
-                f"(format v{FORMAT_VERSION}). Refusing to attach: merging with a "
-                "different hash would route keys to the wrong buckets and leave "
-                "stale duplicates. Rewrite the table (full overwrite) to migrate."
+                f"table was written with bucket function {snap.bucket_fn!r}; "
+                f"this build uses {BUCKET_FN!r}. Refusing to attach: merging "
+                "with a different hash would route keys to the wrong buckets "
+                "and leave stale duplicates. " + _MIGRATE
             )
         return snap
 
@@ -1030,16 +956,8 @@ class ManifestTable:
         # shares untouched group/shard refs with its parent and has just
         # absorbed the serialized shard/group keys) IS the on-disk state
         # — cache it so the next metadata walk inherits the parent's
-        # hydration instead of re-parsing every group file. Plain-dict
-        # maps (create/overwrite/rebucket commits) are cached as a lazy
-        # parse of the just-written document instead, so the lineage
-        # they root gets ref/group sharing too.
-        if isinstance(snap.files, ShardedFileMap):
-            self._cache_snapshot(snap)
-        else:
-            self._cache_snapshot(
-                self._check_format(Snapshot.from_json(text, self._manifest_dir))
-            )
+        # hydration instead of re-parsing every group file
+        self._cache_snapshot(snap)
         # pointer cache: never move it backwards (a slower concurrent
         # committer of an OLDER version must not shadow a newer one).
         # The read-check-write is serialized under an flock so two
@@ -1283,8 +1201,6 @@ class ManifestTable:
         ``rebucket`` can detect that its files belong to a dead layout
         instead of silently registering wrong-bucket rows."""
         base = {"sv": sv, "kind": kind, "nb": snap.num_buckets}
-        if not RECORD_STATS:
-            return {b: {"path": p, **base} for b, p in written.items()}
         sv_by_id = snap.schemas[sv].by_id()
         cur_by_name = {c.name: c for c in snap.schema.columns}
         file_name_to_id = {}
@@ -1426,8 +1342,7 @@ class ManifestTable:
             # rows were deleted); untouched buckets keep their shard refs
             changes: dict[int, list] = {b: [] for b in buckets}
             changes.update({b: [e] for b, e in new_entries.items()})
-            files = _files_with(
-                base.files,
+            files = base.files.updated(
                 {b: v for b, v in changes.items() if v},
                 {b for b, v in changes.items() if not v},
             )
@@ -1531,10 +1446,7 @@ class ManifestTable:
             # a concurrent rebucket has since replaced must NOT rebase —
             # their rows would sit in wrong-bucket entries, invisible to
             # key-pruned reads and scattered by the next compaction
-            stale = [
-                b for b, e in prepared.items()
-                if e.get("nb") is not None and e["nb"] != snap.num_buckets
-            ]
+            stale = [b for b, e in prepared.items() if e["nb"] != snap.num_buckets]
             if stale:
                 raise CommitConflictError(
                     f"delta files for buckets {sorted(stale)} were written under "
@@ -1546,8 +1458,7 @@ class ManifestTable:
             # structural update shares untouched buckets' shard refs —
             # an append commit hydrates and re-serializes only the
             # buckets it touches
-            files = _files_with(
-                snap.files,
+            files = snap.files.updated(
                 {b: list(snap.files.get(b, [])) + [e] for b, e in entries.items()},
             )
             new = Snapshot(
@@ -1577,43 +1488,11 @@ class ManifestTable:
 
     @staticmethod
     def _bucket_stat(snap: Snapshot, b: int, field: str, compute):
-        """Per-bucket stat from the group-file summary, hydrating the
-        bucket's shard only when the summary is absent/partial."""
-        if isinstance(snap.files, ShardedFileMap):
-            v = snap.files.stat(b, field)
-            if v is not None:
-                return v
-        return compute(snap.files[b])
-
-    @staticmethod
-    def _dir_bytes(d: str) -> int:
-        """On-disk bytes of one manifest-listed data dir (local metadata
-        walk — the fallback for legacy entries written before byte counts
-        were recorded in the manifest)."""
-        n = 0
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                if not f.startswith(("_", ".")):
-                    n += os.path.getsize(os.path.join(d, f))
-        return n
-
-    @classmethod
-    def _entry_bytes(cls, e: dict) -> int:
-        """Bytes of one file entry: the size recorded at commit time (a
-        pure metadata read — what every sizing decision should cost at
-        100 TB), falling back to a directory walk for legacy entries."""
-        b = e.get("bytes")
-        return b if b is not None else cls._dir_bytes(e["path"])
-
-    @staticmethod
-    def _entry_is_delta(e: dict) -> bool:
-        """Explicit ``kind`` tag recorded at write time; legacy snapshots
-        (no kind field) fall back to the write-dir tag that
-        ``_write_bucketed`` has always embedded in the dir name."""
-        kind = e.get("kind")
-        if kind is not None:
-            return kind == "delta"
-        return "-dl-" in os.path.basename(os.path.dirname(e["path"]))
+        """Per-bucket stat from the group-file summary; a bucket touched
+        in memory since the snapshot was read has none, so its entries
+        are computed over instead."""
+        v = snap.files.stat(b, field)
+        return v if v is not None else compute(snap.files[b])
 
     def bucket_bytes(
         self,
@@ -1630,9 +1509,7 @@ class ManifestTable:
             if buckets is not None else list(snap.files)
         )
         sizes: dict[int, int] = {
-            b: self._bucket_stat(
-                snap, b, "by", lambda es: sum(self._entry_bytes(e) for e in es)
-            )
+            b: self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
             for b in sel
         }
         return sizes if per_bucket else sum(sizes.values())
@@ -1640,15 +1517,15 @@ class ManifestTable:
     def bucket_summary(self, snapshot: Snapshot | None = None) -> list[dict]:
         """Per-bucket metadata summary (files / bytes / rows / delta
         count) from recorded entry stats — lives here because the entry
-        format is owned here; zero file reads for post-stats tables."""
+        format is owned here; zero data-file reads."""
         snap = snapshot or self.current_snapshot()
         return [
             {
                 "bucket": b,
                 "files": len(es),
-                "bytes": sum(self._entry_bytes(e) for e in es),
-                "rows": sum(e.get("rows", 0) for e in es),
-                "delta_files": sum(1 for e in es if self._entry_is_delta(e)),
+                "bytes": sum(e["bytes"] for e in es),
+                "rows": sum(e["rows"] for e in es),
+                "delta_files": sum(1 for e in es if e["kind"] == "delta"),
             }
             for b, es in sorted(snap.files.items())
         ]
@@ -1669,43 +1546,29 @@ class ManifestTable:
         )
         out: dict[int, tuple[int, int]] = {}
         for b in sel:
-            if isinstance(snap.files, ShardedFileMap):
-                by = snap.files.stat(b, "by")
-                dby = snap.files.stat(b, "dby")
-                if by is not None and dby is not None:
-                    out[b] = (by - dby, dby)
-                    continue
-            base = delta = 0
-            for e in snap.files[b]:
-                n = self._entry_bytes(e)
-                if self._entry_is_delta(e):
-                    delta += n
-                else:
-                    base += n
-            out[b] = (base, delta)
+            by = self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
+            dby = self._bucket_stat(
+                snap, b, "dby",
+                lambda es: sum(e["bytes"] for e in es if e["kind"] == "delta"),
+            )
+            out[b] = (by - dby, dby)
         return out
 
 # ---------- inspect tables ----------
 
     def summary_totals(self, snap: Snapshot) -> tuple[int, int, int, int]:
         """(files, delta_files, bytes, rows) for one snapshot from the
-        document-level bucket summaries — no shard hydration when every
-        summary field is present (the normal case; legacy entries fall
-        back per bucket). The metadata-cost-honest path for anything
-        that only needs totals: inspect history, audit deltas."""
+        group files' bucket summaries — no shard hydration. The
+        metadata-cost-honest path for anything that only needs totals:
+        inspect history, audit deltas."""
         files = delta = by = r = 0
         for b in list(snap.files):
             files += self._bucket_stat(snap, b, "n", len)
             delta += self._bucket_stat(
-                snap, b, "d",
-                lambda es: sum(1 for e in es if self._entry_is_delta(e)),
+                snap, b, "d", lambda es: sum(1 for e in es if e["kind"] == "delta")
             )
-            by += self._bucket_stat(
-                snap, b, "by", lambda es: sum(self._entry_bytes(e) for e in es)
-            )
-            r += self._bucket_stat(
-                snap, b, "r", lambda es: sum(e.get("rows", 0) or 0 for e in es)
-            )
+            by += self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
+            r += self._bucket_stat(snap, b, "r", lambda es: sum(e["rows"] for e in es))
         return files, delta, by, r
 
     def snapshots_df(self) -> DataFrame:
@@ -1767,9 +1630,7 @@ class ManifestTable:
         for b in sorted(snap.files):
             for e in snap.files[b]:
                 rows.append((
-                    b, e["path"],
-                    "delta" if self._entry_is_delta(e) else "base",
-                    int(e.get("sv", 0)), e.get("bytes"), e.get("rows"),
+                    b, e["path"], e["kind"], int(e["sv"]), e["bytes"], e["rows"],
                     json.dumps(e["stats"], sort_keys=True) if e.get("stats") else None,
                 ))
         schema = StructType([
@@ -1891,20 +1752,17 @@ class ManifestTable:
         # without hydrating the shard. An incremental chain pull then
         # parses O(changed groups + changed buckets) metadata, not two
         # full tables.
-        if isinstance(old.files, ShardedFileMap) and isinstance(new.files, ShardedFileMap):
-            ng, og = new.files.group_keys(), old.files.group_keys()
-            same_groups = (
-                {g for g, k in ng.items() if og.get(g) == k}
-                if new.files.group_size == old.files.group_size
-                else set()
-            )
-            changed = [
-                b for b in new.files.buckets_outside_groups(same_groups)
-                if new.files.ref_for(b) is None
-                or new.files.ref_for(b) != old.files.ref_for(b)
-            ]
-        else:
-            changed = list(new.files)
+        ng, og = new.files.group_keys(), old.files.group_keys()
+        same_groups = (
+            {g for g, k in ng.items() if og.get(g) == k}
+            if new.files.group_size == old.files.group_size
+            else set()
+        )
+        changed = [
+            b for b in new.files.buckets_outside_groups(same_groups)
+            if new.files.ref_for(b) is None
+            or new.files.ref_for(b) != old.files.ref_for(b)
+        ]
         seen = {
             e["path"]
             for b in changed if b in old.files
@@ -2217,22 +2075,9 @@ class ManifestTable:
                 _add_live(_read_manifest_shard(self._manifest_dir, key))
 
         def _add_snapshot(v):
-            snap = self.snapshot_at(v)
-            fm = snap.files if isinstance(snap.files, ShardedFileMap) else None
-            if fm is None:  # v2 embedded entries
-                for es in snap.files.values():
-                    _add_live(es)
-                return
-            gkeys = fm.group_keys()
-            # buckets not covered by a group (v3 flat refs, or any
-            # not-yet-absorbed override) walk individually
-            for b in fm.buckets_outside_groups(set(gkeys)):
-                key = fm.ref_for(b)
-                if key is None:
-                    _add_live(fm[b])
-                else:
-                    _add_shard(key)
-            for gk in gkeys.values():
+            # a read or committed snapshot's map matches its document:
+            # every bucket sits in one of its clean groups
+            for gk in self.snapshot_at(v).files.group_keys().values():
                 if gk in seen_group_keys:
                     continue
                 seen_group_keys.add(gk)
@@ -2291,8 +2136,7 @@ class ManifestTable:
 
         # manifest group+shard GC: a group file is live iff referenced
         # by a SURVIVING snapshot's groups_ref; a shard is live iff
-        # referenced by a surviving snapshot's files_ref (v3) or by a
-        # live group file (v4). A freshly-written file whose snapshot
+        # referenced by a live group file. A freshly-written file whose snapshot
         # claim hasn't landed yet would look dead, so files younger than
         # the grace window are always kept (the same
         # single-logical-writer assumption that guards the data vacuum
@@ -2311,9 +2155,7 @@ class ManifestTable:
             for v in sorted(keep):
                 with open(os.path.join(self._snap_dir, f"snapshot-{v:08d}.json")) as f:
                     doc = json.loads(f.read())
-                for ref in doc.get("files_ref", {}).values():
-                    live_shards.add(_ref_key(ref))
-                for gk in doc.get("groups_ref", {}).values():
+                for gk in doc["groups_ref"].values():
                     if gk in live_groups:
                         continue
                     live_groups.add(gk)

@@ -76,7 +76,7 @@ def test_pointer_is_a_floor(table):
     # simulate claim-then-crash: write the snapshot file, skip the pointer
     path = os.path.join(table._snap_dir, f"snapshot-{new.version:08d}.json")
     with open(path, "w") as f:
-        f.write(new.to_json())
+        f.write(new.to_json(table._manifest_dir))
     got = table.current_snapshot()
     assert got.version == new.version and got.properties["who"] == "crashed"
     # and the next commit builds on it rather than re-claiming its version

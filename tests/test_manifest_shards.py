@@ -1,12 +1,14 @@
 """Format v4 manifest metadata: a delta commit's written metadata bytes
 are O(touched buckets + touched groups), not O(table); untouched
 buckets' shards AND untouched groups' ref tables are shared by
-reference across snapshots; v3 (flat ref table) and v2
-(embedded-entries) snapshots stay readable; expiry garbage-collects
-unreferenced shards and group files."""
+reference across snapshots; a snapshot document of any earlier format
+(v1, v2 embedded entries, v3 flat ref table) refuses to attach; expiry
+garbage-collects unreferenced shards and group files."""
 
 import json
 import os
+
+import pytest
 
 import etl_spark.table.manifest as M
 from etl_spark.table.manifest import (
@@ -27,6 +29,26 @@ def _meta_files(root):
                 p = os.path.join(dirpath, n)
                 out[p] = os.path.getsize(p)
     return out
+
+
+def _embedded_doc(snap) -> dict:
+    """``snap`` as one document with every bucket's entry list embedded
+    in it (the pre-shard v2 layout) — the yardstick the sharded commit
+    is measured against, and the v2 shape the refusal test writes."""
+    return {
+        "version": snap.version,
+        "current_schema_version": snap.current_schema_version,
+        "schemas": {str(v): s.to_json() for v, s in snap.schemas.items()},
+        "num_buckets": snap.num_buckets,
+        "properties": snap.properties,
+        "bucket_fn": snap.bucket_fn,
+        "format_version": snap.format_version,
+        "files": {str(b): list(fs) for b, fs in snap.files.items()},
+    }
+
+
+def _embedded_bytes(snap) -> int:
+    return len(json.dumps(_embedded_doc(snap), indent=1))
 
 
 def _mk(spark, root, num_buckets=32):
@@ -75,7 +97,7 @@ def test_delta_commit_metadata_is_o_touched(spark, tmp_path, monkeypatch):
     # would have written (the v2 form this replaces): 31 untouched
     # buckets' per-column stats were NOT rewritten, 3 untouched groups'
     # ref tables were NOT rewritten — only the doc + ONE group + ONE shard
-    v2_bytes = len(t.current_snapshot().to_json())  # embedded form
+    v2_bytes = _embedded_bytes(t.current_snapshot())
     assert sum(new_meta.values()) < v2_bytes / 2
 
     # the untouched GROUPS' file keys are literally shared
@@ -139,39 +161,17 @@ def test_snapshot_document_is_o_groups_not_o_buckets(spark, tmp_path, monkeypatc
     assert b_big < 2 * b_small
 
 
-def test_v2_embedded_snapshot_still_readable(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    t = _mk(spark, root, num_buckets=4)
-    # rewrite the current snapshot in v2 embedded form
-    snap = t.current_snapshot()
-    v2_text = snap.to_json()  # no manifest_dir -> embedded entries
-    d2 = json.loads(v2_text)
-    assert "files_ref" not in d2 and "groups_ref" not in d2
-    name = f"snapshot-{snap.version:08d}.json"
-    with open(os.path.join(root, "_snapshots", name), "w") as f:
-        f.write(v2_text)
-    t2 = ManifestTable(spark, root, ["k"])
-    assert t2.read().count() == 3000
-    # and the next commit over it writes v4 again
-    t2.overwrite(spark.createDataFrame([("x", 1)], "k string, v long"))
-    cur = json.loads(
-        open(os.path.join(root, "_snapshots",
-                          f"snapshot-{t2.current_snapshot().version:08d}.json")).read()
-    )
-    assert "groups_ref" in cur
+def _as_v1(d, snap, man_dir):
+    del d["bucket_fn"], d["format_version"]
 
 
-def test_v3_flat_ref_snapshot_still_readable(spark, tmp_path):
-    """A format-v3 document (flat bucket->shard ref table, the round-4
-    layout) attaches, reads, and upgrades to v4 on the next commit."""
-    root = str(tmp_path / "tbl")
-    t = _mk(spark, root, num_buckets=4)
-    man_dir = os.path.join(root, "_snapshots", "manifests")
-    snap = t.current_snapshot()
-    name = f"snapshot-{snap.version:08d}.json"
-    path = os.path.join(root, "_snapshots", name)
-    d = json.loads(open(path).read())
-    d.pop("groups_ref"), d.pop("group_size")
+def _as_v2(d, snap, man_dir):
+    d.clear()
+    d.update(_embedded_doc(snap), format_version=2)
+
+
+def _as_v3(d, snap, man_dir):
+    del d["groups_ref"], d["group_size"]
     d["format_version"] = 3
     d["files_ref"] = {
         str(b): {
@@ -180,34 +180,44 @@ def test_v3_flat_ref_snapshot_still_readable(spark, tmp_path):
         }
         for b in snap.files
     }
-    with open(path, "w") as f:
-        json.dump(d, f)
-    t2 = ManifestTable(spark, root, ["k"])
-    assert t2.read().count() == 3000
-    # a delta over the v3 snapshot commits fine and writes v4
-    s2 = t2.current_snapshot()
-    w = t2.write_delta_files(
-        spark.createDataFrame([("k1", 777)], "k string, v long"), s2
-    )
-    t2.commit_appended(w, s2.current_schema_version)
-    cur = json.loads(
-        open(os.path.join(root, "_snapshots",
-                          f"snapshot-{t2.current_snapshot().version:08d}.json")).read()
-    )
-    assert "groups_ref" in cur and "files_ref" not in cur
-    got = {(r["k"], r["v"]) for r in t2.read().where("k = 'k1'").collect()}
-    assert got == {("k1", 1), ("k1", 777)}
 
 
-def test_v4_from_json_requires_manifest_dir(spark, tmp_path):
+@pytest.mark.parametrize("fmt,rewrite", [
+    ("v1", _as_v1), ("v2", _as_v2), ("v3", _as_v3),
+], ids=["v1", "v2", "v3"])
+def test_pre_v4_snapshot_refuses_attach(spark, tmp_path, fmt, rewrite):
+    """A snapshot document of any format before v4 — v1 (no bucket_fn
+    or format_version), v2 (entries embedded) or v3 (flat bucket->shard
+    ref table) — refuses to attach with a ValueError that names the
+    format and a migration path that works, and nothing is committed."""
     root = str(tmp_path / "tbl")
     t = _mk(spark, root, num_buckets=4)
-    name = f"snapshot-{t.current_snapshot().version:08d}.json"
-    text = open(os.path.join(root, "_snapshots", name)).read()
-    import pytest
+    snap_dir = os.path.join(root, "_snapshots")
+    man_dir = os.path.join(snap_dir, "manifests")
+    snap = t.current_snapshot()
+    path = os.path.join(snap_dir, f"snapshot-{snap.version:08d}.json")
+    d = json.loads(open(path).read())
+    rewrite(d, snap, man_dir)
+    with open(path, "w") as f:
+        json.dump(d, f)
+    docs = sorted(n for n in os.listdir(snap_dir) if n.startswith("snapshot-"))
 
-    with pytest.raises(ValueError, match="manifest"):
-        Snapshot.from_json(text)
+    refusal = (
+        rf"manifest format {fmt};.*reads only format v4.*Refusing to attach\. "
+        r"To migrate, re-create the table at a new root and replay its "
+        r"change feed into it\."
+    )
+    t2 = ManifestTable(spark, root, ["k"])
+    with pytest.raises(ValueError, match=refusal):
+        t2.current_snapshot()
+    with pytest.raises(ValueError, match=refusal):
+        t2.snapshot_at(snap.version)
+    # the write paths attach first, so they refuse before writing
+    with pytest.raises(ValueError, match=refusal):
+        t2.overwrite(spark.createDataFrame([("x", 1)], "k string, v long"))
+    assert sorted(
+        n for n in os.listdir(snap_dir) if n.startswith("snapshot-")
+    ) == docs
 
 
 def test_expiry_gcs_unreferenced_shards_and_groups(spark, tmp_path):
@@ -236,8 +246,7 @@ def test_expiry_gcs_unreferenced_shards_and_groups(spark, tmp_path):
         for gk in doc["groups_ref"].values():
             assert f"g-{gk}.json" in after
             for ref in M._read_group_file(man_dir, gk).values():
-                key = ref if isinstance(ref, str) else ref["k"]
-                assert f"m-{key}.json" in after
+                assert f"m-{ref['k']}.json" in after
     assert t.read().count() == 1
 
 
@@ -449,7 +458,7 @@ def test_commit_metadata_cost_at_1e4_buckets(tmp_path):
     assert commit_bytes < 120_000, commit_bytes
     assert len(doc2) < 60_000, len(doc2)
     # and the v2 embedded form this replaces
-    assert commit_bytes < len(snap2.to_json()) / 10
+    assert commit_bytes < _embedded_bytes(snap2) / 10
 
 
 def test_cache_never_shadows_a_concurrent_commit(spark, tmp_path):

@@ -218,7 +218,7 @@ def test_bucket_fn_mismatch_refuses_attach(spark, tmp_path):
         TableSchema([ColumnDef(1, "k", "string"), ColumnDef(2, "v", "long")]),
         key_columns=["k"], num_buckets=2,
     )
-    snap = t.current_snapshot()  # records murmur3_pmod / format v2
+    snap = t.current_snapshot()  # records murmur3_pmod / format v4
     assert snap.bucket_fn == "murmur3_pmod" and snap.format_version == 4
 
     # simulate a table written by a build using a different hash
@@ -230,15 +230,9 @@ def test_bucket_fn_mismatch_refuses_attach(spark, tmp_path):
     d["bucket_fn"] = "xxhash64_pmod"
     with open(p, "w") as f:
         f.write(json.dumps(d))
-    with pytest.raises(ValueError, match="bucket function"):
+    with pytest.raises(
+        ValueError,
+        match="bucket function.*To migrate, re-create the table at a new "
+        "root and replay its change feed into it",
+    ):
         ManifestTable(spark, root, ["k"]).current_snapshot()
-
-    # pre-versioning snapshots (field absent) attach fine: every prior
-    # build only ever wrote murmur3_pmod, so absence IS that function
-    # (ADVICE r02 — refusing bricked legacy tables with no migration
-    # path); explicit different values above still refuse.
-    del d["bucket_fn"]
-    with open(p, "w") as f:
-        f.write(json.dumps(d))
-    legacy = ManifestTable(spark, root, ["k"]).current_snapshot()
-    assert legacy.bucket_fn == "murmur3_pmod"

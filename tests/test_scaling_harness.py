@@ -56,17 +56,3 @@ def test_single_valid_pair_is_both_best_and_median():
     assert best_i == 1
     assert median == 0.82
     assert invalid == [1.4]
-
-
-def test_cluster_harness_headline_uses_shared_rejection():
-    """run_cluster_scaling must select its headline through
-    run_scaling.select_headline (superlinear pairs rejected from best
-    AND median) — the 11:14Z failure mode applies to the cluster form
-    identically."""
-    import inspect
-
-    import run_cluster_scaling as rcs
-
-    src = inspect.getsource(rcs.main)
-    assert "select_headline" in src
-    assert "invalid_superlinear_pairs" in src

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from etl_spark.cdc.changelog import generate_changelog
 from etl_spark.cdc.replay import ReplayEngine
-from etl_spark.table import manifest as mf
 from etl_spark.table.manifest import ColumnDef, ManifestTable, TableSchema, bucket_expr
 from etl_spark.table.stats import entry_excludes
 
@@ -135,20 +134,33 @@ def test_unknown_where_column_raises(table):
         table.read(where=[("nope", "=", 1)])
 
 
-def test_legacy_entries_never_pruned(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(mf, "RECORD_STATS", False)
+def test_legacy_entries_never_pruned(spark, tmp_path):
+    """Entries written before a column joined ``stats_columns`` carry no
+    stats for it: they are never pruned on it, and the residual filter
+    keeps reads exact."""
     t = ManifestTable.create(
         spark, os.path.join(str(tmp_path), "legacy"), SCHEMA,
         key_columns=["repo", "path"], num_buckets=4,
     )
     t.overwrite(_rows(spark, 0, 50))
+    legacy = _all_entries(t.current_snapshot())
+    t.update_properties({"stats_columns": "v"})
+    t.append_buckets(_rows(spark, 1000, 50))
     snap = t.current_snapshot()
-    entries = _all_entries(snap)
-    assert all("stats" not in e and "bytes" not in e for e in entries)
+    fresh = [e for e in _all_entries(snap) if e["kind"] == "delta"]
+    assert legacy and fresh
+    assert all("3" not in e["stats"] for e in legacy)  # 3 = v's column id
+    assert all("3" in e["stats"] for e in fresh)
     # no stats -> conservative: nothing prunable, residual filter still right
-    assert not any(t._entry_prunable(e, [("v", ">", 10_000)], snap) for e in entries)
-    assert t.read(where=[("v", ">", 10_000)]).count() == 0
-    assert t.bucket_bytes() > 0  # falls back to the dir walk
+    preds = [("v", ">", 10_000)]
+    assert not any(t._entry_prunable(e, preds, snap) for e in legacy)
+    assert all(t._entry_prunable(e, preds, snap) for e in fresh)
+    assert t.read(where=preds).count() == 0
+    preds = [("v", "<", 40)]
+    assert not any(t._entry_prunable(e, preds, snap) for e in legacy)
+    got = {tuple(r) for r in t.read(where=preds).collect()}
+    want = {tuple(r) for r in t.read().filter(F.col("v") < 40).collect()}
+    assert got == want and len(got) == 40
 
 
 def test_entry_excludes_rules():
