@@ -63,10 +63,8 @@ def _force(df) -> int:
 
 def bench_cdc_replay(
     spark, n_events: int, num_batches: int, workdir: str, mode: str, content_scale: int = 1,
-    lww_strategy: str | None = None, rebatch_by_bucket: bool = False,
-    pipeline_depth: int = 2, repeats: int = 1,
+    rebatch_by_bucket: bool = False, pipeline_depth: int = 2, repeats: int = 1,
 ) -> dict:
-    lww_strategy = lww_strategy or os.environ.get("ETL_SPARK_BENCH_LWW", "broadcast")
     from etl_spark.cdc.changelog import generate_changelog
     from etl_spark.cdc.replay import ReplayEngine
 
@@ -107,7 +105,7 @@ def bench_cdc_replay(
 
     # warm the executor-side machinery once before timing: JIT/codegen
     # for the WHOLE merge path (scan -> thin agg -> Arrow UDF in the
-    # scan -> broadcast join -> bucket write -> compaction -> resolve),
+    # scan -> LWW hash agg -> bucket write -> compaction -> resolve),
     # plus one Python UDF worker per core. Measured ~12 s of first-batch
     # cold cost at every parallelism level — a fixed per-process cost any
     # long-running ingest pays once, not per batch; excluding it measures
@@ -126,6 +124,7 @@ def bench_cdc_replay(
     # pushes every stage of the merge path through C2 before timing.
     warm_events = int(os.environ.get("ETL_SPARK_BENCH_WARM_EVENTS", "150000"))
     warm_batches = int(os.environ.get("ETL_SPARK_BENCH_WARM_BATCHES", "2"))
+    t_warm = time.monotonic()
     if warm_events > 0:
         warm_log = generate_changelog(
             spark, warm_events, seed=7, n_repos=20, paths_per_repo=50,
@@ -135,13 +134,13 @@ def bench_cdc_replay(
         warm_root = os.path.join(workdir, "warmup_table")
         warm_engine = ReplayEngine(
             spark, warm_root, num_buckets=max(16, parallelism), mode=mode,
-            lww_strategy=lww_strategy,
         )
         warm_engine.replay(warm_log)
         if mode == "mor":
             warm_engine.compact(min_files=1)
         warm_engine.read_state().count()
         shutil.rmtree(warm_root, ignore_errors=True)
+    warmup_sec = time.monotonic() - t_warm
 
     # best-of-N timed replays (default 1; main() passes 2 for the mor
     # headline): this VM's noisy-neighbor load swings identical replays
@@ -160,7 +159,6 @@ def bench_cdc_replay(
         t0 = time.monotonic()
         engine = ReplayEngine(
             spark, table_root, num_buckets=max(16, parallelism), mode=mode,
-            lww_strategy=lww_strategy,
         )
         results = engine.replay(changelog, pipeline_depth=pipeline_depth)
         if mode == "mor":
@@ -180,7 +178,6 @@ def bench_cdc_replay(
     best = min(runs, key=lambda r: r["wall_sec"])
     return {
         "mode": mode,
-        "lww_strategy": lww_strategy,
         "events": n_events,
         "batches": num_batches,
         "wall_sec": best["wall_sec"],
@@ -188,6 +185,7 @@ def bench_cdc_replay(
         "final_rows": final_rows,
         "per_batch_ms": best["per_batch_ms"],
         "runs": [r["events_per_sec"] for r in runs],
+        "warmup_sec": round(warmup_sec, 3),
     }
 
 
@@ -232,9 +230,11 @@ def main() -> None:
             spark, n_events, num_batches, workdir, mode,
             repeats=int(os.environ.get("ETL_SPARK_BENCH_REPEATS", "2")),
         )
-        # the section wall includes changelog generation, warm-up, and
-        # every repeat; the replay measurement itself is cdc["wall_sec"]
-        queries["cdc_replay"] = round(time.monotonic() - t0, 3)
+        # the section wall includes changelog generation and every
+        # repeat; the warm-up is reported on its own line, and the
+        # replay measurement itself is cdc["wall_sec"]
+        queries["cdc_replay"] = round(time.monotonic() - t0 - cdc["warmup_sec"], 3)
+        queries["cdc_warmup"] = cdc["warmup_sec"]
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -251,7 +251,8 @@ def main() -> None:
                 spark, max(1, n_events // 4), num_batches, workdir, "cow",
                 rebatch_by_bucket=True,
             )
-            queries["cdc_replay_cow"] = round(time.monotonic() - t0, 3)
+            queries["cdc_replay_cow"] = round(time.monotonic() - t0 - cdc_cow["warmup_sec"], 3)
+            queries["cdc_warmup_cow"] = cdc_cow["warmup_sec"]
         finally:
             shutil.rmtree(workdir, ignore_errors=True)
 

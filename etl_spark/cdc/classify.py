@@ -22,10 +22,8 @@ Scale note: neither join carries an explicit ``F.broadcast`` hint.
 ``has_active`` has one row per distinct key in the feed and
 ``existing_keys`` one row per live key in the TABLE — both grow without
 bound at 10^10-event scale, so a hard broadcast hint would OOM the
-driver long before merge's ``broadcast_key_budget`` guard ever runs.
-A plain equi-join lets AQE broadcast automatically when the side is
-actually small and fall back to a shuffle join when it is not — the
-same auto-degrade policy ``merge.batch_winners`` implements explicitly.
+driver. A plain equi-join lets AQE broadcast automatically when the
+side is actually small and fall back to a shuffle join when it is not.
 """
 
 from __future__ import annotations

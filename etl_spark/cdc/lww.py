@@ -6,33 +6,38 @@ re-expression of the reference's effective-dated timeline resolve
 (``src/delta_client.py:136-147``: latest effective date wins;
 ``src/sd_client.py:195-199``: max activation / min deactivation).
 
-Physical strategy — chosen for 10^10-event scale:
+Physical kernel — chosen for 10^10-event scale:
 
-- Default: ``max_by(struct(payload), struct(order))`` hash aggregation.
-  Unlike the textbook ``row_number() over (partition by key order by ...)``
-  window, this needs NO per-key sort and gets **map-side partial
-  aggregation**: a hot key (one repo = 30% of events) is combined down to
-  one row per input partition *before* the shuffle, so skew never
-  concentrates on a single reducer. This is the single biggest scale win
-  in the engine.
-- ``salt=k``: explicit two-stage salted variant
-  (key+salt -> partial winner, then key -> winner) for engines/settings
-  where partial aggregation is disabled or the payload is too wide to
-  combine map-side; mandated by the north rule as the explicit skew tool.
-- ``lww_winners_window``: the window formulation, kept for parity tests.
+- ``lww_winners``: ``max_by(struct(payload), struct(order))`` hash
+  aggregation, the engine's one winner kernel (batch merge, read-side
+  resolve, compaction). Unlike the textbook ``row_number() over
+  (partition by key order by ...)`` window, this needs NO per-key sort
+  and gets **map-side partial aggregation**: a hot key (one repo = 30%
+  of events) is combined down to one row per input partition *before*
+  the shuffle, so skew never concentrates on a single reducer.
 
-All three are algebraically identical; tests assert equal output —
+Two comparison kernels are kept for the benchmark's per-layer LWW
+metrics and the parity tests; the engine calls neither:
+
+- ``lww_winners(..., salt=k)``: explicit two-stage salted variant
+  (key+salt -> partial winner, then key -> winner), for settings where
+  partial aggregation is disabled or the payload is too wide to combine
+  map-side.
+- ``lww_winners_broadcast``: thin max per key, broadcast-joined back.
+
+All are algebraically identical; tests assert equal output (the window
+formulation lives in ``tests/oracle.py`` as the parity oracle) —
 including for NULL order values: a NULL commit sorts below every
 non-NULL commit in struct max_by, in the broadcast max+equality join
 (struct equality is null-safe field-wise), and in the window's
-``desc_nulls_last``, so all three strategies agree (tested). NULL keys
-and offsets are refused upstream by the replay contract check
+``desc_nulls_last``, so all kernels agree (tested). NULL keys and
+offsets are refused upstream by the replay contract check
 (``replay.check_contract_nulls``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_spark.schema import KEY_COLUMNS, ORDER_COLUMNS
@@ -102,12 +107,8 @@ def lww_winners_broadcast(
     and shuffled never.
 
     Requires the winner set (distinct keys x ~60 B) to fit the driver's
-    broadcast budget — true for any sane micro-batch. The replay's own
-    winner choice (``merge.batch_winners``) broadcasts winner offsets
-    under the engine's ``broadcast_key_budget`` and falls back to
-    ``lww_winners`` (hash-agg) above it, and the read/compaction path
-    (``resolve_state``) never uses this strategy by default because its
-    winner set grows with the table.
+    broadcast budget. A comparison kernel: the engine runs
+    ``lww_winners`` everywhere.
 
     The order tuple must be unique per key (ours is: offset is unique),
     so the equality join returns exactly one row per key.
@@ -130,24 +131,3 @@ def lww_winners_broadcast(
     extra = [count_col] if count_col else []
     return df.join(F.broadcast(renamed), on=cond).select(*df.columns, *extra)
 
-
-def lww_winners_window(
-    df: DataFrame,
-    key_columns: list[str] | None = None,
-    order_columns: list[str] | None = None,
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """Window formulation (row_number over desc order) — semantically
-    identical to ``lww_winners``; kept for cross-checking and for callers
-    that want rank > 1 (version history)."""
-    keys = key_columns or KEY_COLUMNS
-    order = list(order_columns or ORDER_COLUMNS)
-    if tiebreak:
-        order.append(tiebreak)
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc_nulls_last() for c in order])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .select(*df.columns)
-    )

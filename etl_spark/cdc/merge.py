@@ -25,16 +25,14 @@ commits each batch atomically with its fence properties (exactly-once;
 reference analog: skip-if-already-applied,
 ``src/byggesager/byggesager.py:191-197``).
 
-The winner kernel is chosen once, by ``batch_winners``, from a key
-upper bound. It is also the one place, in both modes, where a batch
-gets its ``content_sha256``: the normalize+sha256 pandas_udf runs over
-the batch's events before the kernel, in the scan's own tasks, so the
-Python task count follows the batch's input splits, not
-``num_buckets``. The agg kernels' map-side partial aggregation
-collapses a hot key per input partition before the shuffle,
-``lww_strategy='salted'`` pre-splits each key into ``SALT_PARTITIONS``
-explicit partial groups (for payloads too wide for map-side combine to
-absorb), and AQE skew-join splitting is enabled session-wide
+One kernel picks a batch's winners in both modes (``batch_winners``):
+``lww_winners``' ``max_by`` hash aggregation, whose map-side partial
+aggregation collapses a hot key per input partition before the
+shuffle. ``batch_winners`` is also the one place, in both modes, where
+a batch gets its ``content_sha256``: the normalize+sha256 pandas_udf
+runs over the batch's events before the kernel, in the scan's own
+tasks, so the Python task count follows the batch's input splits, not
+``num_buckets``. AQE skew-join splitting is enabled session-wide
 (``etl_spark.session``).
 """
 
@@ -43,32 +41,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark.cdc.lww import lww_winners, lww_winners_broadcast
+from etl_spark.cdc.lww import lww_winners
 from etl_spark.functions.normalize import with_content_sha256
 from etl_spark.table.manifest import ManifestTable, Snapshot, bucket_expr
 
 # lineage columns stored on every row (per-row lineage per north_rule)
 LINEAGE_COLS = ["_ingest_offset", "_ingest_batch"]
 
-# Above this many distinct keys in a batch, the broadcast LWW strategy
-# automatically degrades to the hash aggregation instead of OOMing the
-# driver: the winner-offset broadcast is ~8 B/key plus hashed-relation
-# overhead, so 20M keys ~ hundreds of MB — near the default 8g driver's
-# comfortable limit. Tunable per engine (``broadcast_key_budget``).
-BROADCAST_KEY_BUDGET = 20_000_000
-
-# lww_strategy='salted': explicit two-stage pre-split — each key is
-# fanned into this many (key, salt) partial groups before the final
-# per-key combine. For workloads whose payload rows are too wide for
-# map-side combine to absorb a hot key (Spark spills the agg buffer and
-# the hot key's rows all cross the shuffle anyway); 16 caps any single
-# reducer at ~1/16 of the hottest key.
-SALT_PARTITIONS = 16
-
 
 def resolve_state(
     raw: DataFrame,
-    lww_strategy: str = "agg",
     key_columns: list[str] | None = None,
     keep_tombstones: bool = False,
 ) -> DataFrame:
@@ -79,27 +61,14 @@ def resolve_state(
     to the delete). Identical rule to the cow merge, so both modes
     replay a log to the exact same final state.
 
-    Default strategy is the hash aggregation, NOT broadcast, because the
-    read/compaction winner set equals the table's total live keys — it
-    grows without bound as the table grows (unlike the per-batch merge
-    broadcast) and would blow the driver budget at 10^10-event scale.
+    The kernel is the hash aggregation: it needs no driver-side winner
+    set, whose size here would equal the table's total live keys.
     max_by is also robust to byte-identical duplicate rows (a double-read
     WAL file appended twice under mor): it picks exactly one row per key
-    even on order ties, where a broadcast equality join would return both."""
-    if lww_strategy == "broadcast":
-        resolved = lww_winners_broadcast(
-            raw, key_columns=key_columns,
-            order_columns=["commit", "_ingest_offset"],
-        )
-    else:
-        # 'salted' actually forwards the salt (it used to silently run
-        # the unsalted aggregation); winners are identical either way —
-        # the salt only pre-splits hot keys before the shuffle
-        resolved = lww_winners(
-            raw, key_columns=key_columns,
-            order_columns=["commit", "_ingest_offset"],
-            salt=SALT_PARTITIONS if lww_strategy == "salted" else None,
-        )
+    even on order ties, where an equality join would return both."""
+    resolved = lww_winners(
+        raw, key_columns=key_columns, order_columns=["commit", "_ingest_offset"],
+    )
     if keep_tombstones:
         return resolved
     return resolved.filter(~F.col("_deleted"))
@@ -121,11 +90,11 @@ def _demote_guarded(batch_events: DataFrame, keys: list[str], delete_guard: Data
 
 
 def _thin_maxes(batch_events: DataFrame, keys: list[str]) -> DataFrame:
-    """THIN winner aggregate: keys + max (commit, offset, op) + event
+    """THIN per-key aggregate: keys + max (commit, offset, op) + event
     count. Parquet never reads content for it; `op` rides INSIDE the
     order struct (it can never flip the max: offset is unique per key),
-    so this one tiny aggregate yields the winner offsets AND every
-    stats/lineage counter."""
+    so this one tiny aggregate yields every stats/lineage counter,
+    deletes included."""
     order_op = F.struct(F.col("commit"), F.col("offset"), F.col("op")).alias("__ord")
     return (
         batch_events.select(*keys, order_op)
@@ -183,58 +152,18 @@ def _schema_projection(winners: DataFrame, snap: Snapshot, batch_id: int) -> Dat
     )
 
 
-def batch_winners(
-    batch_events: DataFrame,
-    maxes: DataFrame,
-    keys: list[str],
-    lww_strategy: str,
-    broadcast_key_budget: int,
-    keys_upper_bound: int | None,
-) -> tuple[DataFrame, str]:
-    """One LWW winner per key of a batch, with its ``content_sha256``,
-    and the kernel's name (``lww_path``: ``broadcast``, ``agg``,
-    ``agg-fallback`` or ``agg-salted``). ``maxes`` is the batch's thin
-    aggregate (``_thin_maxes``), built from the content-free events.
+def batch_winners(batch_events: DataFrame, keys: list[str]) -> DataFrame:
+    """One LWW winner per key of a batch, with its ``content_sha256``:
+    ``lww_winners``' max_by over full rows, map-side combined so a hot
+    repo collapses before the shuffle.
 
     The fingerprint is attached to the payload events BEFORE the
     kernel, so the pandas_udf runs in the tasks that scan the batch —
     a Python task per input split, not per bucket — and pays for the
     events that lose LWW too. After the kernel it would sit between
-    the hash-agg kernels' aggregation and the bucket repartition,
-    which Spark could then no longer elide: content would cross the
-    shuffle twice.
-
-    ``keys_upper_bound`` proves the winner broadcast fits the budget
-    without a gating job: mor passes its events bound (distinct keys <=
-    events, known arithmetically from the batch's offset range), cow
-    the exact key count its stats job measured. Over budget or unknown,
-    the broadcast strategy degrades to the hash aggregation instead of
-    OOMing the driver (``agg-fallback``).
-
-    The broadcast side is the winning OFFSET alone: WAL offsets are
-    globally unique and the fence keeps re-deliveries out of the batch,
-    so one long per key (~8 B/row, a LongHashedRelation built inside the
-    consuming job's own broadcast stage) identifies the winning event —
-    a malformed double-delivered batch would yield duplicate winners,
-    which ``resolve_state``'s max_by collapses on read. The hash-agg
-    kernel is max_by over full rows, map-side combined so a hot repo
-    collapses before the shuffle; 'salted' adds an explicit (key, salt)
-    pre-combine stage for payloads too wide for map-side combine."""
-    batch_events = with_content_sha256(batch_events)
-    if (
-        lww_strategy == "broadcast"
-        and keys_upper_bound is not None
-        and keys_upper_bound <= broadcast_key_budget
-    ):
-        winner_offsets = maxes.select(F.col("__ord.offset").alias("__w_offset"))
-        winners = batch_events.join(
-            F.broadcast(winner_offsets), on=F.col("offset") == F.col("__w_offset")
-        ).select(*batch_events.columns)
-        return winners, "broadcast"
-    if lww_strategy == "salted":
-        return lww_winners(batch_events, key_columns=keys, salt=SALT_PARTITIONS), "agg-salted"
-    winners = lww_winners(batch_events, key_columns=keys)
-    return winners, "agg-fallback" if lww_strategy == "broadcast" else "agg"
+    the aggregation and the bucket repartition, which Spark could then
+    no longer elide: content would cross the shuffle twice."""
+    return lww_winners(with_content_sha256(batch_events), key_columns=keys)
 
 
 def plan_mor_batch(
@@ -242,34 +171,25 @@ def plan_mor_batch(
     keys: list[str],
     batch_events: DataFrame,
     batch_id: int,
-    lww_strategy: str = "broadcast",
-    broadcast_key_budget: int = BROADCAST_KEY_BUDGET,
-    events_upper_bound: int | None = None,
     delete_guard: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, str]:
+) -> tuple[DataFrame, DataFrame]:
     """Pure plan construction for one merge-on-read batch — NO Spark jobs
-    run here. Returns ``(delta_plan, per_bucket_stats_plan, lww_path)``:
-    the delta frame ready for ``write_delta_files`` (winners as rows,
-    deletes as ``_deleted`` tombstones) and the independent thin
-    stats/lineage rollup the caller collects concurrently.
+    run here. Returns ``(delta_plan, per_bucket_stats_plan)``: the delta
+    frame ready for ``write_delta_files`` (winners as rows, deletes as
+    ``_deleted`` tombstones) and the independent thin stats/lineage
+    rollup the caller collects concurrently.
 
     Nothing in the mor write needs the stats: the bucket set falls out
-    of the append itself, and the winner kernel is chosen from
-    ``events_upper_bound``. The winners arrive fingerprinted
-    (``batch_winners``), so the write runs no Python. Under the
-    hash-agg kernels, the winners exchange doubles as the bucket write
-    exchange when shuffle.partitions == num_buckets."""
+    of the append itself. The winners arrive fingerprinted
+    (``batch_winners``), so the write runs no Python, and the winners
+    exchange doubles as the bucket write exchange when
+    shuffle.partitions == num_buckets."""
     if delete_guard is not None:
         batch_events = _demote_guarded(batch_events, keys, delete_guard)
-    maxes_plan = _thin_maxes(batch_events, keys)
-    per_bucket_plan = _bucket_rollup(maxes_plan, keys, snap.num_buckets)
-    winners, lww_path = batch_winners(
-        batch_events, maxes_plan, keys, lww_strategy, broadcast_key_budget,
-        events_upper_bound,
-    )
-    source = _schema_projection(winners, snap, batch_id)
+    per_bucket_plan = _bucket_rollup(_thin_maxes(batch_events, keys), keys, snap.num_buckets)
+    source = _schema_projection(batch_winners(batch_events, keys), snap, batch_id)
     delta = source.withColumn("_deleted", F.col("__op") == "D").drop("__op")
-    return delta, per_bucket_plan, lww_path
+    return delta, per_bucket_plan
 
 
 def _stats_from_rows(per_bucket: list) -> dict:
@@ -296,46 +216,38 @@ def cow_batch_stats(
     keys: list[str],
     num_buckets: int,
     delete_guard: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, list, dict]:
+) -> tuple[DataFrame, list, dict]:
     """Stage 1 of the cow plan: guard demotion, thin per-key maxes
     (~60 B/distinct key), and the per-bucket rollup that names the
     TOUCHED BUCKETS. Split out so the replay loop can learn a batch's
     bucket set — and decide whether it may overlap the batches already
     in flight — before any table state is read.
 
-    Returns (guarded_events, maxes[cached], per_bucket_rows, stats)."""
+    Returns (guarded_events, per_bucket_rows, stats)."""
     if delete_guard is not None:
         batch_events = _demote_guarded(batch_events, keys, delete_guard)
-    maxes = _thin_maxes(batch_events, keys).cache()
-    per_bucket = _bucket_rollup(maxes, keys, num_buckets).collect()
-    return batch_events, maxes, per_bucket, _stats_from_rows(per_bucket)
+    per_bucket = _bucket_rollup(_thin_maxes(batch_events, keys), keys, num_buckets).collect()
+    return batch_events, per_bucket, _stats_from_rows(per_bucket)
 
 
 def cow_batch_survivors(
     table: ManifestTable,
     snap: Snapshot,
     batch_events: DataFrame,
-    maxes: DataFrame,
     stats: dict,
     batch_id: int,
     *,
-    lww_strategy: str = "broadcast",
-    broadcast_key_budget: int = BROADCAST_KEY_BUDGET,
     tombstone_commit_watermark: str | None = None,
-) -> tuple[DataFrame, str]:
+) -> DataFrame:
     """Stage 2 of the cow plan: LWW winners (fingerprinted by
     ``batch_winners``, as under mor), union with the touched buckets
     read from ``snap`` (stored rows carry their own fingerprint),
-    global resolve, tombstone aging. Returns ``(survivors, lww_path)``
-    — the frame ``write_rewrite_files`` consumes, and the winner
-    kernel's name."""
+    global resolve, tombstone aging. Returns the survivors — the frame
+    ``write_rewrite_files`` consumes."""
     keys = table.key_columns
     # the winners resolve by the TABLE's key columns — a table keyed on
     # other columns must not fall back to the module default
-    winners, lww_path = batch_winners(
-        batch_events, maxes, keys, lww_strategy, broadcast_key_budget,
-        stats["keys"],
-    )
+    winners = batch_winners(batch_events, keys)
     touched = sorted(stats["buckets"])
     source = _schema_projection(winners, snap, batch_id)
     existing = (
@@ -366,4 +278,4 @@ def cow_batch_survivors(
         survivors = survivors.filter(
             (~F.col("_deleted")) | (F.col("commit") >= tombstone_commit_watermark)
         )
-    return survivors, lww_path
+    return survivors

@@ -53,7 +53,6 @@ from etl_spark.cdc.evolution import (
     simulate_schema_ops,
 )
 from etl_spark.cdc.merge import (
-    BROADCAST_KEY_BUDGET,
     _bucket_counters,
     _stats_from_rows,
     cow_batch_stats,
@@ -109,7 +108,7 @@ def contract_null_aggs(key_columns: list[str]) -> list:
     later upsert or delete — NULL != NULL in the merge's key join — so
     it would accumulate as unreachable data). ``commit`` is deliberately
     NOT a contract column: a NULL commit is orderable (it loses to every
-    non-NULL commit, identically in all three LWW strategies) and is
+    non-NULL commit, identically in every LWW kernel) and is
     allowed through."""
     cols = ["offset", "op", *key_columns]
     return [
@@ -250,8 +249,6 @@ class ReplayEngine:
         num_buckets: int = 16,
         mode: str = "cow",
         compact_threshold: int = 8,
-        lww_strategy: str = "broadcast",
-        broadcast_key_budget: int | None = None,
         target_columns: list[ColumnDef] | None = None,
         key_columns: list[str] | None = None,
         tombstone_commit_watermark: str | None = None,
@@ -307,16 +304,11 @@ class ReplayEngine:
         beyond retention raise the documented ValueError
         (``read_state(at_version=…)``). Off (None) by default."""
         assert mode in ("cow", "mor")
-        assert lww_strategy in ("broadcast", "agg", "salted")
         self.spark = spark
         self.table_root = table_root
         self.num_buckets = num_buckets
         self.mode = mode
         self.compact_threshold = compact_threshold
-        self.lww_strategy = lww_strategy
-        self.broadcast_key_budget = (
-            BROADCAST_KEY_BUDGET if broadcast_key_budget is None else broadcast_key_budget
-        )
         self.tombstone_commit_watermark = tombstone_commit_watermark
         self.compact_delta_fraction = compact_delta_fraction
         self.compact_sort = compact_sort
@@ -741,10 +733,6 @@ class ReplayEngine:
                     + list(columns)
                 )
                 raw = raw.select(*needed)
-            # read path always resolves with the hash-agg kernel: the
-            # winner set here is ALL live keys (grows with the table, not
-            # the batch), so the merge-side broadcast strategy must not
-            # leak into reads — see resolve_state's docstring
             out = resolve_state(raw, key_columns=self.table.key_columns).drop("_deleted")
             if rest:
                 out = out.filter(ManifestTable._where_to_column(rest))
@@ -953,7 +941,6 @@ class ReplayEngine:
             return []
         resolved = resolve_state(
             self.table.read(buckets=buckets, snapshot=snap0),
-            lww_strategy="agg",
             key_columns=self.table.key_columns,
             keep_tombstones=True,
         )
@@ -1012,8 +999,8 @@ class ReplayEngine:
         flight. Every batch, in every mode, runs plan -> write -> commit;
         up to ``pipeline_depth`` WRITES overlap while snapshot COMMITS
         stay strictly ordered (Iceberg's write-then-commit protocol), so
-        per-batch driver overhead (plan build, job submit, broadcast
-        build, commit) stops multiplying by batch count. 1 is the
+        per-batch driver overhead (plan build, job submit, commit)
+        stops multiplying by batch count. 1 is the
         sequential replay — ``apply_batch`` is this loop at depth 1.
         Barriers drain the pipeline first: empty batches (a
         metadata-only fence commit), batches carrying schema-evolution
@@ -1203,8 +1190,6 @@ class ReplayEngine:
                 # task joined (the pools below shut down first), so every
                 # plan built in this call sees one constant value
                 stack.enter_context(_shuffle_partitions(self.spark, snap.num_buckets))
-            # batches never drained (an earlier raise) release their caches
-            stack.callback(lambda: [p["release"]() for p in pending])
             write_pool = ThreadPoolExecutor(depth, thread_name_prefix="replay-write")
             stats_pool = ThreadPoolExecutor(depth, thread_name_prefix="replay-stats")
             for pool in (write_pool, stats_pool):
@@ -1250,7 +1235,7 @@ class ReplayEngine:
                 p = {
                     "batch_id": b, "t0": t0, "n_ops": len(ops),
                     "pipelined": depth > 1 and not barrier,
-                    "touched": (), "release": lambda: None,
+                    "touched": (),
                     # exactly-once bookkeeping, committed atomically with
                     # the batch; reserved keys win over caller properties
                     "props": {
@@ -1264,12 +1249,12 @@ class ReplayEngine:
                 if lo is None:
                     # empty batch: a metadata-only commit still fences it
                     p.update(
-                        lww_path="empty", write=dict, stats=list,
+                        write=dict, stats=list,
                         commit=lambda w, props, sv=snap.current_schema_version:
                             self.table.commit_appended(w, sv, props),
                     )
                 else:
-                    p.update(plan(snap, batch, b, int(hi) - int(lo) + 1, delete_guard, gate))
+                    p.update(plan(snap, batch, b, delete_guard, gate))
                 p["plan_ms"] = int((time.monotonic() - t0) * 1000)
                 pending.append(p)
                 inflight.update(p["touched"])
@@ -1284,7 +1269,7 @@ class ReplayEngine:
         results.sort(key=lambda r: r["batch_id"])
         return results
 
-    def _plan_mor(self, snap, batch, batch_id, events_bound, delete_guard, gate) -> dict:
+    def _plan_mor(self, snap, batch, batch_id, delete_guard, gate) -> dict:
         """Merge-on-read plan and write/commit pair: append the batch's
         winners as delta files. Nothing is read from the table, so
         in-flight writes never conflict (``gate`` is unused). The
@@ -1292,15 +1277,10 @@ class ReplayEngine:
         runs in the batch scan's tasks, before the winner kernel), so
         the bucketed write is JVM-only, and the thin stats rollup is
         collected concurrently, off the critical path."""
-        delta, per_bucket_plan, lww_path = plan_mor_batch(
-            snap, self.table.key_columns, batch, batch_id,
-            lww_strategy=self.lww_strategy,
-            broadcast_key_budget=self.broadcast_key_budget,
-            events_upper_bound=events_bound,
-            delete_guard=delete_guard,
+        delta, per_bucket_plan = plan_mor_batch(
+            snap, self.table.key_columns, batch, batch_id, delete_guard=delete_guard,
         )
         return {
-            "lww_path": lww_path,
             "write": lambda: self.table.write_delta_files(delta, snap),
             "stats": per_bucket_plan.collect,
             "commit": lambda written, props: self.table.commit_appended(
@@ -1308,7 +1288,7 @@ class ReplayEngine:
             ),
         }
 
-    def _plan_cow(self, snap, batch, batch_id, events_bound, delete_guard, gate) -> dict:
+    def _plan_cow(self, snap, batch, batch_id, delete_guard, gate) -> dict:
         """Copy-on-write plan and write/commit pair: rewrite the touched
         buckets. The thin stats job names them; ``gate`` then drains
         in-flight batches until none shares a bucket with this one
@@ -1318,30 +1298,19 @@ class ReplayEngine:
         re-verifies at commit time that nothing touched those buckets
         since the basis (Iceberg's overwrite serialization rule), so the
         disjointness reasoning is enforced, not assumed."""
-        batch, maxes, per_bucket, stats = cow_batch_stats(
+        batch, per_bucket, stats = cow_batch_stats(
             batch, self.table.key_columns, snap.num_buckets,
             delete_guard=delete_guard,
         )
         touched = sorted(stats["buckets"])
-        try:
-            gate(touched)
-            basis = self.table.current_snapshot()
-            survivors, lww_path = cow_batch_survivors(
-                self.table, basis, batch, maxes, stats, batch_id,
-                lww_strategy=self.lww_strategy,
-                broadcast_key_budget=self.broadcast_key_budget,
-                tombstone_commit_watermark=self.tombstone_commit_watermark,
-            )
-        except BaseException:
-            maxes.unpersist()
-            raise
+        gate(touched)
+        basis = self.table.current_snapshot()
+        survivors = cow_batch_survivors(
+            self.table, basis, batch, stats, batch_id,
+            tombstone_commit_watermark=self.tombstone_commit_watermark,
+        )
         return {
-            "lww_path": lww_path,
             "touched": touched,
-            # the cached thin maxes are released even when the write or
-            # commit raises — a driver that catches per-batch errors and
-            # continues must not accumulate leaked cache blocks
-            "release": maxes.unpersist,
             "write": lambda: self.table.write_rewrite_files(survivors, basis),
             "stats": lambda: per_bucket,
             "commit": lambda written, props: self.table.commit_rewritten(
@@ -1357,20 +1326,17 @@ class ReplayEngine:
         without them (a retry overwrites them, and ``metrics()`` reads
         only applied batches). Returns the batch's result dict."""
         b = p["batch_id"]
-        try:
-            written, write_ms = p["write"].result()
-            t_w = time.monotonic()
-            per_bucket = _bucket_counters(p["stats"].result())
-            t_s = time.monotonic()
-            s = _stats_from_rows(per_bucket)
-            self._append_bucket_metrics(b, per_bucket)
-            self._append_metrics_row(
-                b, s["events"], s["ups"], s["dels"], s["keys"], p["n_ops"],
-                int((t_s - p["t0"]) * 1000),
-            )
-            p["commit"](written, p["props"])
-        finally:
-            p["release"]()
+        written, write_ms = p["write"].result()
+        t_w = time.monotonic()
+        per_bucket = _bucket_counters(p["stats"].result())
+        t_s = time.monotonic()
+        s = _stats_from_rows(per_bucket)
+        self._append_bucket_metrics(b, per_bucket)
+        self._append_metrics_row(
+            b, s["events"], s["ups"], s["dels"], s["keys"], p["n_ops"],
+            int((t_s - p["t0"]) * 1000),
+        )
+        p["commit"](written, p["props"])
         t_c = time.monotonic()
         self._commits_since_expire += 1
         return {
@@ -1381,7 +1347,7 @@ class ReplayEngine:
             "duration_ms": int((t_c - p["t0"]) * 1000),
             "rows_in": s["events"], "distinct_keys": s["keys"],
             "upserts": s["ups"], "deletes": s["dels"],
-            "lww_path": p["lww_path"], "pipelined": p["pipelined"],
+            "pipelined": p["pipelined"],
             "timings_ms": {
                 "plan": p["plan_ms"], "write": write_ms,
                 "stats_wait": int((t_s - t_w) * 1000),

@@ -48,14 +48,6 @@ def _build_parser() -> argparse.ArgumentParser:
         )
         sp.add_argument("--compact-threshold", type=int, default=8)
         sp.add_argument(
-            "--lww-strategy", choices=["broadcast", "agg", "salted"], default="broadcast",
-            help="winner kernel: 'broadcast' = thin-agg winner offsets "
-            "broadcast-joined back (auto-degrades to the hash agg above "
-            "the key budget); 'agg' = fused map-side-combined hash agg; "
-            "'salted' = explicit two-stage (key,salt) pre-split for "
-            "payloads too wide for map-side combine to absorb hot keys",
-        )
-        sp.add_argument(
             "--tombstone-watermark",
             help="ingest disorder bound (no future event may carry a "
             "commit strictly below it): stored tombstones older than it "
@@ -308,7 +300,6 @@ def main(argv: list[str] | None = None) -> int:
             status_dim=status_dim, delete_guard=guard,
             status_col=args.status_col, mode=args.mode or "mor",
             num_buckets=args.buckets,
-            lww_strategy=args.lww_strategy,
             compact_threshold=args.compact_threshold,
             tombstone_commit_watermark=args.tombstone_watermark,
             compact_delta_fraction=args.compact_delta_fraction,
@@ -329,7 +320,6 @@ def main(argv: list[str] | None = None) -> int:
     engine_kwargs = dict(
         num_buckets=args.buckets,
         compact_threshold=args.compact_threshold,
-        lww_strategy=args.lww_strategy,
         tombstone_commit_watermark=args.tombstone_watermark,
         compact_delta_fraction=args.compact_delta_fraction,
         compact_sort=args.compact_sort,
@@ -394,7 +384,6 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.changelog, args.table, args.checkpoint,
             num_buckets=args.buckets, mode=args.mode or "mor",
             compact_threshold=args.compact_threshold,
-            lww_strategy=args.lww_strategy,
             tombstone_commit_watermark=args.tombstone_watermark,
             compact_delta_fraction=args.compact_delta_fraction,
             compact_sort=args.compact_sort,

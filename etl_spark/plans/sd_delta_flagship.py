@@ -94,7 +94,6 @@ def run_sd_delta_flagship(
     status_col: str = "status",
     mode: str = "cow",
     num_buckets: int = 8,
-    lww_strategy: str = "broadcast",
     compact_threshold: int = 8,
     tombstone_commit_watermark: str | None = None,
     compact_delta_fraction: float | None = None,
@@ -112,7 +111,7 @@ def run_sd_delta_flagship(
     engine = ReplayEngine(
         spark, table_root, num_buckets=num_buckets, mode=mode,
         target_columns=FLAGSHIP_COLUMNS,
-        lww_strategy=lww_strategy, compact_threshold=compact_threshold,
+        compact_threshold=compact_threshold,
         tombstone_commit_watermark=tombstone_commit_watermark,
         compact_delta_fraction=compact_delta_fraction,
         compact_sort=compact_sort,

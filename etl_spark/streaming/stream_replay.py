@@ -61,7 +61,6 @@ def stream_replay(
     max_files_per_trigger: int | None = None,
     mode: str = "cow",
     compact_threshold: int = 8,
-    lww_strategy: str = "broadcast",
     tombstone_commit_watermark: str | None = None,
     compact_delta_fraction: float | None = None,
     compact_sort: bool = True,
@@ -80,7 +79,7 @@ def stream_replay(
     pipeline-drained by construction)."""
     engine = ReplayEngine(
         spark, table_root, num_buckets=num_buckets, mode=mode,
-        compact_threshold=compact_threshold, lww_strategy=lww_strategy,
+        compact_threshold=compact_threshold,
         tombstone_commit_watermark=tombstone_commit_watermark,
         compact_delta_fraction=compact_delta_fraction,
         compact_sort=compact_sort,

@@ -1000,8 +1000,9 @@ class ManifestTable:
     def bucket_for_key(self, values: dict, snapshot: Snapshot | None = None) -> int:
         """The bucket a fully-specified key routes to — computed by the
         JVM's own ``hash``/``pmod`` on typed literals (constant-folded,
-        no job, no Python workers), so it is the bucket ``bucket_expr``
-        assigns by construction."""
+        no Python workers), so it is the bucket ``bucket_expr`` assigns
+        by construction. The ``.first()`` still runs one Spark job per
+        call."""
         snap = snapshot or self.current_snapshot()
         types = {c.name: c.type for c in snap.schema.columns}
         casts = ", ".join(

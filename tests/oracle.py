@@ -4,14 +4,18 @@ Applies the whole change log in one pass — last writer per key by
 (commit, offset), deletes drop the key — using the SAME pure
 normalization function the engine's pandas_udf wraps. The engine's
 multi-batch, partitioned, fenced replay must land on exactly this state
-(FIXTURES.md invariants 1-3).
+(FIXTURES.md invariants 1-3). ``lww_winners_window`` is the same rule
+as a Spark window, for kernel-level parity tests.
 """
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 from etl_spark.functions.normalize import normalize_content, sha256_hex
+from etl_spark.schema import KEY_COLUMNS, ORDER_COLUMNS
 
 
 def apply_log_oracle(log: pd.DataFrame) -> pd.DataFrame:
@@ -35,4 +39,26 @@ def apply_log_oracle(log: pd.DataFrame) -> pd.DataFrame:
         final[["repo", "path", "commit", "lang", "content", "content_sha256"]]
         .sort_values(["repo", "path"])
         .reset_index(drop=True)
+    )
+
+
+def lww_winners_window(
+    df: DataFrame,
+    key_columns: list[str] | None = None,
+    order_columns: list[str] | None = None,
+    tiebreak: str | None = None,
+) -> DataFrame:
+    """Window formulation (row_number over desc order) — semantically
+    identical to ``etl_spark.cdc.lww``'s kernels, and the Spark-side
+    parity oracle they are checked against."""
+    keys = key_columns or KEY_COLUMNS
+    order = list(order_columns or ORDER_COLUMNS)
+    if tiebreak:
+        order.append(tiebreak)
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc_nulls_last() for c in order])
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+        .select(*df.columns)
     )

@@ -16,8 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.cdc.changelog import generate_changelog
+from etl_spark.cdc.lww import lww_winners, lww_winners_broadcast
 from etl_spark.cdc.replay import ReplayEngine
+from etl_spark.functions.normalize import with_content_sha256
 from tests.oracle import apply_log_oracle
+
+KERNELS = {"agg": lww_winners, "broadcast": lww_winners_broadcast}
 
 HOSTILE_CONTENT = [
     "",  # empty body
@@ -36,12 +40,12 @@ HOSTILE_CONTENT = [
 
 
 # the fingerprint is attached before the winner kernel, so it reaches
-# the table through a broadcast join under one kernel and a max_by
-# struct under the other ('salted' has the agg shape; the property
-# test covers it)
-@pytest.mark.parametrize("lww_strategy", ["broadcast", "agg"])
+# the table inside the engine kernel's max_by struct; the broadcast
+# comparison kernel (timed against it by the benchmark) must carry the
+# same bytes and hashes through its equality join
+@pytest.mark.parametrize("kernel", ["broadcast", "agg"])
 @pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_replay_parity_on_hostile_content(spark, tmp_path, mode, lww_strategy):
+def test_replay_parity_on_hostile_content(spark, tmp_path, mode, kernel):
     log = generate_changelog(
         spark, 240, seed=11, n_repos=2, paths_per_repo=8, num_batches=3
     )
@@ -66,10 +70,10 @@ def test_replay_parity_on_hostile_content(spark, tmp_path, mode, lww_strategy):
 
     eng = ReplayEngine(
         spark, str(tmp_path / f"t_{mode}"), num_buckets=3, mode=mode,
-        compact_threshold=2, lww_strategy=lww_strategy,
+        compact_threshold=2,
     )
     results = eng.replay(log)
-    assert {r["lww_path"] for r in results} == {lww_strategy}
+    assert [r["skipped"] for r in results] == [False] * 3
     got = (
         eng.read_state()
         .select("repo", "path", "commit", "lang", "content", "content_sha256")
@@ -80,3 +84,14 @@ def test_replay_parity_on_hostile_content(spark, tmp_path, mode, lww_strategy):
     # exact equality: raw content bytes survive parquet + Arrow intact,
     # and the vectorized sha256 equals the scalar twin on every row
     pd.testing.assert_frame_equal(got, want.reset_index(drop=True))
+
+    # the kernel resolves the whole fingerprinted log to the same state
+    resolved = (
+        KERNELS[kernel](with_content_sha256(log.drop("batch_id")))
+        .where(F.col("op") != "D")
+        .select("repo", "path", "commit", "lang", "content", "content_sha256")
+        .toPandas()
+        .sort_values(["repo", "path"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(resolved, want.reset_index(drop=True))

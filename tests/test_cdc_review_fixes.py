@@ -15,9 +15,7 @@
 5. the changelog generator's advertised same-commit ties actually
    occur (the hash suffix used to differ per offset, so the
    (commit, offset) tie-break branch was never exercised).
-6. resolve_state forwards the salt for lww_strategy='salted' and the
-   winners match the unsalted aggregation exactly.
-7. the mor pipelined replay re-checks the compaction threshold after
+6. the mor pipelined replay re-checks the compaction threshold after
    the final drain, matching the sequential path's end state.
 """
 
@@ -32,7 +30,6 @@ from pyspark.sql import functions as F
 from etl_spark.cdc.changelog import generate_changelog
 from etl_spark.cdc.chain import WATERMARK_PROP, propagate_changes
 from etl_spark.cdc.classify import classify_events
-from etl_spark.cdc.merge import resolve_state
 from etl_spark.cdc.replay import ReplayEngine
 from etl_spark.schema import SCHEMA_EVOLUTION_SCHEMA
 
@@ -157,27 +154,6 @@ def test_changelog_generates_real_commit_ties(spark):
     assert rows, "no same-commit ties generated — tie-break untested"
     # ties are real LWW ties: same commit string, distinct offsets
     assert all(r["d"] == r["n"] for r in rows)
-
-
-def test_resolve_state_salted_matches_agg(spark):
-    log = generate_changelog(
-        spark, 2000, seed=13, n_repos=3, paths_per_repo=15, num_batches=1
-    )
-    raw = (
-        log.withColumnRenamed("offset", "_ingest_offset")
-        .withColumn("_deleted", F.col("op") == "D")
-        .drop("op", "batch_id")
-    )
-    cols = ["repo", "path", "commit", "_ingest_offset"]
-
-    def run(strategy):
-        return (
-            resolve_state(raw, lww_strategy=strategy)
-            .select(*cols).toPandas()
-            .sort_values(["repo", "path"]).reset_index(drop=True)
-        )
-
-    pd.testing.assert_frame_equal(run("salted"), run("agg"))
 
 
 def test_pipelined_replay_compacts_after_final_drain(spark, tmp_path):

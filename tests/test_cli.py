@@ -3,8 +3,8 @@
 The CLI is the production entry point the north rule names; these tests
 drive each subcommand end-to-end in-process (build_session reuses the
 active test session) and assert that every advertised flag actually
-reaches the engine — a --lww-strategy/--compact-threshold that parses
-but is silently ignored must fail here.
+reaches the engine — a --compact-threshold/--tombstone-watermark that
+parses but is silently ignored must fail here.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ def test_cli_generate_replay_state_metrics(spark, capsys, cli_dirs):
     root, wal = cli_dirs
     table = str(root / "t1")
     rc = main(["replay", "--changelog", wal, "--table", table, "--mode", "mor",
-               "--lww-strategy", "salted", "--tombstone-watermark", "c000",
+               "--tombstone-watermark", "c000",
                "--compact-delta-fraction", "0.2"])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -61,13 +61,11 @@ def test_cli_flags_reach_engine(spark, capsys, cli_dirs, monkeypatch):
 
     monkeypatch.setattr(replay_mod.ReplayEngine, "__init__", spy)
     rc = main(["replay", "--changelog", wal, "--table", str(root / "t2"),
-               "--mode", "mor", "--lww-strategy", "agg",
-               "--compact-threshold", "5", "--tombstone-watermark", "c123",
+               "--mode", "mor", "--compact-threshold", "5", "--tombstone-watermark", "c123",
                "--compact-delta-fraction", "0.3", "--no-compact-sort",
                "--expire-every", "2", "--expire-keep-last", "3"])
     assert rc == 0
     capsys.readouterr()
-    assert seen["lww_strategy"] == "agg"
     assert seen["compact_threshold"] == 5
     assert seen["tombstone_commit_watermark"] == "c123"
     assert seen["compact_delta_fraction"] == 0.3

@@ -6,12 +6,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from etl_spark.cdc.changelog import generate_changelog
-from etl_spark.cdc.lww import lww_winners, lww_winners_window
+from etl_spark.cdc.lww import lww_winners
 from etl_spark.functions.normalize import (
     normalize_content,
     normalize_series,
     sha256_hex,
 )
+from tests.oracle import lww_winners_window
 
 
 @pytest.fixture(scope="module")

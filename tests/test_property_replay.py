@@ -1,5 +1,5 @@
 """Property-based replay determinism: for RANDOM changelog shapes
-(seed, skew, op mix, batch split, mode, strategy), replaying the log
+(seed, skew, op mix, batch split, mode, pipeline depth), replaying the log
 always reaches the pandas oracle's final state with exact sha256
 parity. The deterministic seed-42 suites pin known shapes; this sweeps
 the shape space (bounded examples — each case is a full engine run)."""
@@ -29,7 +29,6 @@ CASE = st.fixed_dictionaries(
         "p_insert": st.floats(min_value=0.1, max_value=0.7),
         "p_update": st.floats(min_value=0.0, max_value=0.3),
         "mode": st.sampled_from(["cow", "mor"]),
-        "lww_strategy": st.sampled_from(["broadcast", "agg", "salted"]),
         # one replay loop at every depth: 1 is the sequential replay
         "pipeline_depth": st.sampled_from([1, 2, 4]),
     }
@@ -40,13 +39,10 @@ CASE = st.fixed_dictionaries(
 def mk_engine(spark, tmp_path_factory):
     counter = {"n": 0}
 
-    def make(mode, lww_strategy):
+    def make(mode):
         counter["n"] += 1
         root = tmp_path_factory.mktemp("prop") / f"t{counter['n']}"
-        return ReplayEngine(
-            spark, str(root), num_buckets=3, mode=mode, lww_strategy=lww_strategy,
-            compact_threshold=2,
-        )
+        return ReplayEngine(spark, str(root), num_buckets=3, mode=mode, compact_threshold=2)
 
     return make
 
@@ -73,7 +69,7 @@ def test_replay_matches_oracle_for_random_shapes(spark, mk_engine, case):
     )
     pdf = log.toPandas()
     want = apply_log_oracle(pdf)
-    eng = mk_engine(case["mode"], case["lww_strategy"])
+    eng = mk_engine(case["mode"])
     results = eng.replay(log, pipeline_depth=case["pipeline_depth"])
     for r in results:
         assert set(r["timings_ms"]) == {"plan", "write", "stats_wait", "commit"}
@@ -96,8 +92,6 @@ CRASH_CASE = st.fixed_dictionaries(
         "num_batches": st.integers(min_value=2, max_value=5),
         "crash_at": st.integers(min_value=1, max_value=4),  # mod num_batches
         "mode": st.sampled_from(["cow", "mor"]),
-        "strategy_before": st.sampled_from(["broadcast", "agg", "salted"]),
-        "strategy_after": st.sampled_from(["broadcast", "agg", "salted"]),
         "pipeline_depth": st.sampled_from([1, 2, 4]),
     }
 )
@@ -114,10 +108,8 @@ def test_crash_resume_matches_oracle_for_random_shapes(
 ):
     """Randomized crash/resume: replay a random prefix of the batches,
     drop the engine handle (crash at a commit boundary), resume the FULL
-    log through a fresh handle — possibly under a DIFFERENT LWW strategy
-    (strategies are per-engine, not recorded; all three are algebraically
-    identical) — and land byte-exactly on the pandas oracle. A second
-    full re-replay must then be a pure fence no-op."""
+    log through a fresh handle, and land byte-exactly on the pandas
+    oracle. A second full re-replay must then be a pure fence no-op."""
     log = generate_changelog(
         spark,
         case["n_events"],
@@ -130,18 +122,12 @@ def test_crash_resume_matches_oracle_for_random_shapes(
     want = apply_log_oracle(pdf).reset_index(drop=True)
     k = 1 + (case["crash_at"] % case["num_batches"])  # 1..num_batches
     root = str(tmp_path_factory.mktemp("crash") / "t")
-    eng1 = ReplayEngine(
-        spark, root, num_buckets=3, mode=case["mode"],
-        lww_strategy=case["strategy_before"], compact_threshold=2,
-    )
+    eng1 = ReplayEngine(spark, root, num_buckets=3, mode=case["mode"], compact_threshold=2)
     depth = case["pipeline_depth"]
     eng1.replay(log, batches=list(range(k)), pipeline_depth=depth)
     del eng1  # crash at the k-th commit boundary
 
-    eng2 = ReplayEngine(
-        spark, root, num_buckets=3, mode=case["mode"],
-        lww_strategy=case["strategy_after"], compact_threshold=2,
-    )
+    eng2 = ReplayEngine(spark, root, num_buckets=3, mode=case["mode"], compact_threshold=2)
     eng2.replay(log, pipeline_depth=depth)  # applied prefix fences out; remainder applies
 
     def state(eng):
@@ -172,7 +158,6 @@ NULL_CASE = st.fixed_dictionaries(
         "null_content_mod": st.integers(min_value=2, max_value=9),
         "null_lang_mod": st.integers(min_value=2, max_value=9),
         "mode": st.sampled_from(["cow", "mor"]),
-        "lww_strategy": st.sampled_from(["broadcast", "agg", "salted"]),
     }
 )
 
@@ -188,7 +173,7 @@ def test_replay_matches_oracle_with_null_payloads(spark, mk_engine, case):
     deterministically to every non-NULL commit, with offset breaking
     ties among NULLs), NULL content (null sha256, never a crash), and
     NULL lang are injected at random densities into random log shapes;
-    replay in a random mode/strategy must still land byte-exactly on
+    replay in a random mode must still land byte-exactly on
     the pandas oracle (whose na_position='first' pins the same
     NULL-commit ordering contract the engine's struct max implements)."""
     from pyspark.sql import functions as F
@@ -217,7 +202,7 @@ def test_replay_matches_oracle_with_null_payloads(spark, mk_engine, case):
     )
     pdf = log.toPandas()
     want = apply_log_oracle(pdf)
-    eng = mk_engine(case["mode"], case["lww_strategy"])
+    eng = mk_engine(case["mode"])
     eng.replay(log)
     got = (
         eng.read_state()

@@ -240,7 +240,8 @@ def test_null_commit_is_orderable_and_strategy_consistent(spark, tmp_path):
     """A NULL commit is ALLOWED through the contract check and loses to
     every non-NULL commit, identically in all three LWW strategies."""
     from etl_spark.cdc import ReplayEngine
-    from etl_spark.cdc.lww import lww_winners, lww_winners_broadcast, lww_winners_window
+    from etl_spark.cdc.lww import lww_winners, lww_winners_broadcast
+    from tests.oracle import lww_winners_window
 
     df = spark.createDataFrame(
         [("r1", "a", None, 5, "x"), ("r1", "a", "c2", 3, "y"), ("r2", "b", None, 7, "z")],

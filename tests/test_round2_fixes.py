@@ -81,25 +81,6 @@ def test_crash_between_evolution_and_data_commit(spark, tmp_path, changelog, mon
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_broadcast_fallback_above_key_budget(spark, tmp_path, changelog, oracle_state):
-    """VERDICT r01 #5/#8: a batch with more distinct keys than the
-    broadcast budget degrades to the hash-agg winner kernel instead of
-    OOMing the driver broadcast — same final state."""
-    eng = ReplayEngine(spark, str(tmp_path / "fb"), num_buckets=4,
-                       lww_strategy="broadcast", broadcast_key_budget=1)
-    results = eng.replay(changelog)
-    assert all(r["lww_path"] == "agg-fallback" for r in results)
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(engine_state(eng), oracle_state)
-
-    # control: default budget keeps the broadcast path
-    eng2 = ReplayEngine(spark, str(tmp_path / "fb2"), num_buckets=4)
-    results2 = eng2.replay(changelog)
-    assert all(r["lww_path"] == "broadcast" for r in results2)
-    pd.testing.assert_frame_equal(engine_state(eng2), oracle_state)
-
-
 def test_double_read_wal_file_mor(spark, tmp_path, changelog, oracle_state):
     """ADVICE r01: a batch containing every event twice (double-read WAL
     file) must still resolve to exactly one row per key under mor — the

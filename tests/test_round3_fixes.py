@@ -398,30 +398,3 @@ def test_compact_min_delta_fraction(spark, tmp_path):
     eager = {tuple(r) for r in eng.read_state().select("repo", "path", "commit").collect()}
     assert lazy == eager
     assert base_state  # sanity: the base had rows
-
-
-# ----------------------------------------------- salted LWW engine strategy
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_salted_lww_strategy_end_to_end(spark, tmp_path, mode):
-    """``lww_strategy='salted'`` (explicit two-stage (key, salt)
-    pre-split — the north-rule's salted repartitioning as a first-class
-    engine config) must replay to the identical final state as the
-    broadcast kernel, and report the salted path in its counters."""
-    from etl_spark.cdc.changelog import generate_changelog
-    from etl_spark.cdc.replay import ReplayEngine
-
-    log = generate_changelog(spark, 5000, seed=21, n_repos=3, paths_per_repo=10,
-                             hot_share=0.6, num_batches=3)
-    log.cache()
-
-    ref = ReplayEngine(spark, str(tmp_path / "ref"), num_buckets=4, mode=mode)
-    ref.replay(log)
-
-    salted = ReplayEngine(spark, str(tmp_path / "salted"), num_buckets=4, mode=mode,
-                          lww_strategy="salted")
-    res = salted.replay(log)
-    assert all(r.get("lww_path") == "agg-salted" for r in res if not r.get("skipped"))
-
-    a = ref.read_state().orderBy("repo", "path").collect()
-    b = salted.read_state().orderBy("repo", "path").collect()
-    assert a == b
