@@ -170,7 +170,8 @@ def check_wal_shape(
                 f"applied but batch {max_applied} already was — the "
                 f"committed offset fence is past batch {b}'s events, "
                 "so applying it now would silently drop them. Apply "
-                "batches in ascending id order."
+                "batches in ascending id order (an empty batch may close "
+                "the gap)."
             )
         if (
             fence is not None
@@ -1095,22 +1096,9 @@ class ReplayEngine:
             check_contract_nulls(row, keys, batch_id)
             bounds = (row["lo"], row["hi"])
         # WAL contract (see replay's docstring): a NON-EMPTY batch below
-        # an already-applied id has its offsets at/below the committed
-        # fence — applying it now would silently drop every event, so
-        # refuse loudly. An EMPTY batch below the max id is legitimate:
-        # it closes a residual-window gap (marks the id applied) without
-        # any events to lose. Re-delivered windows carry a NEW (higher)
-        # batch id and replay as empty batches; only true out-of-order
-        # application trips this.
-        max_applied = max([applied_wm] + [int(x) for x in applied])
-        if batch_id < max_applied and bounds[0] is not None:
-            raise ValueError(
-                f"out-of-order batch application: batch {batch_id} was "
-                f"never applied but batch {max_applied} already was — "
-                "its events are at/below the committed offset fence and "
-                "would be silently dropped. Apply batches in ascending "
-                "id order (an empty batch may close the gap)."
-            )
+        # an already-applied id is refused; an EMPTY one closes a
+        # residual-window gap (marks the id applied) with no events to lose
+        check_wal_shape({batch_id: bounds}, [batch_id], applied_wm, applied)
         ops_rows = None
         if schema_ops is not None:
             # full-frame collect (tiny: DDL events) so the contract check

@@ -10,14 +10,17 @@ pointer swap + snapshot properties + schema evolution by column id):
   schema version it was written under. Commit = exclusive CLAIM of the
   next ``snapshot-{v}.json`` (``os.link`` — the local-FS analog of a
   catalog CAS; on a real deployment this claim lives in a catalog /
-  Iceberg metastore). Concurrent commits conflict on the claim:
-  appends rebase and retry (they commute), bucket rewrites rebase only
-  when no concurrent commit touched their buckets, otherwise
-  ``CommitConflictError`` propagates. The ``_current`` pointer is a
-  monotonic cache readers treat as a floor.
-- **Copy-on-write per bucket**: a MERGE rewrites only the buckets touched
-  by the source batch; untouched buckets are carried over by reference.
-  At 10^10 events / 100 TB this is what keeps merge cost proportional to
+  Iceberg metastore). Every commit after ``create`` runs one loop,
+  ``_commit_next``: a lost claim re-runs the commit kind's step on the
+  new snapshot, which rebases or refuses. Appends rebase unless a
+  rebucket replaced their layout; bucket rewrites rebase while their
+  buckets, schema and bucket count match their basis; overwrites
+  rebase unless a DDL or rebucket landed; DDL and property updates
+  re-run; ``rebucket`` and ``rollback`` never rebase. The ``_current``
+  pointer is a monotonic cache readers treat as a floor.
+- **Copy-on-write per bucket**: a cow batch rewrites only the buckets
+  it touches; untouched buckets are carried over by reference. At
+  10^10 events / 100 TB this is what keeps merge cost proportional to
   the delta, not the table.
 - **Bucketing**: ``pmod(hash(repo, path), num_buckets)`` (murmur3 —
   Spark's own shuffle hash, see ``bucket_expr``) — the same deterministic
@@ -72,7 +75,7 @@ import re
 import uuid
 from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,9 +109,10 @@ _MIGRATE = (
 # ~10-touched-bucket commits at 10^5 buckets).
 GROUP_SIZE = 64
 
-# Bounded rebase attempts for commits that can safely retry after a
-# concurrent commit claimed their snapshot version (appends always can;
-# bucket rewrites can when no concurrent commit touched their buckets).
+# Claim attempts per commit in ``ManifestTable._commit_next``: a lost
+# claim re-runs the commit's step against the new snapshot, which
+# either rebases or refuses (see the module docstring for each commit
+# kind's rule); after this many lost claims the last conflict raises.
 COMMIT_RETRIES = 5
 
 
@@ -276,8 +280,10 @@ class Snapshot:
     num_buckets: int
     # bucket -> list of {"path": dir, "sv": schema_version, "kind":
     #   "base"|"delta", "nb": bucket count, "bytes", "rows", "stats"}.
-    # A ShardedFileMap once read or committed; create / overwrite /
-    # rebucket build a plain dict, which to_json adopts.
+    # A ShardedFileMap once read or committed. create / overwrite /
+    # rebucket commit a plain dict, which to_json adopts; appends and
+    # rewrites derive theirs with ShardedFileMap.updated, and
+    # metadata-only commits alias an existing snapshot's map.
     files: Mapping[int, list[dict]]
     properties: dict = field(default_factory=dict)
     bucket_fn: str = BUCKET_FN
@@ -981,6 +987,35 @@ class ManifestTable:
                 f.write(name)
             os.replace(ptr_tmp, ptr_path)
 
+    @staticmethod
+    def _child(parent: Snapshot, properties_update: dict | None = None, **fields) -> Snapshot:
+        """The next version of ``parent``: its fields, with ``fields``
+        replaced and ``properties_update`` merged over its properties
+        (unless ``fields`` sets ``properties`` outright)."""
+        fields.setdefault("properties", {**parent.properties, **(properties_update or {})})
+        return replace(parent, version=parent.version + 1, **fields)
+
+    def _commit_next(self, step, first: Snapshot | None = None) -> Snapshot:
+        """The one commit loop. ``step(parent)`` returns the child
+        snapshot to claim, or raises to refuse; a refusal is never
+        retried. A lost claim re-reads the current snapshot and runs
+        ``step`` again, at most ``COMMIT_RETRIES`` claims in all, then
+        the last ``CommitConflictError`` raises. ``first`` is the
+        snapshot the first attempt commits against (default: the
+        current one)."""
+        parent = first if first is not None else self.current_snapshot()
+        for attempt in range(COMMIT_RETRIES):
+            if attempt:
+                parent = self.current_snapshot()
+            child = step(parent)
+            try:
+                self._commit(child)
+                return child
+            except CommitConflictError:
+                if attempt == COMMIT_RETRIES - 1:
+                    raise
+        raise AssertionError("unreachable")
+
     # ---------- read ----------
 
     def _map_to_schema(self, df: DataFrame, from_schema: TableSchema, to_schema: TableSchema) -> DataFrame:
@@ -1238,23 +1273,18 @@ class ManifestTable:
         sv = snap.current_schema_version
         written = self._write_bucketed(df.select(*snap.schema.names()), snap, "ow")
         files = {b: [e] for b, e in self._entries(written, sv, "base", snap).items()}
-        base = snap
-        for attempt in range(COMMIT_RETRIES):
-            if attempt:
-                base = self.current_snapshot()
-                if base.current_schema_version != sv or base.num_buckets != snap.num_buckets:
-                    raise CommitConflictError(
-                        "concurrent schema evolution or rebucket during "
-                        "overwrite; re-plan"
-                    )
-            try:
-                # full replace: a rebase just takes the next version —
-                # replacing everything is the operation's semantics
-                return self._commit_snapshot_like(base, files, properties_update)
-            except CommitConflictError:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-        raise AssertionError("unreachable")
+
+        def step(parent: Snapshot) -> Snapshot:
+            if parent.current_schema_version != sv or parent.num_buckets != snap.num_buckets:
+                raise CommitConflictError(
+                    "concurrent schema evolution or rebucket during "
+                    "overwrite; re-plan"
+                )
+            # full replace: a rebase just takes the next version —
+            # replacing everything is the operation's semantics
+            return self._child(parent, properties_update, files=files)
+
+        return self._commit_next(step, first=snap)
 
     def rewrite_buckets(
         self,
@@ -1286,8 +1316,9 @@ class ManifestTable:
         new_entries = self.write_rewrite_files(
             df, basis, files_per_bucket=files_per_bucket, sort_columns=sort_columns
         )
-        return self.commit_rewritten(
-            buckets, new_entries, basis, properties_update, _base0=snap
+        return self._commit_next(
+            self._rewrite_step(buckets, new_entries, basis, properties_update),
+            first=snap,
         )
 
     def write_rewrite_files(
@@ -1314,23 +1345,34 @@ class ManifestTable:
         new_entries: dict[int, dict],
         basis: Snapshot,
         properties_update: dict | None = None,
-        _base0: Snapshot | None = None,
     ) -> Snapshot:
         """The COMMIT half of ``rewrite_buckets``: atomically replace
         ``buckets`` with the prepared ``new_entries``. Same serialization
         rule as ``rewrite_buckets`` (entries of the rewritten buckets and
         the schema are compared against ``basis`` before every attempt;
         conflicts on OTHER buckets rebase and retry)."""
-        sv = basis.current_schema_version
-        base = _base0 or self.current_snapshot()
-        for attempt in range(COMMIT_RETRIES):
-            if attempt:
-                base = self.current_snapshot()
+        return self._commit_next(
+            self._rewrite_step(buckets, new_entries, basis, properties_update)
+        )
+
+    def _rewrite_step(
+        self, buckets: list[int], new_entries: dict[int, dict],
+        basis: Snapshot, properties_update: dict | None,
+    ):
+        """A bucket rewrite's commit step: rebase only while the
+        rewritten buckets, the schema and the bucket count still match
+        ``basis``."""
+        # rewritten buckets are replaced (possibly to empty when all
+        # rows were deleted); untouched buckets keep their shard refs
+        changes: dict[int, list] = {b: [] for b in buckets}
+        changes.update({b: [e] for b, e in new_entries.items()})
+
+        def step(parent: Snapshot) -> Snapshot:
             if (
-                base.current_schema_version != sv
-                or base.num_buckets != basis.num_buckets
+                parent.current_schema_version != basis.current_schema_version
+                or parent.num_buckets != basis.num_buckets
                 or any(
-                    base.files.get(b, []) != basis.files.get(b, [])
+                    parent.files.get(b, []) != basis.files.get(b, [])
                     for b in buckets
                 )
             ):
@@ -1339,34 +1381,13 @@ class ManifestTable:
                     "layout this rewrite resolved from; re-plan from the "
                     "current snapshot"
                 )
-            # rewritten buckets are replaced (possibly to empty when all
-            # rows were deleted); untouched buckets keep their shard refs
-            changes: dict[int, list] = {b: [] for b in buckets}
-            changes.update({b: [e] for b, e in new_entries.items()})
-            files = base.files.updated(
+            files = parent.files.updated(
                 {b: v for b, v in changes.items() if v},
                 {b for b, v in changes.items() if not v},
             )
-            try:
-                return self._commit_snapshot_like(base, files, properties_update)
-            except CommitConflictError:
-                if attempt == COMMIT_RETRIES - 1:
-                    raise
-        raise AssertionError("unreachable")
+            return self._child(parent, properties_update, files=files)
 
-    def _commit_snapshot_like(
-        self, base: Snapshot, files: dict, properties_update: dict | None
-    ) -> Snapshot:
-        new = Snapshot(
-            version=base.version + 1,
-            current_schema_version=base.current_schema_version,
-            schemas=base.schemas,
-            num_buckets=base.num_buckets,
-            files=files,
-            properties={**base.properties, **(properties_update or {})},
-        )
-        self._commit(new)
-        return new
+        return step
 
     def append_buckets(
         self, df: DataFrame, properties_update: dict | None = None,
@@ -1400,9 +1421,8 @@ class ManifestTable:
         return self._entries(written, snap.current_schema_version, "delta", snap)
 
     def commit_appended(
-        self, written: dict[int, str | dict], schema_version: int,
+        self, written: dict[int, dict], schema_version: int,
         properties_update: dict | None = None,
-        planned: Snapshot | None = None,
     ) -> Snapshot:
         """The COMMIT half of ``append_buckets``: atomically publish
         already-written delta files under the CURRENT snapshot (which may
@@ -1410,13 +1430,10 @@ class ManifestTable:
         because appends touch no existing files; callers must not
         interleave schema evolution with in-flight writes).
 
-        ``written`` values are either prepared entries from
-        ``write_delta_files`` (stats already collected) or bare dir
-        paths (stats collected here). Bare paths MUST come with
-        ``planned`` — the snapshot the files were written against — so
-        their ``nb`` layout stamp records the write-time bucket count;
-        stamping the commit-time count would let files hashed under a
-        since-replaced layout slip past the fence below.
+        ``written`` holds the prepared entries from ``write_delta_files``;
+        each records the schema version (``sv``) and bucket count
+        (``nb``) it was written under, so ``schema_version`` is not
+        consulted here.
 
         Appends COMMUTE (they touch no existing entries), so a
         ``CommitConflictError`` from a concurrent commit is resolved by
@@ -1425,57 +1442,29 @@ class ManifestTable:
         integrity only; the engine's exactly-once bookkeeping
         (``applied_batches``/``fence_offset`` in properties) still
         assumes one logical replay writer per table."""
-        raw = {b: v for b, v in written.items() if isinstance(v, str)}
-        prepared = {b: v for b, v in written.items() if not isinstance(v, str)}
-        if raw and planned is None:
-            raise ValueError(
-                "commit_appended received bare dir paths without the planning "
-                "snapshot: pass planned=<snapshot the files were written "
-                "against> (or use write_delta_files, which returns prepared "
-                "entries) so the layout fence can see the write-time bucket "
-                "count"
-            )
-        if raw:
-            prepared = {
-                **self._entries(raw, schema_version, "delta", planned),
-                **prepared,
-            }
-        last: CommitConflictError | None = None
-        for _ in range(COMMIT_RETRIES):
-            snap = self.current_snapshot()
+
+        def step(parent: Snapshot) -> Snapshot:
             # layout fence: delta files hashed under a bucket count that
             # a concurrent rebucket has since replaced must NOT rebase —
             # their rows would sit in wrong-bucket entries, invisible to
             # key-pruned reads and scattered by the next compaction
-            stale = [b for b, e in prepared.items() if e["nb"] != snap.num_buckets]
+            stale = [b for b, e in written.items() if e["nb"] != parent.num_buckets]
             if stale:
                 raise CommitConflictError(
                     f"delta files for buckets {sorted(stale)} were written under "
-                    f"a {prepared[stale[0]]['nb']}-bucket layout but the table "
-                    f"now has {snap.num_buckets} buckets (concurrent rebucket); "
+                    f"a {written[stale[0]]['nb']}-bucket layout but the table "
+                    f"now has {parent.num_buckets} buckets (concurrent rebucket); "
                     "re-plan the batch against the current snapshot"
                 )
-            entries = dict(prepared)
             # structural update shares untouched buckets' shard refs —
             # an append commit hydrates and re-serializes only the
             # buckets it touches
-            files = snap.files.updated(
-                {b: list(snap.files.get(b, [])) + [e] for b, e in entries.items()},
+            files = parent.files.updated(
+                {b: list(parent.files.get(b, [])) + [e] for b, e in written.items()},
             )
-            new = Snapshot(
-                version=snap.version + 1,
-                current_schema_version=snap.current_schema_version,
-                schemas=snap.schemas,
-                num_buckets=snap.num_buckets,
-                files=files,
-                properties={**snap.properties, **(properties_update or {})},
-            )
-            try:
-                self._commit(new)
-                return new
-            except CommitConflictError as e:
-                last = e
-        raise last
+            return self._child(parent, properties_update, files=files)
+
+        return self._commit_next(step)
 
     def delta_counts(self, snapshot: Snapshot | None = None) -> dict[int, int]:
         """{bucket: number of file entries} — >1 means unresolved deltas.
@@ -1645,43 +1634,6 @@ class ManifestTable:
         ])
         return self.spark.createDataFrame(rows, schema)
 
-    def merge(
-        self,
-        upserts: DataFrame,
-        delete_keys: DataFrame | None = None,
-        properties_update: dict | None = None,
-    ) -> Snapshot:
-        """Key-partitioned MERGE: copy-on-write of affected buckets only.
-
-        ``upserts``: exactly one row per key (caller runs LWW dedup first
-        — mirrors Iceberg MERGE's one-match-per-target-row rule), columns
-        = current schema. ``delete_keys``: key columns only.
-
-        Semantics == ``MERGE INTO t USING s ON t.key = s.key
-        WHEN MATCHED AND s.op='D' THEN DELETE
-        WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
-        """
-        snap = self.current_snapshot()
-        schema_names = snap.schema.names()
-
-        upserts = upserts.select(*schema_names)
-        all_keys = upserts.select(*self.key_columns)
-        if delete_keys is not None:
-            all_keys = all_keys.unionByName(delete_keys.select(*self.key_columns))
-
-        # which buckets does this batch touch? (small: <= num_buckets ints)
-        touched = [
-            r[0]
-            for r in all_keys.select(bucket_expr(self.key_columns, snap.num_buckets).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        existing = self.read(buckets=touched, snapshot=snap)
-        # keep target rows whose key is not in the batch, add the upserts
-        survivors = existing.join(all_keys.dropDuplicates(self.key_columns), on=self.key_columns, how="left_anti")
-        merged = survivors.unionByName(upserts)
-        return self.rewrite_buckets(touched, merged, properties_update, basis=snap)
-
     def rebucket(
         self,
         new_num_buckets: int,
@@ -1707,14 +1659,7 @@ class ManifestTable:
         rows = self.read(snapshot=basis)
         # a layout-carrier copy of the basis: _write_bucketed takes the
         # bucket count and schema from the snapshot it is given
-        carrier = Snapshot(
-            version=basis.version,
-            current_schema_version=basis.current_schema_version,
-            schemas=basis.schemas,
-            num_buckets=new_num_buckets,
-            files={},
-            properties=basis.properties,
-        )
+        carrier = replace(basis, num_buckets=new_num_buckets, files={})
         written = self._write_bucketed(
             rows, carrier, "rb",
             files_per_bucket=files_per_bucket, sort_within=sort_columns,
@@ -1724,21 +1669,18 @@ class ManifestTable:
         # ``nb`` stamp records the new layout (the basis would stamp the
         # dead one and poison any future layout-fence consumer)
         entries = self._entries(written, basis.current_schema_version, "base", carrier)
-        cur = self.current_snapshot()
-        if cur.version != basis.version:
-            raise CommitConflictError(
-                "concurrent commit during rebucket; re-run against the new state"
+
+        def step(parent: Snapshot) -> Snapshot:
+            if parent.version != basis.version:
+                raise CommitConflictError(
+                    "concurrent commit during rebucket; re-run against the new state"
+                )
+            return self._child(
+                parent, num_buckets=new_num_buckets,
+                files={b: [e] for b, e in entries.items()},
             )
-        new = Snapshot(
-            version=basis.version + 1,
-            current_schema_version=basis.current_schema_version,
-            schemas=basis.schemas,
-            num_buckets=new_num_buckets,
-            files={b: [e] for b, e in entries.items()},
-            properties=basis.properties,
-        )
-        self._commit(new)
-        return new
+
+        return self._commit_next(step)
 
     def added_files(self, from_version: int, to_version: int) -> dict[int, list[dict]]:
         """File entries present in ``to_version`` but not ``from_version``
@@ -1853,16 +1795,22 @@ class ManifestTable:
             k: v for k, v in cur.properties.items()
             if k.startswith(TAG_PROP_PREFIX)
         })
-        new = Snapshot(
-            version=cur.version + 1,
-            current_schema_version=old.current_schema_version,
-            schemas=old.schemas,
-            num_buckets=old.num_buckets,
-            files=old.files,
-            properties=props,
-        )
-        self._commit(new)
-        return new
+
+        def step(parent: Snapshot) -> Snapshot:
+            # commits only against ``cur``: a commit landing first
+            # would be silently rolled back over
+            if parent.version != cur.version:
+                raise CommitConflictError(
+                    f"concurrent commit during rollback to version {version}; "
+                    "re-run against the new state"
+                )
+            return self._child(
+                parent, current_schema_version=old.current_schema_version,
+                schemas=old.schemas, num_buckets=old.num_buckets,
+                files=old.files, properties=props,
+            )
+
+        return self._commit_next(step, first=cur)
 
     # ---------- properties / write-audit-publish ----------
 
@@ -1886,27 +1834,14 @@ class ManifestTable:
         NEWER snapshot while committing the stale value — e.g. a WAP
         base below a just-published commit, silently un-publishing it.
         ``compute`` may raise to abort (nothing commits)."""
-        last: CommitConflictError | None = None
-        for _ in range(COMMIT_RETRIES):
-            snap = self.current_snapshot()
-            if compute is not None:
-                set_props, remove = compute(snap)
-            props = {k: v for k, v in snap.properties.items() if k not in set(remove)}
-            props.update(set_props or {})
-            new = Snapshot(
-                version=snap.version + 1,
-                current_schema_version=snap.current_schema_version,
-                schemas=snap.schemas,
-                num_buckets=snap.num_buckets,
-                files=snap.files,
-                properties=props,
-            )
-            try:
-                self._commit(new)
-                return new
-            except CommitConflictError as e:
-                last = e
-        raise last
+
+        def step(parent: Snapshot) -> Snapshot:
+            sets, drops = compute(parent) if compute is not None else (set_props, remove)
+            props = {k: v for k, v in parent.properties.items() if k not in set(drops)}
+            props.update(sets or {})
+            return self._child(parent, properties=props)
+
+        return self._commit_next(step)
 
     def published_snapshot(self) -> Snapshot:
         """The snapshot published readers should resolve: the current
@@ -1942,7 +1877,6 @@ class ManifestTable:
                 "[A-Za-z0-9][A-Za-z0-9._-]* (it becomes a property key)"
             )
         key = TAG_PROP_PREFIX + name
-        pinned: list[int] = []
 
         # precondition + value computed against EACH attempt's snapshot
         # (update_properties' compute contract): checking against a
@@ -1962,11 +1896,9 @@ class ManifestTable:
                     f"{snap.properties[key]}; drop_tag first (tags are "
                     "immutable refs)"
                 )
-            pinned[:] = [v]
             return {key: str(v)}, ()
 
-        self.update_properties(compute=_compute)
-        return pinned[0]
+        return int(self.update_properties(compute=_compute).properties[key])
 
     def drop_tag(self, name: str) -> None:
         """Remove a tag; the version it pinned becomes expirable again
@@ -2205,9 +2137,8 @@ class ManifestTable:
         snapshot (DDL is metadata-only, so the rebase is free); if the
         concurrent commit made the mutation invalid — e.g. both writers
         adding the same column — the mutate itself raises."""
-        last: CommitConflictError | None = None
-        for _ in range(COMMIT_RETRIES):
-            snap = self.current_snapshot()
+
+        def step(snap: Snapshot) -> Snapshot:
             cur = snap.schema
             new_cols = mutate([ColumnDef(c.id, c.name, c.type, c.default) for c in cur.columns])
             props = {**snap.properties, **(properties_update or {})}
@@ -2231,20 +2162,13 @@ class ManifestTable:
                         kept.append(new_by_id[cid])
                 props["stats_columns"] = ",".join(dict.fromkeys(kept))
             new_sv = snap.current_schema_version + 1
-            new = Snapshot(
-                version=snap.version + 1,
-                current_schema_version=new_sv,
+            return self._child(
+                snap, current_schema_version=new_sv,
                 schemas={**snap.schemas, new_sv: TableSchema(new_cols)},
-                num_buckets=snap.num_buckets,
-                files=snap.files,
                 properties=props,
             )
-            try:
-                self._commit(new)
-                return new
-            except CommitConflictError as e:
-                last = e
-        raise last
+
+        return self._commit_next(step)
 
     def add_column(
         self, name: str, type_: str, default: object | None = None,

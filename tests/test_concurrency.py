@@ -170,6 +170,7 @@ def test_rewrite_rebases_over_disjoint_append(spark, table, monkeypatch):
     table.rewrite_buckets([target], rewritten)
     monkeypatch.setattr(ManifestTable, "current_snapshot", real)
 
+    assert calls["n"] >= 2  # the retry actually happened
     got = table.read().collect()
     vals = {r["v"] for r in got}
     assert {v for v in vals if v >= 10_000 and v < 11_000}, "rewrite lost"
@@ -316,6 +317,89 @@ def test_evolve_rebases_on_conflict(spark, table, monkeypatch):
     assert "extra" in snap.schema.names()
     # the concurrent append's rows were carried into the evolved snapshot
     assert {r["v"] for r in table.read().collect()} >= set(range(5000, 5010))
+
+
+def _stale_once(monkeypatch, stale):
+    """The next ``current_snapshot()`` returns ``stale``, so a commit's
+    first attempt plans against it and loses the claim."""
+    calls = {"n": 0}
+    real = ManifestTable.current_snapshot
+
+    def once_stale(self):
+        calls["n"] += 1
+        return stale if calls["n"] == 1 else real(self)
+
+    monkeypatch.setattr(ManifestTable, "current_snapshot", once_stale)
+    return calls
+
+
+def test_rollback_refuses_over_concurrent_commit(spark, table, monkeypatch):
+    """A rollback commits only against the snapshot it read: it raises,
+    and the commit that landed first stays current."""
+    target = table.current_snapshot().version
+    table.append_buckets(_rows(spark, 6000, 10))
+    stale = table.current_snapshot()
+    _second_handle(table).append_buckets(_rows(spark, 6100, 10))
+    _stale_once(monkeypatch, stale)
+    with pytest.raises(CommitConflictError):
+        table.rollback(target)
+    monkeypatch.undo()
+    assert table.current_snapshot().version == stale.version + 1
+    assert set(range(6000, 6010)) | set(range(6100, 6110)) <= {
+        r["v"] for r in table.read().collect()
+    }
+
+
+def test_overwrite_rebases_over_append_refuses_over_ddl(spark, table, monkeypatch):
+    """A full replace rebases over a concurrent append and replaces its
+    rows too; over a concurrent ``add_column`` it raises."""
+    stale = table.current_snapshot()
+    other = _second_handle(table)
+    other.append_buckets(_rows(spark, 8000, 10))
+    calls = _stale_once(monkeypatch, stale)
+    table.overwrite(_rows(spark, 9000, 20))
+    monkeypatch.undo()
+    assert calls["n"] >= 2  # the retry actually happened
+    assert table.current_snapshot().version == stale.version + 2
+    assert {r["v"] for r in table.read().collect()} == set(range(9000, 9020))
+
+    stale = table.current_snapshot()
+    other.add_column("extra", "string")
+    _stale_once(monkeypatch, stale)
+    with pytest.raises(CommitConflictError, match="schema evolution"):
+        table.overwrite(_rows(spark, 0, 5))
+    monkeypatch.undo()
+    assert "extra" in table.current_snapshot().schema.names()
+    assert {r["v"] for r in table.read().collect()} == set(range(9000, 9020))
+
+
+def test_update_properties_recomputes_on_retry(table, monkeypatch):
+    """``compute`` runs again on the retry, against the new snapshot: a
+    racing tagger's tag of the same name is refused, not re-pointed."""
+    stale = table.current_snapshot()
+    other = _second_handle(table)
+    other.update_properties({"who": "other"})
+    seen: list[int] = []
+
+    def compute(snap):
+        seen.append(snap.version)
+        return {"seen_version": str(snap.version)}, ()
+
+    _stale_once(monkeypatch, stale)
+    new = table.update_properties(compute=compute)
+    monkeypatch.undo()
+    assert seen == [stale.version, stale.version + 1]
+    assert new.properties["seen_version"] == str(stale.version + 1)
+    assert new.properties["who"] == "other"
+
+    stale = table.current_snapshot()
+    other.tag("gold")
+    calls = _stale_once(monkeypatch, stale)
+    with pytest.raises(ValueError, match="already points"):
+        table.tag("gold")
+    monkeypatch.undo()
+    assert calls["n"] >= 2  # the retry actually happened
+    assert table.tags() == {"gold": stale.version}
 
 
 def test_isolated_engines_replay_concurrently_without_conf_leak(spark, tmp_path):

@@ -10,7 +10,6 @@ from __future__ import annotations
 import glob
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.table.manifest import (
@@ -47,26 +46,23 @@ def test_fanout_write_nests_in_buckets(spark, tmp_path):
         key_columns=["repo", "path"], num_buckets=4,
     )
     snap = t2.current_snapshot()
-    written = t2._write_bucketed(df, snap, "fx", files_per_bucket=3)
+    written = t2.write_delta_files(df, snap, files_per_bucket=3)
     # k part files land under each bucket dir
-    for b, d in written.items():
-        parts = glob.glob(os.path.join(d, "part-*"))
+    for b, e in written.items():
+        parts = glob.glob(os.path.join(e["path"], "part-*"))
         assert 1 <= len(parts) <= 3
         # every row in the dir belongs to bucket b (nesting invariant)
-        got = spark.read.parquet(d)
+        got = spark.read.parquet(e["path"])
         from etl_spark.table.manifest import bucket_expr
 
         assert (
             got.filter(bucket_expr(["repo", "path"], 4) != F.lit(b)).count() == 0
         )
-    assert sum(len(glob.glob(os.path.join(d, "part-*"))) for d in written.values()) > 4
+    assert sum(
+        len(glob.glob(os.path.join(e["path"], "part-*"))) for e in written.values()
+    ) > 4
 
-    # bare dir paths require the planning snapshot (layout fence)
-    import pytest
-
-    with pytest.raises(ValueError, match="planning"):
-        t2.commit_appended(written, 1)
-    t2.commit_appended(written, 1, planned=snap)
+    t2.commit_appended(written, snap.current_schema_version)
     assert {(r["repo"], r["path"], r["v"]) for r in t2.read().collect()} == base
 
 
