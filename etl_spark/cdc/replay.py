@@ -1238,8 +1238,7 @@ class ReplayEngine:
                     # empty batch: a metadata-only commit still fences it
                     p.update(
                         write=dict, stats=list,
-                        commit=lambda w, props, sv=snap.current_schema_version:
-                            self.table.commit_appended(w, sv, props),
+                        commit=self.table.commit_appended,
                     )
                 else:
                     p.update(plan(snap, batch, b, delete_guard, gate))
@@ -1271,9 +1270,7 @@ class ReplayEngine:
         return {
             "write": lambda: self.table.write_delta_files(delta, snap),
             "stats": per_bucket_plan.collect,
-            "commit": lambda written, props: self.table.commit_appended(
-                written, snap.current_schema_version, props
-            ),
+            "commit": self.table.commit_appended,
         }
 
     def _plan_cow(self, snap, batch, batch_id, delete_guard, gate) -> dict:

@@ -25,7 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.cdc.replay import ReplayEngine, _applied_state, check_wal_shape
+from etl_spark.cdc.replay import (
+    ReplayEngine,
+    _applied_state,
+    check_contract_nulls,
+    check_wal_shape,
+    contract_null_aggs,
+)
 from etl_spark.schema import CHANGE_LOG_SCHEMA
 
 
@@ -153,12 +159,22 @@ def stream_replay(
             mb.unpersist()
 
     def _apply_persisted(mb: DataFrame, epoch_id: int, prior: list[str]) -> None:
-        bounds = {
-            r["batch_id"]: (r["lo"], r["hi"])
-            for r in mb.groupBy("batch_id")
-            .agg(F.min("offset").alias("lo"), F.max("offset").alias("hi"))
+        # ONE bounds job per trigger: every batch's offset range plus the
+        # WAL-contract NULL audit, refused before anything is staged;
+        # each apply_batch below reuses its range instead of re-scanning
+        keys = engine.table.key_columns
+        rows = (
+            mb.groupBy("batch_id")
+            .agg(
+                F.min("offset").alias("lo"),
+                F.max("offset").alias("hi"),
+                *contract_null_aggs(keys),
+            )
             .collect()
-        }
+        )
+        for r in rows:
+            check_contract_nulls(r, keys, r["batch_id"])
+        bounds = {r["batch_id"]: (r["lo"], r["hi"]) for r in rows}
         ids = sorted(bounds)
         if not ids:
             return
@@ -180,7 +196,10 @@ def stream_replay(
             f"{carry_root}/v={epoch_id}"
         )
         for b in ids[:-1]:
-            engine.apply_batch(mb.filter(F.col("batch_id") == b), int(b), schema_ops)
+            engine.apply_batch(
+                mb.filter(F.col("batch_id") == b), int(b), schema_ops,
+                bounds=bounds[b],
+            )
         # deferred cleanup: the newest prior carry outlives this epoch
         # (see the carry comment above) — everything older is a subset
         # of it and can go now

@@ -3,7 +3,7 @@
 The sandbox ships no Iceberg runtime jar, so the engine implements the
 subset of lake-table semantics the CDC design needs, on plain parquet,
 with the same *shape* as Iceberg's spec (snapshots + manifests + atomic
-pointer swap + snapshot properties + schema evolution by column id):
+snapshot claim + snapshot properties + schema evolution by column id):
 
 - **Snapshots**: immutable JSON manifests listing, per key-bucket, the
   parquet directories that make up the bucket, each tagged with the
@@ -16,8 +16,9 @@ pointer swap + snapshot properties + schema evolution by column id):
   rebucket replaced their layout; bucket rewrites rebase while their
   buckets, schema and bucket count match their basis; overwrites
   rebase unless a DDL or rebucket landed; DDL and property updates
-  re-run; ``rebucket`` and ``rollback`` never rebase. The ``_current``
-  pointer is a monotonic cache readers treat as a floor.
+  re-run; ``rebucket`` and ``rollback`` never rebase. The claimed
+  snapshot files are the only record of the current version: it is
+  the highest one claimed.
 - **Copy-on-write per bucket**: a cow batch rewrites only the buckets
   it touches; untouched buckets are carried over by reference. At
   10^10 events / 100 TB this is what keeps merge cost proportional to
@@ -388,6 +389,22 @@ class Snapshot:
         return self.schemas[self.current_schema_version]
 
 
+def _claimed_versions(snap_dir: str) -> list[int]:
+    """The versions claimed in a ``_snapshots`` directory, ascending;
+    the last is the current version. A ``snapshot-{v}.json`` exists only
+    once its commit claim succeeded (temp files carry a suffix), so this
+    listing IS the version record. A directory with no claim holds no
+    table: ``FileNotFoundError``."""
+    versions = sorted(
+        int(n[len("snapshot-"):-len(".json")])
+        for n in os.listdir(snap_dir)
+        if n.startswith("snapshot-") and n.endswith(".json")
+    )
+    if not versions:
+        raise FileNotFoundError(f"no claimed snapshot in {snap_dir!r}")
+    return versions
+
+
 def _write_content_addressed(manifest_dir: str, prefix: str, payload) -> str:
     """One content-addressed-file write protocol for shards (``m-``,
     one bucket's entry list) and manifest-list groups (``g-``, one
@@ -680,12 +697,12 @@ class ShardedFileMap(Mapping):
         return self._refs.get(b)
 
     def stat(self, b: int, field: str):
-        """Summary stat (n/d/by/dby/r) for an UNTOUCHED bucket from its
-        group file, or None for a bucket touched in memory (it has no
-        summary until serialized) — the caller then computes it from
-        that bucket's entries."""
+        """Summary stat (n/d/by/dby/r) of a bucket: from its group file,
+        or, for a bucket touched in memory and not yet serialized, by
+        ``_shard_meta`` over its entries — the formula serialization
+        records."""
         if b in self._over:
-            return None
+            return _shard_meta(self._over[b])[field]
         self._ensure_bucket(b)
         return self._meta[b][field]
 
@@ -725,7 +742,7 @@ def bucket_expr(key_columns: list[str], num_buckets: int):
 # (8 cores, ~25 MB buckets: compaction 6.4 s -> 4.2 s) — the largest
 # bucket otherwise strands every other core behind it (wave
 # quantization, the measured compaction-scaling limiter).
-FANOUT_TARGET_BYTES = int(os.environ.get("ETL_SPARK_FANOUT_TARGET_BYTES", 16 * 1024 * 1024))
+FANOUT_TARGET_BYTES = 16 * 1024 * 1024
 
 
 def compact_fanout(max_bucket_bytes: int) -> int:
@@ -736,8 +753,6 @@ def compact_fanout(max_bucket_bytes: int) -> int:
     every other core behind it, and under hot-key skew the mean stays
     small while one bucket balloons. At production scale buckets are
     sized to the target anyway and this is 1 — layout unchanged."""
-    if os.environ.get("ETL_SPARK_WRITE_FANOUT"):
-        return max(1, int(os.environ["ETL_SPARK_WRITE_FANOUT"]))
     return max(1, int(-(-max_bucket_bytes // FANOUT_TARGET_BYTES)))
 
 
@@ -753,8 +768,8 @@ class ManifestTable:
         self._data_dir = os.path.join(root, "data")
         # parsed-snapshot cache, keyed by version. Snapshot FILES are
         # immutable once claimed (exclusive-create is the commit point),
-        # so a cached parse can never go stale; version RESOLUTION
-        # (pointer + directory scan) still happens on every
+        # so a cached parse can never go stale; version RESOLUTION (a
+        # listing of the claimed versions) still happens on every
         # current_snapshot() call, so concurrent writers are seen. The
         # point is metadata-read amortization: a cached ShardedFileMap
         # keeps its hydrated group/shard state, and a just-committed
@@ -866,14 +881,7 @@ class ManifestTable:
         layout (``key_columns``, ``engine_mode``) before constructing a
         handle with the right keys."""
         snap_dir = os.path.join(root, "_snapshots")
-        with open(os.path.join(snap_dir, "_current")) as f:
-            name = f.read().strip()
-        versions = sorted(
-            int(n[len("snapshot-"):-len(".json")])
-            for n in os.listdir(snap_dir)
-            if n.startswith("snapshot-") and n.endswith(".json")
-        )
-        latest = max(versions, default=int(name[len("snapshot-"):-len(".json")]))
+        latest = _claimed_versions(snap_dir)[-1]
         with open(os.path.join(snap_dir, f"snapshot-{latest:08d}.json")) as f:
             # raw parse: properties live in the snapshot document itself,
             # so peeking never loads manifest shards (O(1) at any table size)
@@ -881,7 +889,12 @@ class ManifestTable:
 
     @staticmethod
     def exists(root: str) -> bool:
-        return os.path.exists(os.path.join(root, "_snapshots", "_current"))
+        """True once the table's first snapshot has been claimed."""
+        try:
+            _claimed_versions(os.path.join(root, "_snapshots"))
+        except FileNotFoundError:
+            return False
+        return True
 
     @staticmethod
     def _check_format(snap: Snapshot) -> Snapshot:
@@ -895,31 +908,20 @@ class ManifestTable:
         return snap
 
     def _snapshot_versions(self) -> list[int]:
-        return sorted(
-            int(n[len("snapshot-"):-len(".json")])
-            for n in os.listdir(self._snap_dir)
-            if n.startswith("snapshot-") and n.endswith(".json")
-        )
+        return _claimed_versions(self._snap_dir)
 
     def current_snapshot(self) -> Snapshot:
-        """The latest committed snapshot. The COMMIT POINT is the
-        exclusive creation of ``snapshot-{v}.json`` (see ``_commit``);
-        the ``_current`` pointer is a convenience cache that may lag a
-        just-claimed commit (concurrent writer mid-commit, or a crash
-        between claim and pointer write), so the pointer is taken as a
-        floor and the directory is checked for newer claims."""
-        with open(os.path.join(self._snap_dir, "_current")) as f:
-            name = f.read().strip()
-        ptr_version = int(name[len("snapshot-"):-len(".json")])
-        latest = max(self._snapshot_versions(), default=ptr_version)
-        if latest > ptr_version:
-            name = f"snapshot-{latest:08d}.json"
-        version = max(latest, ptr_version)
+        """The latest committed snapshot: the highest claimed version.
+        The COMMIT POINT is the exclusive creation of
+        ``snapshot-{v}.json`` (see ``_commit``), so the listing sees
+        every commit the moment it lands; no claim raises
+        ``FileNotFoundError``."""
+        version = self._snapshot_versions()[-1]
         cached = self._snap_cache.get(version)
         if cached is not None:
             snap = cached
         else:
-            with open(os.path.join(self._snap_dir, name)) as f:
+            with open(os.path.join(self._snap_dir, f"snapshot-{version:08d}.json")) as f:
                 snap = self._cache_snapshot(self._check_format(
                     Snapshot.from_json(f.read(), self._manifest_dir)
                 ))
@@ -940,9 +942,9 @@ class ManifestTable:
         CLAIM its version with ``os.link`` (fails atomically if another
         writer claimed it first — raising ``CommitConflictError`` for
         the caller to rebase and retry). A successful claim IS the
-        commit: the pointer update after it is best-effort and
-        monotonic, and readers treat the pointer as a floor, so a crash
-        between claim and pointer write loses nothing."""
+        commit, and the claimed file is its only record: readers take
+        the highest claimed version, so nothing else is written after
+        it."""
         name = f"snapshot-{snap.version:08d}.json"
         path = os.path.join(self._snap_dir, name)
         tmp = path + f".tmp-{uuid.uuid4().hex}"
@@ -964,28 +966,6 @@ class ManifestTable:
         # — cache it so the next metadata walk inherits the parent's
         # hydration instead of re-parsing every group file
         self._cache_snapshot(snap)
-        # pointer cache: never move it backwards (a slower concurrent
-        # committer of an OLDER version must not shadow a newer one).
-        # The read-check-write is serialized under an flock so two
-        # racing committers cannot interleave check and write — the
-        # monotonicity the docstring promises is real, not best-effort
-        # (POSIX flock; a catalog deployment replaces this whole method)
-        import fcntl
-
-        ptr_path = os.path.join(self._snap_dir, "_current")
-        with open(os.path.join(self._snap_dir, "_current.lock"), "a") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                with open(ptr_path) as f:
-                    cur = f.read().strip()
-                if cur >= name:  # zero-padded names order by version
-                    return
-            except FileNotFoundError:
-                pass
-            ptr_tmp = os.path.join(self._snap_dir, f"_current.tmp-{uuid.uuid4().hex}")
-            with open(ptr_tmp, "w") as f:
-                f.write(name)
-            os.replace(ptr_tmp, ptr_path)
 
     @staticmethod
     def _child(parent: Snapshot, properties_update: dict | None = None, **fields) -> Snapshot:
@@ -1128,7 +1108,6 @@ class ManifestTable:
             raise ValueError(
                 f"unsupported where ops {bad_ops}; supported: = < <= > >= in"
             )
-        groups: dict[int, list[str]] = {}
         bucket_set = set(buckets) if buckets is not None else None
         kb = self._key_bucket_from_where(snap, preds) if preds else None
         if kb is not None:
@@ -1142,22 +1121,36 @@ class ManifestTable:
             if bucket_set is not None
             else list(snap.files)
         )
-        for b in sel_buckets:
-            for e in snap.files[b]:
-                if preds and self._entry_prunable(e, preds, snap):
-                    continue
-                groups.setdefault(e["sv"], []).append(e["path"])
-        if not groups:
+        out = self._scan(snap, (
+            e for b in sel_buckets for e in snap.files[b]
+            if not (preds and self._entry_prunable(e, preds, snap))
+        ))
+        if preds:
+            out = out.filter(self._where_to_column(preds))
+        return out
+
+    def _scan(self, snap: Snapshot, entries) -> DataFrame:
+        """One frame over ``entries``, projected to ``snap``'s current
+        schema: the entries are grouped by the schema version they were
+        written under, each group is read with that schema and mapped by
+        column id, and the groups are unioned. No entries give an empty
+        frame of the current schema."""
+        target = snap.schema
+        paths: dict[int, list[str]] = {}
+        for e in entries:
+            paths.setdefault(e["sv"], []).append(e["path"])
+        if not paths:
             return self.spark.createDataFrame([], target.ddl())
-        parts = []
-        for sv, paths in sorted(groups.items()):
-            df = self.spark.read.schema(snap.schemas[sv].ddl()).parquet(*paths)
-            parts.append(self._map_to_schema(df, snap.schemas[sv], target))
+        parts = [
+            self._map_to_schema(
+                self.spark.read.schema(snap.schemas[sv].ddl()).parquet(*ps),
+                snap.schemas[sv], target,
+            )
+            for sv, ps in sorted(paths.items())
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if preds:
-            out = out.filter(self._where_to_column(preds))
         return out
 
     # ---------- write ----------
@@ -1401,7 +1394,7 @@ class ManifestTable:
         ``delta_counts`` drives compaction scheduling."""
         snap = self.current_snapshot()
         written = self.write_delta_files(df, snap, files_per_bucket=files_per_bucket)
-        return self.commit_appended(written, snap.current_schema_version, properties_update)
+        return self.commit_appended(written, properties_update)
 
     def write_delta_files(
         self, df: DataFrame, snap: Snapshot, files_per_bucket: int = 1,
@@ -1421,8 +1414,7 @@ class ManifestTable:
         return self._entries(written, snap.current_schema_version, "delta", snap)
 
     def commit_appended(
-        self, written: dict[int, dict], schema_version: int,
-        properties_update: dict | None = None,
+        self, written: dict[int, dict], properties_update: dict | None = None,
     ) -> Snapshot:
         """The COMMIT half of ``append_buckets``: atomically publish
         already-written delta files under the CURRENT snapshot (which may
@@ -1432,8 +1424,7 @@ class ManifestTable:
 
         ``written`` holds the prepared entries from ``write_delta_files``;
         each records the schema version (``sv``) and bucket count
-        (``nb``) it was written under, so ``schema_version`` is not
-        consulted here.
+        (``nb``) it was written under.
 
         Appends COMMUTE (they touch no existing entries), so a
         ``CommitConflictError`` from a concurrent commit is resolved by
@@ -1468,21 +1459,13 @@ class ManifestTable:
 
     def delta_counts(self, snapshot: Snapshot | None = None) -> dict[int, int]:
         """{bucket: number of file entries} — >1 means unresolved deltas.
-        Answered from the group files' per-bucket summaries when present
-        (zero shard hydration — this runs once per replay batch, and the
-        handle's snapshot cache keeps the group reads at O(touched)).
+        Answered from the group files' per-bucket summaries (zero shard
+        hydration — this runs once per replay batch, and the handle's
+        snapshot cache keeps the group reads at O(touched)).
         Pass ``snapshot`` to pin the walk to a specific version
         (matching bucket_bytes / bucket_delta_base_bytes)."""
         snap = snapshot or self.current_snapshot()
-        return {b: self._bucket_stat(snap, b, "n", lambda es: len(es)) for b in snap.files}
-
-    @staticmethod
-    def _bucket_stat(snap: Snapshot, b: int, field: str, compute):
-        """Per-bucket stat from the group-file summary; a bucket touched
-        in memory since the snapshot was read has none, so its entries
-        are computed over instead."""
-        v = snap.files.stat(b, field)
-        return v if v is not None else compute(snap.files[b])
+        return {b: snap.files.stat(b, "n") for b in snap.files}
 
     def bucket_bytes(
         self,
@@ -1498,26 +1481,24 @@ class ManifestTable:
             sorted(b for b in set(buckets) if b in snap.files)
             if buckets is not None else list(snap.files)
         )
-        sizes: dict[int, int] = {
-            b: self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
-            for b in sel
-        }
+        sizes: dict[int, int] = {b: snap.files.stat(b, "by") for b in sel}
         return sizes if per_bucket else sum(sizes.values())
 
     def bucket_summary(self, snapshot: Snapshot | None = None) -> list[dict]:
         """Per-bucket metadata summary (files / bytes / rows / delta
-        count) from recorded entry stats — lives here because the entry
-        format is owned here; zero data-file reads."""
+        count) from the group files' bucket summaries — zero shard and
+        data-file reads."""
         snap = snapshot or self.current_snapshot()
+        st = snap.files.stat
         return [
             {
                 "bucket": b,
-                "files": len(es),
-                "bytes": sum(e["bytes"] for e in es),
-                "rows": sum(e["rows"] for e in es),
-                "delta_files": sum(1 for e in es if e["kind"] == "delta"),
+                "files": st(b, "n"),
+                "bytes": st(b, "by"),
+                "rows": st(b, "r"),
+                "delta_files": st(b, "d"),
             }
-            for b, es in sorted(snap.files.items())
+            for b in snap.files
         ]
 
     def bucket_delta_base_bytes(
@@ -1536,11 +1517,7 @@ class ManifestTable:
         )
         out: dict[int, tuple[int, int]] = {}
         for b in sel:
-            by = self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
-            dby = self._bucket_stat(
-                snap, b, "dby",
-                lambda es: sum(e["bytes"] for e in es if e["kind"] == "delta"),
-            )
+            by, dby = snap.files.stat(b, "by"), snap.files.stat(b, "dby")
             out[b] = (by - dby, dby)
         return out
 
@@ -1551,15 +1528,11 @@ class ManifestTable:
         group files' bucket summaries — no shard hydration. The
         metadata-cost-honest path for anything that only needs totals:
         inspect history, audit deltas."""
-        files = delta = by = r = 0
-        for b in list(snap.files):
-            files += self._bucket_stat(snap, b, "n", len)
-            delta += self._bucket_stat(
-                snap, b, "d", lambda es: sum(1 for e in es if e["kind"] == "delta")
-            )
-            by += self._bucket_stat(snap, b, "by", lambda es: sum(e["bytes"] for e in es))
-            r += self._bucket_stat(snap, b, "r", lambda es: sum(e["rows"] for e in es))
-        return files, delta, by, r
+        per_bucket = self.bucket_summary(snap)
+        return tuple(
+            sum(p[k] for p in per_bucket)
+            for k in ("files", "delta_files", "bytes", "rows")
+        )
 
     def snapshots_df(self) -> DataFrame:
         """Iceberg inspect-table parity (``table.snapshots``): one row
@@ -1735,21 +1708,8 @@ class ManifestTable:
         state must filter on it; consumers propagating deletes use it as
         the delete marker."""
         to_snap = self.snapshot_at(to_version)
-        target = to_snap.schema
-        groups: dict[int, list[str]] = {}
-        for es in self.added_files(from_version, to_version).values():
-            for e in es:
-                groups.setdefault(e["sv"], []).append(e["path"])
-        if not groups:
-            return self.spark.createDataFrame([], target.ddl())
-        parts = []
-        for sv, paths in sorted(groups.items()):
-            df = self.spark.read.schema(to_snap.schemas[sv].ddl()).parquet(*paths)
-            parts.append(self._map_to_schema(df, to_snap.schemas[sv], target))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        added = self.added_files(from_version, to_version)
+        return self._scan(to_snap, (e for es in added.values() for e in es))
 
     def snapshot_at(self, version: int) -> Snapshot:
         """Load a historical snapshot by version (time travel)."""
@@ -1945,14 +1905,10 @@ class ManifestTable:
         kept. Returns {"expired": [versions], "deleted_dirs": n}."""
         import shutil
 
-        names = sorted(
-            n for n in os.listdir(self._snap_dir)
-            if n.startswith("snapshot-") and n.endswith(".json")
-        )
-        versions = [int(n[len("snapshot-"):-len(".json")]) for n in names]
+        versions = self._snapshot_versions()
         cur_snap = self.current_snapshot()
         cur = cur_snap.version
-        keep = set(sorted(versions)[-keep_last:]) | {cur}
+        keep = set(versions[-keep_last:]) | {cur}
 
         def tagged(snap: Snapshot) -> set[int]:
             return {

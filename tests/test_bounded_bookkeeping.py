@@ -145,8 +145,7 @@ def test_legacy_list_only_properties_still_resume(spark, tmp_path):
     # missing-key default (-1 — commit_appended merges properties, so a
     # key can't be removed; _applied_state reads an absent key as -1,
     # making this byte-equivalent to a genuine legacy table)
-    snap = eng.table.current_snapshot()
-    eng.table.commit_appended({}, snap.current_schema_version, {
+    eng.table.commit_appended({}, {
         "applied_batches": [0, 1],
         "applied_batches_watermark": -1,
     })

@@ -222,12 +222,12 @@ def test_metrics_survive_crash_around_commit(spark, tmp_path, monkeypatch):
     real_commit = ManifestTable.commit_appended
 
     def fail_batch_1(commit_first):
-        def commit(self, written, sv, props=None, **kw):
+        def commit(self, written, props=None, **kw):
             if props and props.get("applied_batches_watermark") == 1:
                 if commit_first:
-                    real_commit(self, written, sv, props, **kw)
+                    real_commit(self, written, props, **kw)
                 raise RuntimeError("driver died")
-            return real_commit(self, written, sv, props, **kw)
+            return real_commit(self, written, props, **kw)
         return commit
 
     monkeypatch.setattr(ManifestTable, "commit_appended", fail_batch_1(False))

@@ -73,7 +73,7 @@ def test_chain_expired_watermark(spark, tmp_path, changelog):
     src.compact(min_files=1)
     # several more commits then expire everything old (incl. version 0)
     for _ in range(3):
-        src.table.commit_appended({}, src.table.current_snapshot().current_schema_version)
+        src.table.commit_appended({})
     src.table.expire_snapshots(keep_last=2)
     assert 0 not in src.table._snapshot_versions()
 
@@ -132,9 +132,7 @@ def test_chain_lost_watermark_is_idempotent(spark, tmp_path, changelog):
     before = _state(dst)
 
     # simulate the crash: rewind the watermark only
-    dst.table.commit_appended(
-        {}, dst.table.current_snapshot().current_schema_version, {WATERMARK_PROP: 0}
-    )
+    dst.table.commit_appended({}, {WATERMARK_PROP: 0})
     r2 = propagate_changes(src, dst)
     assert not r2["skipped"]
     assert r2["events"] == 0  # everything fenced

@@ -1,7 +1,8 @@
 """Optimistic concurrency for snapshot commits: the commit point is the
-exclusive claim of ``snapshot-{v}.json`` (local-FS CAS); appends rebase
-and retry on conflict, rewrites rebase only when their buckets are
-untouched, and readers treat the ``_current`` pointer as a floor."""
+exclusive claim of ``snapshot-{v}.json`` (local-FS CAS), and the claimed
+files are the only record of the current version — readers take the
+highest claimed one. Appends rebase and retry on conflict, and rewrites
+rebase only when their buckets are untouched."""
 
 from __future__ import annotations
 
@@ -69,11 +70,11 @@ def test_commit_claim_is_exclusive(table):
 
 
 def test_pointer_is_a_floor(table):
-    """A commit whose pointer write never happened (crash window) is
-    still visible: readers take max(claimed versions, pointer)."""
+    """A claimed snapshot file with nothing else written is current:
+    readers take the highest claimed version."""
     snap = table.current_snapshot()
     new = _bump(snap, "crashed")
-    # simulate claim-then-crash: write the snapshot file, skip the pointer
+    # simulate claim-then-crash: write the snapshot file and nothing else
     path = os.path.join(table._snap_dir, f"snapshot-{new.version:08d}.json")
     with open(path, "w") as f:
         f.write(new.to_json(table._manifest_dir))
@@ -85,20 +86,49 @@ def test_pointer_is_a_floor(table):
 
 
 def test_pointer_never_moves_backwards(table):
-    """A slow committer of an older version must not shadow a newer
-    pointer (its claim already failed; pointer logic is the backstop)."""
-    v_new = table.current_snapshot().version
-    stale_name = f"snapshot-{0:08d}.json"
-    ptr = os.path.join(table._snap_dir, "_current")
-    with open(ptr) as f:
-        before = f.read().strip()
-    assert before > stale_name
-    # the pointer guard in _commit refuses regression; emulate its check
+    """A slow committer of an already-claimed version cannot move the
+    current version back: its claim fails, and the version stays where
+    the newer commit put it."""
+    cur = table.current_snapshot()
+    stale = table.snapshot_at(cur.version - 1)
+    with pytest.raises(CommitConflictError, match="claimed"):
+        table._commit(_bump(stale, "slow"))
+    assert table.current_snapshot().version == cur.version
+    assert "who" not in table.current_snapshot().properties
     table.append_buckets(_rows(table.spark, 600, 5))
-    with open(ptr) as f:
-        after = f.read().strip()
-    assert after >= before
-    assert table.current_snapshot().version == v_new + 1
+    assert table.current_snapshot().version == cur.version + 1
+
+
+def test_table_with_leftover_pointer_files_attaches(spark, tmp_path):
+    """Tables written by builds that kept a ``_current`` pointer file
+    (and its ``_current.lock``) beside the snapshots attach and keep
+    working: the pointer is ignored, even when it names a stale
+    version."""
+    from etl_spark.cdc import ReplayEngine, generate_changelog
+    from tests.oracle import apply_log_oracle
+
+    cols = ["repo", "path", "commit", "content_sha256"]
+    log = generate_changelog(spark, 600, seed=5, n_repos=3, paths_per_repo=10, num_batches=3)
+    root = str(tmp_path / "legacy")
+    eng = ReplayEngine(spark, root, num_buckets=4, mode="mor")
+    eng.replay(log, batches=[0, 1])
+    version = eng.table.current_snapshot().version
+    before = {tuple(r) for r in eng.read_state().select(*cols).collect()}
+    snap_dir = os.path.join(root, "_snapshots")
+    with open(os.path.join(snap_dir, "_current"), "w") as f:
+        f.write(f"snapshot-{0:08d}.json")
+    open(os.path.join(snap_dir, "_current.lock"), "w").close()
+
+    eng2 = ReplayEngine.attach(spark, root)
+    assert eng2.table.current_snapshot().version == version
+    assert {tuple(r) for r in eng2.read_state().select(*cols).collect()} == before
+    eng2.apply_batch(log, 2)
+    assert eng2.compact(min_files=1)
+    assert eng2.table.expire_snapshots(keep_last=2)["expired"]
+    want = apply_log_oracle(log.toPandas())
+    assert {tuple(r) for r in eng2.read_state().select(*cols).collect()} == {
+        tuple(r) for r in want[cols].itertuples(index=False)
+    }
 
 
 def test_concurrent_appends_both_survive(spark, table, monkeypatch):
@@ -122,7 +152,7 @@ def test_concurrent_appends_both_survive(spark, table, monkeypatch):
         return stale if calls["n"] == 1 else real(self)
 
     monkeypatch.setattr(ManifestTable, "current_snapshot", once_stale)
-    table.commit_appended(written, stale.current_schema_version)
+    table.commit_appended(written)
     monkeypatch.setattr(ManifestTable, "current_snapshot", real)
 
     assert calls["n"] >= 2  # the retry actually happened

@@ -75,7 +75,7 @@ def test_delta_commit_metadata_is_o_touched(spark, tmp_path, monkeypatch):
     written = t.write_delta_files(
         spark.createDataFrame([("k1", 999)], "k string, v long"), snap
     )
-    t.commit_appended(written, snap.current_schema_version)
+    t.commit_appended(written)
     new_meta = {p: b for p, b in _meta_files(root).items() if p not in base_meta}
 
     # exactly one new shard (the touched bucket) + one new group file
@@ -138,7 +138,7 @@ def test_delta_commit_metadata_is_o_touched(spark, tmp_path, monkeypatch):
     w2 = t.write_delta_files(
         spark.createDataFrame([("k1", 1000)], "k string, v long"), snap2
     )
-    t.commit_appended(w2, snap2.current_schema_version)
+    t.commit_appended(w2)
     meta3 = {p: b for p, b in _meta_files(root).items()
              if p not in base_meta and p not in new_meta}
     doc3 = [p for p in meta3 if "/manifests/" not in p]
@@ -287,26 +287,33 @@ def test_point_read_hydrates_one_group_and_one_shard(spark, tmp_path, monkeypatc
 
 def test_sizing_reads_group_summaries_not_shards(spark, tmp_path, monkeypatch):
     """delta_counts / bucket_bytes / bucket_delta_base_bytes — the
-    per-replay-batch eligibility checks — answer from the group files'
-    per-bucket summaries with zero shard hydration."""
+    per-replay-batch eligibility checks — and bucket_summary /
+    summary_totals (describe, inspect history) answer from the group
+    files' per-bucket summaries with zero shard hydration."""
     root = str(tmp_path / "tbl")
     t = _mk(spark, root)
     snap0 = t.current_snapshot()
     written = t.write_delta_files(
         spark.createDataFrame([("k1", 7)], "k string, v long"), snap0
     )
-    t.commit_appended(written, snap0.current_schema_version)
+    t.commit_appended(written)
 
     calls = _count_hydrations(monkeypatch)
     t2 = ManifestTable(spark, root, ["k"])
     dc = t2.delta_counts()
     bb = t2.bucket_bytes(per_bucket=True)
     db = t2.bucket_delta_base_bytes()
+    summary = t2.bucket_summary()
+    totals = t2.summary_totals(t2.current_snapshot())
     assert calls["n"] == 0
     assert sum(dc.values()) == 33  # 32 base + 1 delta entry
     assert len(bb) == 32 and all(v > 0 for v in bb.values())
     touched = [b for b, (base, delta) in db.items() if delta > 0]
     assert len(touched) == 1
+    assert {p["bucket"]: p["files"] for p in summary} == dc
+    assert {p["bucket"]: p["bytes"] for p in summary} == bb
+    assert [p["bucket"] for p in summary if p["delta_files"]] == touched
+    assert totals == (33, 1, sum(bb.values()), 3001)
 
 
 def test_append_commit_hydrates_only_touched(spark, tmp_path, monkeypatch):
@@ -319,7 +326,7 @@ def test_append_commit_hydrates_only_touched(spark, tmp_path, monkeypatch):
     )
     calls = _count_hydrations(monkeypatch)
     t2 = ManifestTable(spark, root, ["k"])
-    t2.commit_appended(written, snap0.current_schema_version)
+    t2.commit_appended(written)
     # only the touched bucket's entries were read to build its new list,
     # and only its group's ref table was read to rebuild the group
     assert calls["n"] <= 2
@@ -339,7 +346,7 @@ def test_added_files_diff_is_o_changed(spark, tmp_path, monkeypatch):
     written = t.write_delta_files(
         spark.createDataFrame([("k1", 999)], "k string, v long"), snap
     )
-    t.commit_appended(written, snap.current_schema_version)
+    t.commit_appended(written)
     v1 = t.current_snapshot().version
 
     calls = _count_hydrations(monkeypatch)
@@ -373,7 +380,7 @@ def test_snapshot_cache_amortizes_per_batch_walks(spark, tmp_path, monkeypatch):
         written = t.write_delta_files(
             spark.createDataFrame([("k1", 100 + i)], "k string, v long"), snap
         )
-        t.commit_appended(written, snap.current_schema_version)
+        t.commit_appended(written)
         t.delta_counts()
         t.bucket_bytes(per_bucket=True)
         t.bucket_delta_base_bytes()
@@ -395,7 +402,7 @@ def test_expire_purges_cached_snapshots(spark, tmp_path):
         written = t.write_delta_files(
             spark.createDataFrame([("k1", i)], "k string, v long"), snap
         )
-        t.commit_appended(written, snap.current_schema_version)
+        t.commit_appended(written)
     versions = sorted(
         int(n[len("snapshot-"):-len(".json")])
         for n in os.listdir(os.path.join(root, "_snapshots"))
@@ -473,7 +480,7 @@ def test_cache_never_shadows_a_concurrent_commit(spark, tmp_path):
     written = b.write_delta_files(
         spark.createDataFrame([("k1", 777)], "k string, v long"), snap
     )
-    b.commit_appended(written, snap.current_schema_version)
+    b.commit_appended(written)
     # A sees B's commit immediately despite A's warm cache
     assert a.current_snapshot().version == b.current_snapshot().version
     assert a.read().where("k = 'k1' and v = 777").count() == 1
@@ -493,7 +500,7 @@ def test_cross_handle_expire_invalidates_other_handles_cache(spark, tmp_path):
         written = a.write_delta_files(
             spark.createDataFrame([("k1", i)], "k string, v long"), snap
         )
-        a.commit_appended(written, snap.current_schema_version)
+        a.commit_appended(written)
     versions = sorted(
         int(n[len("snapshot-"):-len(".json")])
         for n in os.listdir(os.path.join(root, "_snapshots"))
@@ -525,7 +532,7 @@ def test_older_cached_snapshots_shed_hydrated_entries(spark, tmp_path):
     written = t.write_delta_files(
         spark.createDataFrame([("k1", 7)], "k string, v long"), snap
     )
-    t.commit_appended(written, snap.current_schema_version)
+    t.commit_appended(written)
     # committing cached a newer snapshot -> the old one shed its entries
     assert len(old.files._cache) == 0
     # ...but stays fully usable (re-hydrates) and its refs survived
@@ -545,7 +552,7 @@ def test_expire_walk_dedupes_shared_metadata(spark, tmp_path, monkeypatch):
         written = t.write_delta_files(
             spark.createDataFrame([("k1", i)], "k string, v long"), snap
         )
-        t.commit_appended(written, snap.current_schema_version)
+        t.commit_appended(written)
 
     calls = _count_hydrations(monkeypatch)
     t2 = ManifestTable(spark, root, ["k"])  # cold handle: worst case

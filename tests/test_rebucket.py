@@ -126,7 +126,7 @@ def test_append_across_rebucket_refused(spark, tmp_path, changelog):
     )
     eng.rebucket(8)
     with pytest.raises(CommitConflictError, match="bucket layout|rebucket"):
-        eng.table.commit_appended(written, old_snap.current_schema_version)
+        eng.table.commit_appended(written)
 
 
 def test_time_travel_to_expired_version_is_valueerror(spark, tmp_path, changelog):

@@ -9,7 +9,12 @@ import pytest
 from etl_spark.cdc.changelog import generate_changelog
 from etl_spark.cdc.replay import ReplayEngine
 from etl_spark.schema import SCHEMA_EVOLUTION_SCHEMA
-from etl_spark.table.manifest import ColumnDef, ManifestTable, TableSchema
+from etl_spark.table.manifest import (
+    ColumnDef,
+    ManifestTable,
+    TableSchema,
+    _claimed_versions,
+)
 from tests.oracle import apply_log_oracle
 
 
@@ -204,9 +209,8 @@ def test_bucket_fn_mismatch_refuses_attach(spark, tmp_path):
 
     # simulate a table written by a build using a different hash
     snap_dir = os.path.join(root, "_snapshots")
-    with open(os.path.join(snap_dir, "_current")) as f:
-        name = f.read().strip()
-    p = os.path.join(snap_dir, name)
+    latest = _claimed_versions(snap_dir)[-1]
+    p = os.path.join(snap_dir, f"snapshot-{latest:08d}.json")
     d = json.loads(open(p).read())
     d["bucket_fn"] = "xxhash64_pmod"
     with open(p, "w") as f:

@@ -287,3 +287,21 @@ def test_batch_replay_refuses_reopened_batch(spark, tmp_path, changelog):
     eng.replay(changelog.filter(F.col("offset") <= cut), batches=[0])
     with pytest.raises(ValueError, match="reopened a closed batch"):
         eng.replay(changelog)
+
+
+def test_stream_refuses_null_key_before_commit(spark, tmp_path, changelog):
+    """The streaming bounds job carries the WAL-contract NULL audit: a
+    WAL file with a NULL key refuses the trigger loudly, and nothing
+    commits past the table's creation."""
+    wal = tmp_path / "wal_null"
+    changelog.withColumn(
+        "path",
+        F.when(F.col("offset") == F.lit(changelog.agg(F.min("offset")).first()[0]),
+               F.lit(None)).otherwise(F.col("path")),
+    ).coalesce(1).write.mode("append").parquet(str(wal))
+    root = str(tmp_path / "t_null")
+    with pytest.raises(Exception, match="violates the WAL contract"):
+        stream_replay(spark, str(wal), root, str(tmp_path / "ck_null"), num_buckets=4)
+    eng = ReplayEngine.attach(spark, root)
+    assert eng.table.current_snapshot().version == 0
+    assert eng.applied_batches() == []

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_spark.table import manifest as M
 from etl_spark.table.manifest import (
     FANOUT_TARGET_BYTES,
     ColumnDef,
@@ -62,7 +63,7 @@ def test_fanout_write_nests_in_buckets(spark, tmp_path):
         len(glob.glob(os.path.join(e["path"], "part-*"))) for e in written.values()
     ) > 4
 
-    t2.commit_appended(written, snap.current_schema_version)
+    t2.commit_appended(written)
     assert {(r["repo"], r["path"], r["v"]) for r in t2.read().collect()} == base
 
 
@@ -71,11 +72,10 @@ def test_replay_final_state_invariant_under_fanout(spark, tmp_path, monkeypatch)
 
     log = generate_changelog(spark, 2000, seed=11, n_repos=8, paths_per_repo=20, num_batches=3)
 
-    def run(fanout: str | None):
-        if fanout is None:
-            monkeypatch.delenv("ETL_SPARK_WRITE_FANOUT", raising=False)
-        else:
-            monkeypatch.setenv("ETL_SPARK_WRITE_FANOUT", fanout)
+    def run(fanout: int):
+        # compaction imports compact_fanout at call time, so patching
+        # the module attribute forces k files per bucket
+        monkeypatch.setattr(M, "compact_fanout", lambda max_bucket_bytes: fanout)
         root = os.path.join(str(tmp_path), f"tb{fanout}")
         eng = ReplayEngine(spark, root, num_buckets=4, mode="mor")
         eng.replay(log)
@@ -87,11 +87,10 @@ def test_replay_final_state_invariant_under_fanout(spark, tmp_path, monkeypatch)
             .collect()
         }
 
-    assert run("1") == run("4")
+    assert run(1) == run(4)
 
 
-def test_compact_fanout_is_size_based(monkeypatch):
-    monkeypatch.delenv("ETL_SPARK_WRITE_FANOUT", raising=False)
+def test_compact_fanout_is_size_based():
     # largest bucket at/below the per-task byte target (production
     # sizing): no fan-out, layout as-is
     assert compact_fanout(FANOUT_TARGET_BYTES) == 1
@@ -101,6 +100,3 @@ def test_compact_fanout_is_size_based(monkeypatch):
     # ones) still fans out even when the mean is tiny
     assert compact_fanout(FANOUT_TARGET_BYTES * 4) == 4
     assert compact_fanout(FANOUT_TARGET_BYTES * 4 + 1) == 5
-    # env override wins
-    monkeypatch.setenv("ETL_SPARK_WRITE_FANOUT", "7")
-    assert compact_fanout(0) == 7
