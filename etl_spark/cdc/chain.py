@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_spark.cdc.replay import ReplayEngine
+from etl_spark.cdc.replay import ReplayEngine, _applied_state
 
 WATERMARK_PROP = "chain_src_version"
 
@@ -119,10 +119,9 @@ def propagate_changes(src: ReplayEngine, dst: ReplayEngine) -> dict:
 
     # next downstream batch id = one past everything applied (watermark
     # prefix + residual window — the stored form is bounded, see replay.py)
-    residual = dst_snap.properties.get("applied_batches", [])
-    wm = int(dst_snap.properties.get("applied_batches_watermark", -1))
+    wm, residual = _applied_state(dst_snap.properties)
     applied = bool(residual) or wm >= 0
-    batch_id = max([wm] + [int(b) for b in residual]) + 1
+    batch_id = max([wm] + residual) + 1
     if last not in src.table._snapshot_versions():
         # the watermark snapshot was expired upstream: incremental diff
         # impossible. A downstream that never applied anything can

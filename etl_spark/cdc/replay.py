@@ -5,9 +5,15 @@ micro-batches (Structured-Streaming-shaped semantics — offsets, fencing,
 checkpoint resume — run as batch so a fixed log always replays to the
 exact same final state).
 
-Every entry point runs ONE ordered loop (``ReplayEngine._run``):
-``replay(pipeline_depth=N)`` at depth N, ``apply_batch`` at depth 1, and
-the streaming tail and table-to-table chain through those two. Per
+Every entry point admits batches the same way and runs ONE ordered
+loop (``ReplayEngine._run``): ``_bounds`` takes every batch's offset
+range and the WAL-contract NULL audit in one job, ``_admit`` refuses
+non-WAL feeds and bad schema-ops feeds, and then the loop runs.
+``replay(pipeline_depth=N)`` runs it at depth N, ``apply_batch`` is
+``replay`` over one batch at depth 1, the streaming trigger calls
+``_bounds``/``_admit``/``_run`` directly (it stages its carry between
+admission and the loop), and the streaming drain and the table-to-table
+chain call ``replay``. Per
 batch: skip if applied -> plan -> submit the write -> drain in order
 (metrics rows, then the atomic commit) -> maintenance at drained
 points. The mode supplies its plan and its write/commit pair (mor:
@@ -136,23 +142,24 @@ def check_contract_nulls(row, key_columns: list[str], batch_id) -> None:
 
 
 def check_wal_shape(
-    bounds: dict, batches, watermark: int, residual: list[int],
-    fence: int | None = None,
+    bounds: dict, batches, watermark: int, residual: list[int], fence: int,
 ) -> None:
     """Refuse the three silent-data-loss feed shapes: batch offset ranges
     that do not ascend with batch ids (the offset fence would drop whole
     batches), application of a never-applied batch below an
     already-applied id (its events are at/below the committed fence),
-    and — when ``fence`` is given — events arriving for an
-    ALREADY-APPLIED batch id above the committed fence (a "reopened"
-    batch: a previous run treated end-of-log as batch close while the
-    producer was still appending; the id-level skip would discard the
-    late tail with no error). Shared by ``ReplayEngine.replay`` and the
-    streaming tail."""
+    and events arriving for an ALREADY-APPLIED batch id above the
+    committed ``fence`` (a "reopened" batch: a previous run treated
+    end-of-log as batch close while the producer was still appending;
+    the id-level skip would discard the late tail with no error).
+    Called only from ``ReplayEngine._admit``, the preflight every entry
+    point shares."""
     max_applied = max([watermark] + [int(x) for x in residual])
     prev_b = prev_hi = None
     for b in sorted(batches):
         lo, hi = bounds.get(b, (None, None))
+        # an EMPTY batch has no events to lose, so it may close a
+        # residual-window gap below an already-applied id
         if lo is None:
             continue
         if prev_hi is not None and int(lo) <= int(prev_hi):
@@ -173,11 +180,7 @@ def check_wal_shape(
                 "batches in ascending id order (an empty batch may close "
                 "the gap)."
             )
-        if (
-            fence is not None
-            and _is_applied(watermark, residual, b)
-            and int(hi) > int(fence)
-        ):
+        if _is_applied(watermark, residual, b) and int(hi) > int(fence):
             raise ValueError(
                 f"batch {b} was already applied and fenced at offset "
                 f"{fence}, but new events up to offset {hi} arrived under "
@@ -254,7 +257,6 @@ class ReplayEngine:
         key_columns: list[str] | None = None,
         tombstone_commit_watermark: str | None = None,
         compact_delta_fraction: float | None = None,
-        compact_sort: bool = True,
         stats_columns: list[str] | None = None,
         expire_every: int | None = None,
         expire_keep_last: int = 5,
@@ -280,9 +282,9 @@ class ReplayEngine:
         ingests, where rewriting every base each ``compact_threshold``
         batches is O(table) write amplification per cycle.
 
-        ``compact_sort``: compaction rewrites sort each output file by
-        the key columns (``sortWithinPartitions`` — a per-task sort, no
-        extra exchange). Sorted files give every parquet row group a
+        Compaction and rebucket rewrites always sort each output file
+        by the key columns (``sortWithinPartitions`` — a per-task sort,
+        no extra exchange). Sorted files give every parquet row group a
         tight key min/max range, so pushed key predicates (point
         lookups, ``read_state(where=...)``) skip row groups inside the
         key's bucket — the Iceberg sort-order analog. The one-time sort
@@ -312,7 +314,6 @@ class ReplayEngine:
         self.compact_threshold = compact_threshold
         self.tombstone_commit_watermark = tombstone_commit_watermark
         self.compact_delta_fraction = compact_delta_fraction
-        self.compact_sort = compact_sort
         if expire_every is not None and expire_every < 1:
             raise ValueError("expire_every must be >= 1 (or None to disable)")
         self.expire_every = expire_every
@@ -774,7 +775,7 @@ class ReplayEngine:
         self.table.rebucket(
             new_num_buckets,
             files_per_bucket=compact_fanout(projected_max),
-            sort_columns=self.table.key_columns if self.compact_sort else None,
+            sort_columns=self.table.key_columns,
         )
 
     def describe(self) -> dict:
@@ -786,6 +787,7 @@ class ReplayEngine:
         rows (old versions + tombstones included under mor); the live
         row count is a query (``read_state().count()``) by nature."""
         snap = self.table.current_snapshot()
+        wm, residual = _applied_state(snap.properties)
         per_bucket = self.table.bucket_summary(snap)
         tot_bytes = sum(p["bytes"] for p in per_bucket)
         max_bytes = max((p["bytes"] for p in per_bucket), default=0)
@@ -809,11 +811,7 @@ class ReplayEngine:
                 max_bytes * snap.num_buckets / tot_bytes if tot_bytes else 0.0
             ),
             "fence_offset": int(snap.properties.get("fence_offset", -1)),
-            "applied_batches": (
-                int(snap.properties.get("applied_batches_watermark", -1))
-                + 1
-                + len(snap.properties.get("applied_batches", []))
-            ),
+            "applied_batches": wm + 1 + len(residual),
             "wap_staged": snap.properties.get(WAP_STAGED_PROP) == "true",
             "published_version": (
                 int(snap.properties[WAP_BASE_PROP])
@@ -956,7 +954,7 @@ class ReplayEngine:
         with _shuffle_partitions(self.spark, num_buckets * k):
             self.table.rewrite_buckets(
                 buckets, resolved, files_per_bucket=k,
-                sort_columns=self.table.key_columns if self.compact_sort else None,
+                sort_columns=self.table.key_columns,
                 basis=snap0,
             )
         return buckets
@@ -1020,49 +1018,10 @@ class ReplayEngine:
             from etl_spark.cdc.classify import classify_events
 
             changelog = classify_events(changelog, **classify)
-        # ONE pass over the log plans every batch's offset range up front
-        # (vs a min/max job per batch — fixed driver overhead matters for
-        # sustained throughput); the WAL-contract NULL audit rides the
-        # same aggregation for free
-        keys = self.table.key_columns
-        bound_rows = (
-            changelog.groupBy("batch_id")
-            .agg(
-                F.min("offset").alias("lo"),
-                F.max("offset").alias("hi"),
-                *contract_null_aggs(keys),
-            )
-            .collect()
-        )
-        for r in bound_rows:
-            check_contract_nulls(r, keys, r["batch_id"])
-        bounds = {r["batch_id"]: (r["lo"], r["hi"]) for r in bound_rows}
+        bounds = self._bounds(changelog)
         if batches is None:
             batches = sorted(bounds)
-        # refuse the two silent-data-loss shapes up front (see
-        # docstring): non-WAL feeds and out-of-order application. The
-        # snapshot parse is cached-handle metadata, not a Spark job.
-        # ONE snapshot read serves both the WAL check and the ops dry
-        # run: schema and fence/applied must describe the same version
-        # (a concurrent commit between two reads would make the dry run
-        # see an op's effect in the schema while treating it as pending
-        # — a false "already exists" refusal)
-        snap0 = self.table.current_snapshot()
-        props0 = snap0.properties
-        wm0, res0 = _applied_state(props0)
-        check_wal_shape(
-            bounds, batches, wm0, res0,
-            fence=int(props0.get("fence_offset", -1)),
-        )
-        ops_rows = None
-        if schema_ops is not None:
-            # ops frames are tiny (DDL events) — validate the whole feed
-            # driver-side before any op can commit a schema version,
-            # then dry-run the pending ops against the current schema so
-            # the state-dependent refusals (no-such-column, collision,
-            # non-widenable type) are up-front too, never half-applied
-            ops_rows = schema_ops.collect()
-            self._check_ops_feed(ops_rows, snap0)
+        ops_rows = self._admit(bounds, batches, schema_ops)
         return self._run(
             changelog, bounds, sorted(batches), ops_rows, delete_guard,
             pipeline_depth, extra_properties,
@@ -1073,43 +1032,67 @@ class ReplayEngine:
         changelog: DataFrame,
         batch_id: int,
         schema_ops: DataFrame | None = None,
-        bounds: tuple[int, int] | None = None,
-        delete_guard: DataFrame | None = None,
-        extra_properties: dict | None = None,
     ) -> dict:
-        """Apply one batch (a no-op if already applied): the replay loop
-        at depth 1 over ``[batch_id]``. ``bounds`` is the batch's
-        ``(lo, hi)`` offset range when the caller already knows it;
-        otherwise one job computes it, with the WAL-contract NULL
-        audit riding along."""
-        snap = self.table.current_snapshot()
-        applied_wm, applied = _applied_state(snap.properties)
-        if _is_applied(applied_wm, applied, batch_id):
+        """Apply one batch (a no-op if already applied): ``replay`` at
+        depth 1 over ``[batch_id]``. The skip check reads only the
+        snapshot, so a re-delivered batch runs no Spark job."""
+        wm, residual = _applied_state(self.table.current_snapshot().properties)
+        if _is_applied(wm, residual, batch_id):
             return {"batch_id": batch_id, "skipped": True}
-        if bounds is None:
-            keys = self.table.key_columns
-            row = changelog.filter(F.col("batch_id") == batch_id).select(
+        return self.replay(
+            changelog.filter(F.col("batch_id") == batch_id), schema_ops,
+            batches=[batch_id], pipeline_depth=1,
+        )[0]
+
+    def _bounds(self, changelog: DataFrame) -> dict:
+        """``{batch_id: (lo, hi)}`` offset ranges of every batch in
+        ``changelog``, from ONE pass over it (vs a min/max job per batch
+        — fixed driver overhead matters for sustained throughput). The
+        WAL-contract NULL audit rides the same aggregation, so a NULL
+        contract column refuses before anything is planned or staged."""
+        keys = self.table.key_columns
+        rows = (
+            changelog.groupBy("batch_id")
+            .agg(
                 F.min("offset").alias("lo"),
                 F.max("offset").alias("hi"),
                 *contract_null_aggs(keys),
-            ).first()
-            check_contract_nulls(row, keys, batch_id)
-            bounds = (row["lo"], row["hi"])
-        # WAL contract (see replay's docstring): a NON-EMPTY batch below
-        # an already-applied id is refused; an EMPTY one closes a
-        # residual-window gap (marks the id applied) with no events to lose
-        check_wal_shape({batch_id: bounds}, [batch_id], applied_wm, applied)
-        ops_rows = None
-        if schema_ops is not None:
-            # full-frame collect (tiny: DDL events) so the contract check
-            # also sees rows a `offset <= hi` pushdown would hide (NULL
-            # offsets from malformed PERMISSIVE-mode lines)
-            ops_rows = schema_ops.collect()
-            self._check_ops_feed(ops_rows, snap)
-        return self._run(
-            changelog, {batch_id: bounds}, [batch_id], ops_rows, delete_guard,
-            1, extra_properties,
-        )[0]
+            )
+            .collect()
+        )
+        for r in rows:
+            check_contract_nulls(r, keys, r["batch_id"])
+        return {r["batch_id"]: (r["lo"], r["hi"]) for r in rows}
+
+    def _admit(self, bounds: dict, batches, schema_ops: DataFrame | None) -> list | None:
+        """The preflight every entry point runs before ``_run``: refuse a
+        non-WAL feed, out-of-order application and a reopened batch
+        (``check_wal_shape``), then collect and validate the schema-ops
+        feed. Returns the collected ops rows (None without a feed).
+
+        ONE snapshot read serves both checks: schema and fence/applied
+        must describe the same version (a concurrent commit between two
+        reads would make the dry run see an op's effect in the schema
+        while treating it as pending — a false "already exists"
+        refusal). The snapshot parse is cached-handle metadata, not a
+        Spark job."""
+        snap = self.table.current_snapshot()
+        wm, residual = _applied_state(snap.properties)
+        check_wal_shape(
+            bounds, batches, wm, residual,
+            int(snap.properties.get("fence_offset", -1)),
+        )
+        if schema_ops is None:
+            return None
+        # ops frames are tiny (DDL events): collect the WHOLE feed, so
+        # the contract check also sees rows an offset pushdown would hide
+        # (NULL offsets from malformed PERMISSIVE-mode lines), and
+        # dry-run the pending ops against the current schema so the
+        # state-dependent refusals (no-such-column, collision,
+        # non-widenable type) are up-front too, never half-applied
+        ops_rows = schema_ops.collect()
+        self._check_ops_feed(ops_rows, snap)
+        return ops_rows
 
     def _run(
         self,

@@ -62,13 +62,6 @@ def _build_parser() -> argparse.ArgumentParser:
             "ingests); unset = file-count eligibility only",
         )
         sp.add_argument(
-            "--no-compact-sort", dest="compact_sort", action="store_false",
-            help="skip the per-file key sort at compaction (sorted files "
-            "give parquet row groups tight key min/max ranges, so point "
-            "lookups skip row groups — disable only if compaction CPU "
-            "is the bottleneck)",
-        )
-        sp.add_argument(
             "--expire-every", type=int,
             help="auto-retention: every N applied batches, expire old "
             "snapshots down to --expire-keep-last (+ manifest-shard GC "
@@ -303,7 +296,6 @@ def main(argv: list[str] | None = None) -> int:
             compact_threshold=args.compact_threshold,
             tombstone_commit_watermark=args.tombstone_watermark,
             compact_delta_fraction=args.compact_delta_fraction,
-            compact_sort=args.compact_sort,
             expire_every=args.expire_every,
             expire_keep_last=args.expire_keep_last,
         )
@@ -322,7 +314,6 @@ def main(argv: list[str] | None = None) -> int:
         compact_threshold=args.compact_threshold,
         tombstone_commit_watermark=args.tombstone_watermark,
         compact_delta_fraction=args.compact_delta_fraction,
-        compact_sort=args.compact_sort,
         expire_every=args.expire_every,
         expire_keep_last=args.expire_keep_last,
     )
@@ -386,7 +377,6 @@ def main(argv: list[str] | None = None) -> int:
             compact_threshold=args.compact_threshold,
             tombstone_commit_watermark=args.tombstone_watermark,
             compact_delta_fraction=args.compact_delta_fraction,
-            compact_sort=args.compact_sort,
             expire_every=args.expire_every,
             expire_keep_last=args.expire_keep_last,
         )

@@ -97,7 +97,6 @@ def run_sd_delta_flagship(
     compact_threshold: int = 8,
     tombstone_commit_watermark: str | None = None,
     compact_delta_fraction: float | None = None,
-    compact_sort: bool = True,
     expire_every: int | None = None,
     expire_keep_last: int = 5,
 ) -> tuple[ReplayEngine, list[dict]]:
@@ -114,7 +113,6 @@ def run_sd_delta_flagship(
         compact_threshold=compact_threshold,
         tombstone_commit_watermark=tombstone_commit_watermark,
         compact_delta_fraction=compact_delta_fraction,
-        compact_sort=compact_sort,
         expire_every=expire_every, expire_keep_last=expire_keep_last,
     )
     results = engine.replay(

@@ -2,8 +2,7 @@
 
 Design notes (100 TB target):
 - AQE on, with skew-join splitting: hot repos produce skewed merge joins;
-  AQE splits oversized partitions at runtime, on top of our explicit
-  salting (see ``etl_spark.cdc.replay``).
+  AQE splits oversized partitions at runtime.
 - ``spark.sql.shuffle.partitions`` defaults sized for local test runs;
   production submit overrides via ``--conf`` (rule of thumb: 2-3x total
   executor cores, and partitions <= ~200 MB post-shuffle).

@@ -3,8 +3,9 @@
 
 This is the live-tail shape of the engine (SURVEY.md §7 design stance:
 batch replay for deterministic verification, Structured Streaming for
-production tailing — both funnel into ``ReplayEngine.apply_batch``, so
-the exactly-once story is ONE mechanism):
+production tailing — both admit batches through ``ReplayEngine``'s one
+bounds job and preflight and apply them in its one replay loop, so the
+exactly-once story is ONE mechanism):
 
 - Source: file stream over the WAL directory (swap for Kafka in
   production — the sink side is source-agnostic).
@@ -25,13 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.cdc.replay import (
-    ReplayEngine,
-    _applied_state,
-    check_contract_nulls,
-    check_wal_shape,
-    contract_null_aggs,
-)
+from etl_spark.cdc.replay import ReplayEngine
 from etl_spark.schema import CHANGE_LOG_SCHEMA
 
 
@@ -69,7 +64,6 @@ def stream_replay(
     compact_threshold: int = 8,
     tombstone_commit_watermark: str | None = None,
     compact_delta_fraction: float | None = None,
-    compact_sort: bool = True,
     expire_every: int | None = None,
     expire_keep_last: int = 5,
 ) -> ReplayEngine:
@@ -81,14 +75,13 @@ def stream_replay(
     ``ReplayEngine``) — the knob MATTERS here: an unbounded stream is
     exactly the one-snapshot-per-micro-batch accumulation case. Safe in
     this loop because ``foreachBatch`` applies logical batches
-    sequentially via ``apply_batch`` (every commit point is
-    pipeline-drained by construction)."""
+    sequentially, through the replay loop at depth 1 (every commit
+    point is pipeline-drained by construction)."""
     engine = ReplayEngine(
         spark, table_root, num_buckets=num_buckets, mode=mode,
         compact_threshold=compact_threshold,
         tombstone_commit_watermark=tombstone_commit_watermark,
         compact_delta_fraction=compact_delta_fraction,
-        compact_sort=compact_sort,
         expire_every=expire_every, expire_keep_last=expire_keep_last,
     )
 
@@ -159,35 +152,16 @@ def stream_replay(
             mb.unpersist()
 
     def _apply_persisted(mb: DataFrame, epoch_id: int, prior: list[str]) -> None:
-        # ONE bounds job per trigger: every batch's offset range plus the
-        # WAL-contract NULL audit, refused before anything is staged;
-        # each apply_batch below reuses its range instead of re-scanning
-        keys = engine.table.key_columns
-        rows = (
-            mb.groupBy("batch_id")
-            .agg(
-                F.min("offset").alias("lo"),
-                F.max("offset").alias("hi"),
-                *contract_null_aggs(keys),
-            )
-            .collect()
-        )
-        for r in rows:
-            check_contract_nulls(r, keys, r["batch_id"])
-        bounds = {r["batch_id"]: (r["lo"], r["hi"]) for r in rows}
+        # the engine's admission, as in replay: ONE bounds job (offset
+        # ranges + the WAL-contract NULL audit), then the preflight
+        # (non-WAL feed, out-of-order redelivery, a REOPENED batch — new
+        # events under an already-applied id — and the ops feed). Both
+        # refuse before the carry is staged.
+        bounds = engine._bounds(mb)
         ids = sorted(bounds)
         if not ids:
             return
-        # same loud refusal as the batch replay loop: a non-WAL feed,
-        # out-of-order redelivery, or a REOPENED batch (new events under
-        # an already-applied id — a previous run drained mid-batch) must
-        # fail, not fence-drop silently
-        props = engine.table.current_snapshot().properties
-        wm, residual = _applied_state(props)
-        check_wal_shape(
-            bounds, ids, wm, residual,
-            fence=int(props.get("fence_offset", -1)),
-        )
+        ops_rows = engine._admit(bounds, ids, schema_ops)
         # stage the (possibly still open) highest batch BEFORE applying:
         # apply order then matches commit order, and a crash anywhere
         # re-runs this epoch idempotently (applied ids skip, the carry
@@ -195,11 +169,7 @@ def stream_replay(
         mb.filter(F.col("batch_id") == ids[-1]).write.mode("overwrite").parquet(
             f"{carry_root}/v={epoch_id}"
         )
-        for b in ids[:-1]:
-            engine.apply_batch(
-                mb.filter(F.col("batch_id") == b), int(b), schema_ops,
-                bounds=bounds[b],
-            )
+        engine._run(mb, bounds, ids[:-1], ops_rows, None, 1, None)
         # deferred cleanup: the newest prior carry outlives this epoch
         # (see the carry comment above) — everything older is a subset
         # of it and can go now
@@ -222,11 +192,6 @@ def stream_replay(
         leftover = spark.read.schema(CHANGE_LOG_SCHEMA).parquet(
             *leftover_dirs
         ).dropDuplicates(["batch_id", "offset"])
-        for b in sorted(
-            r[0] for r in leftover.select("batch_id").distinct().collect()
-        ):
-            engine.apply_batch(
-                leftover.filter(F.col("batch_id") == b), int(b), schema_ops
-            )
+        engine.replay(leftover, schema_ops, pipeline_depth=1)
         fs.delete(jvm_path(carry_root), True)
     return engine

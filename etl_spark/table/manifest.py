@@ -229,7 +229,7 @@ def validate_column_type(
 
     ``add_column`` stores ``type_`` verbatim; every later read then
     projects file groups with ``F.col(...).cast(type_)``, fills pre-DDL
-    rows with ``F.lit(default).cast(type_)`` (``_project_to_schema``),
+    rows with ``F.lit(default).cast(type_)`` (``_map_to_schema``),
     and parses the schema's DDL string for empty frames. An unvalidated
     type therefore WEDGES the table: the snapshot commits, then every
     subsequent read and merge raises (probed: type ``'strnig'`` →

@@ -62,14 +62,13 @@ def test_cli_flags_reach_engine(spark, capsys, cli_dirs, monkeypatch):
     monkeypatch.setattr(replay_mod.ReplayEngine, "__init__", spy)
     rc = main(["replay", "--changelog", wal, "--table", str(root / "t2"),
                "--mode", "mor", "--compact-threshold", "5", "--tombstone-watermark", "c123",
-               "--compact-delta-fraction", "0.3", "--no-compact-sort",
+               "--compact-delta-fraction", "0.3",
                "--expire-every", "2", "--expire-keep-last", "3"])
     assert rc == 0
     capsys.readouterr()
     assert seen["compact_threshold"] == 5
     assert seen["tombstone_commit_watermark"] == "c123"
     assert seen["compact_delta_fraction"] == 0.3
-    assert seen["compact_sort"] is False
     assert seen["expire_every"] == 2
     assert seen["expire_keep_last"] == 3
 

@@ -94,7 +94,7 @@ def test_unparseable_detail_refused(spark, tmp_path, changelog):
 
 def test_direct_apply_batch_validates_too(spark, tmp_path, changelog):
     """apply_batch is public; a dirty feed handed straight to it (or via
-    the streaming tail, which routes through it) is refused the same."""
+    the streaming tail, which shares its preflight) is refused the same."""
     ops = _ops(spark, [
         (100, "add_column", "a", json.dumps({"type": "string"})),
         (100, "drop_column", "lang", None),

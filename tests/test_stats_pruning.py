@@ -212,39 +212,39 @@ def test_read_state_column_projection_prunes_scan(spark, tmp_path):
 
 
 def test_sorted_compaction(spark, tmp_path):
-    """compact_sort writes each compacted file key-ordered (tight
+    """Compaction writes each compacted file key-ordered (tight
     row-group min/max for pushed key predicates) without changing the
-    resolved state."""
+    resolved state, which matches the single-pass oracle."""
     import glob
+
+    from tests.oracle import apply_log_oracle
 
     log = generate_changelog(
         spark, 2000, seed=13, n_repos=5, paths_per_repo=20, num_batches=2
     )
-    states = {}
-    for sort in (True, False):
-        eng = ReplayEngine(
-            spark, str(tmp_path / f"t-{sort}"), num_buckets=4, mode="mor",
-            compact_sort=sort,
-        )
-        eng.replay(log)
-        eng.compact(min_files=1)
-        states[sort] = {
-            (r["repo"], r["path"], r["content_sha256"])
-            for r in eng.read_state().collect()
-        }
-        snap = eng.table.current_snapshot()
-        base_dirs = [
-            e["path"] for es in snap.files.values() for e in es
-            if e["kind"] == "base"
-        ]
-        assert base_dirs
-        if sort:
-            for d in base_dirs:
-                for f in glob.glob(os.path.join(d, "part-*")):
-                    pdf = spark.read.parquet(f).select("repo", "path").toPandas()
-                    keys = list(zip(pdf["repo"], pdf["path"]))
-                    assert keys == sorted(keys), f"unsorted compacted file {f}"
-    assert states[True] == states[False]
+    eng = ReplayEngine(spark, str(tmp_path / "t"), num_buckets=4, mode="mor")
+    eng.replay(log)
+    eng.compact(min_files=1)
+    want = {
+        (r.repo, r.path, r.content_sha256)
+        for r in apply_log_oracle(log.toPandas()).itertuples()
+    }
+    got = {
+        (r["repo"], r["path"], r["content_sha256"])
+        for r in eng.read_state().collect()
+    }
+    assert got == want
+    snap = eng.table.current_snapshot()
+    base_dirs = [
+        e["path"] for es in snap.files.values() for e in es
+        if e["kind"] == "base"
+    ]
+    assert base_dirs
+    for d in base_dirs:
+        for f in glob.glob(os.path.join(d, "part-*")):
+            pdf = spark.read.parquet(f).select("repo", "path").toPandas()
+            keys = list(zip(pdf["repo"], pdf["path"]))
+            assert keys == sorted(keys), f"unsorted compacted file {f}"
 
 
 def test_engine_stats_columns_knob(spark, tmp_path):

@@ -305,3 +305,24 @@ def test_stream_refuses_null_key_before_commit(spark, tmp_path, changelog):
     eng = ReplayEngine.attach(spark, root)
     assert eng.table.current_snapshot().version == 0
     assert eng.applied_batches() == []
+
+
+def test_stream_refuses_bad_ops_feed_before_staging_carry(spark, tmp_path, changelog):
+    """The trigger's preflight validates the schema-ops feed before the
+    open batch is staged: a trigger holding several batch ids with an
+    op whose offset is NULL refuses loudly and leaves no carry behind."""
+    import os
+
+    wal = tmp_path / "wal_bad_ops"
+    changelog.coalesce(1).write.mode("append").parquet(str(wal))
+    ops = spark.createDataFrame(
+        [(None, "add_column", "a", '{"type": "string"}')],
+        "offset long, kind string, column string, detail string",
+    )
+    root, ckpt = str(tmp_path / "t_bad_ops"), tmp_path / "ck_bad_ops"
+    with pytest.raises(Exception, match="NULL in a required field"):
+        stream_replay(spark, str(wal), root, str(ckpt), num_buckets=4, schema_ops=ops)
+    carry = ckpt / "batch_carry"
+    assert not (carry.exists() and any(p.startswith("v=") for p in os.listdir(carry)))
+    eng = ReplayEngine.attach(spark, root)
+    assert eng.table.current_snapshot().version == 0
